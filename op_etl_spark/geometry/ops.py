@@ -1,12 +1,14 @@
-"""Spark-facing geometry operators (Arrow pandas UDFs over the WKB kernel).
+"""Spark-facing geometry operators (Arrow Python kernels over the WKB codec).
 
-Design for scale: geometry bytes never leave the executor; each UDF
+Design for scale: geometry bytes never leave the executor; each kernel
 processes an Arrow batch, and reprojection gathers EVERY coordinate in the
 batch into one flat numpy array, transforms once (vectorized Krüger
 series), and scatters back — the Python-per-row cost is only WKB
-decode/encode, the math is C-speed. Clip runs only after the cheap
-envelope prefilter (functions/bbox.py) has discarded non-straddling rows
-JVM-side.
+decode/encode, the math is C-speed. Each operator is one Python node and
+a row crosses into it once: reprojection is one fused UDF returning
+geometry and envelope together, and clip is one mapInArrow pass that
+decodes only the rows straddling the AOI edge, after the envelope
+prefilter has dropped disjoint rows JVM-side.
 
 Reference parity: T1 Project (etl/process.py:129-156), T2 DefineProjection
 (metadata-only, etl/stage_files.py:627-643 — here just setting the crs
@@ -16,83 +18,67 @@ column), T3 Clip (etl/process.py:107-123).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from op_etl_spark.sources.schema import BBOX_STRUCT
 
 from .clip import clip_geometry_bbox
 from .tm import reproject_xy
 from .wkb import envelope as _envelope
 from .wkb import wkb_dumps, wkb_loads
 
-BBOX_SCHEMA = T.StructType(
-    [
-        T.StructField("xmin", T.DoubleType()),
-        T.StructField("ymin", T.DoubleType()),
-        T.StructField("xmax", T.DoubleType()),
-        T.StructField("ymax", T.DoubleType()),
-    ]
-)
-
-CLIPPED_SCHEMA = T.StructType(
-    [
-        T.StructField("geom_type", T.StringType()),
-        T.StructField("geometry", T.BinaryType()),
-    ]
+# the fused reproject kernel's result: the projected WKB and the four
+# envelope fields, flat so the kernel returns a plain pandas frame
+REPROJECTED_SCHEMA = T.StructType(
+    [T.StructField("geometry", T.BinaryType())] + list(BBOX_STRUCT.fields)
 )
 
 
-@F.pandas_udf(BBOX_SCHEMA)
-def envelope_wkb(geom: pd.Series) -> pd.DataFrame:
-    """WKB -> envelope struct (vectorized per Arrow batch)."""
-    rows = []
-    for buf in geom:
-        if buf is None:
-            rows.append((None, None, None, None))
-            continue
-        gt, coords = wkb_loads(bytes(buf))
-        rows.append(_envelope(gt, coords))
-    return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
+def _flatten(c, acc: list) -> None:
+    if isinstance(c[0], (int, float)):
+        acc.append((float(c[0]), float(c[1])))
+    else:
+        for sub in c:
+            _flatten(sub, acc)
+
+
+def _rebuild(c, pts):
+    if isinstance(c[0], (int, float)):
+        x, y = next(pts)
+        return [float(x), float(y)]
+    return [_rebuild(sub, pts) for sub in c]
 
 
 def make_reproject_udf(dst_epsg: int):
-    """Reproject UDF factory: (wkb, src_epsg) -> wkb in dst_epsg.
+    """Fused reproject UDF factory: (wkb, src_epsg) -> struct(geometry,
+    xmin, ymin, xmax, ymax) in dst_epsg. The envelope comes from the same
+    decode as the projection. A null wkb (a row needing no work) returns
+    nulls and is never decoded.
 
     Batch-vectorized: all coordinates of all geometries sharing a source
-    CRS are transformed in one numpy call.
+    CRS are transformed in one numpy call. Marked nondeterministic only
+    so the optimizer never copies the call into a pushed-down filter or a
+    collapsed projection: each row crosses into Python once.
     """
 
-    @F.pandas_udf(T.BinaryType())
-    def _reproject(geom: pd.Series, src_epsg: pd.Series) -> pd.Series:
+    @F.pandas_udf(REPROJECTED_SCHEMA)
+    def _reproject(geom: pd.Series, src_epsg: pd.Series) -> pd.DataFrame:
         import numpy as np
 
-        decoded = []
-        for buf, src in zip(geom, src_epsg):
-            if buf is None or src is None:
-                decoded.append(None)
-            else:
-                gt, coords = wkb_loads(bytes(buf))
-                decoded.append((gt, coords, int(src)))
-
-        # gather: flat coordinate arrays per source CRS
+        decoded: dict[int, tuple] = {}
         by_src: dict[int, list] = {}
-        for i, d in enumerate(decoded):
-            if d is None:
+        for i, (buf, src) in enumerate(zip(geom, src_epsg)):
+            if buf is None:
                 continue
-            gt, coords, src = d
+            gt, coords = wkb_loads(bytes(buf))
             flat: list = []
+            _flatten(coords, flat)
+            decoded[i] = (gt, coords)
+            by_src.setdefault(int(src), []).append((i, flat))
 
-            def walk(c, acc):
-                if isinstance(c[0], (int, float)):
-                    acc.append((float(c[0]), float(c[1])))
-                else:
-                    for sub in c:
-                        walk(sub, acc)
-
-            walk(coords, flat)
-            by_src.setdefault(src, []).append((i, flat))
-
-        transformed: dict[int, list] = {}
+        out = [(None,) * 5] * len(geom)
         for src, items in by_src.items():
             xs = np.array([p[0] for _, flat in items for p in flat])
             ys = np.array([p[1] for _, flat in items for p in flat])
@@ -100,61 +86,77 @@ def make_reproject_udf(dst_epsg: int):
             off = 0
             for i, flat in items:
                 n = len(flat)
-                transformed[i] = list(zip(tx[off : off + n], ty[off : off + n]))
+                gt, coords = decoded[i]
+                new = _rebuild(coords, zip(tx[off : off + n], ty[off : off + n]))
                 off += n
+                out[i] = (wkb_dumps(gt, new), *_envelope(gt, new))
+        return pd.DataFrame(out, columns=REPROJECTED_SCHEMA.names)
 
-        out = []
-        for i, d in enumerate(decoded):
-            if d is None:
-                out.append(None)
-                continue
-            gt, coords, _src = d
-            pts = iter(transformed[i])
-
-            def rebuild(c):
-                if isinstance(c[0], (int, float)):
-                    x, y = next(pts)
-                    return [float(x), float(y)]
-                return [rebuild(sub) for sub in c]
-
-            out.append(wkb_dumps(gt, rebuild(coords)))
-        return pd.Series(out)
-
-    return _reproject
+    return _reproject.asNondeterministic()
 
 
-def make_clip_udf(bbox: tuple[float, float, float, float]):
-    """Exact clip-to-rectangle UDF factory: (geom_type, wkb) -> clipped
-    struct (nulls when the geometry falls entirely outside)."""
+def _clip_straddling(batch, aoi, geom_col: str):
+    """Exact clip of the rows of an Arrow batch: each row's geom_type,
+    geometry and bbox come from one decode; rows clipped to nothing drop."""
+    import pyarrow as pa
 
-    @F.pandas_udf(CLIPPED_SCHEMA)
-    def _clip(geom_type: pd.Series, geom: pd.Series) -> pd.DataFrame:
-        types, bufs = [], []
-        for gt, buf in zip(geom_type, geom):
-            if buf is None:
-                types.append(None)
-                bufs.append(None)
-                continue
-            _gt, coords = wkb_loads(bytes(buf))
-            new_gt, new_coords = clip_geometry_bbox(_gt, coords, bbox)
-            if new_gt is None:
-                types.append(None)
-                bufs.append(None)
-            else:
-                types.append(new_gt)
-                bufs.append(wkb_dumps(new_gt, new_coords))
-        return pd.DataFrame({"geom_type": types, "geometry": bufs})
+    types, geoms, boxes, keep = [], [], [], []
+    for buf in batch.column(geom_col).to_pylist():
+        gt, coords = clip_geometry_bbox(*wkb_loads(buf), aoi)
+        keep.append(gt is not None)
+        if gt is not None:
+            types.append(gt)
+            geoms.append(wkb_dumps(gt, coords))
+            boxes.append(_envelope(gt, coords))
+    kept = batch.filter(pa.array(keep))
+    new = {"geom_type": types, geom_col: geoms, "bbox": boxes}
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(new[f.name], f.type) if f.name in new else kept.column(f.name)
+            for f in batch.schema
+        ],
+        schema=batch.schema,
+    )
 
-    return _clip
+
+def make_clip_kernel(aoi: tuple[float, float, float, float], geom_col: str = "geometry"):
+    """mapInArrow kernel factory for `clip_to_aoi`: Arrow batches of rows
+    whose envelope meets the AOI in, clipped rows out. Rows whose envelope
+    lies inside the AOI go back as the same Arrow buffers, never decoded
+    or converted to Python objects; only straddling rows reach the exact
+    clip."""
+    xmin, ymin, xmax, ymax = aoi
+
+    def clip_batches(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            bx0, by0, bx1, by1 = (
+                c.to_numpy(zero_copy_only=False) for c in batch.column("bbox").flatten()
+            )
+            inside = (bx0 >= xmin) & (bx1 <= xmax) & (by0 >= ymin) & (by1 <= ymax)
+            if inside.any():
+                yield batch.filter(pa.array(inside))
+            if not inside.all():
+                out = _clip_straddling(batch.filter(pa.array(~inside)), aoi, geom_col)
+                if out.num_rows:
+                    yield out
+
+    return clip_batches
 
 
 # --- DataFrame-level operators (envelope prefilter + exact kernel) ---
 
 def reproject(df: DataFrame, dst_epsg: int, geom_col: str = "geometry",
               crs_col: str = "crs", assume_epsg: int | None = None) -> DataFrame:
-    """Project every geometry to dst_epsg; updates geometry, bbox and crs
-    columns. Rows already in dst_epsg pass through untouched (JVM-side
-    short-circuit — the UDF only sees rows needing work).
+    """Project every geometry to dst_epsg; updates geometry, bbox (when
+    the frame has one) and crs columns.
+
+    One fused UDF node. Spark evaluates a Python UDF on every row of its
+    input, even under `F.when`, so rows already in dst_epsg send a null
+    instead of their WKB: they are not decoded and keep their geometry
+    bytes and bbox. Other rows get the projected WKB and its envelope
+    from one decode.
 
     Null-CRS rows: `assume_epsg` names the CRS they are assumed to be in
     (the reference's DefineProjection-then-Project chain, T2+T1). The
@@ -164,16 +166,18 @@ def reproject(df: DataFrame, dst_epsg: int, geom_col: str = "geometry",
     from op_etl_spark.session import ensure_shipped
 
     ensure_shipped(df.sparkSession)
-    udf = make_reproject_udf(dst_epsg)
     crs_in = F.coalesce(F.col(crs_col), F.lit(assume_epsg or dst_epsg))
-    needs = crs_in != dst_epsg
-    out = df.withColumn(
-        geom_col,
-        F.when(needs, udf(F.col(geom_col), crs_in)).otherwise(F.col(geom_col)),
-    ).withColumn(crs_col, F.lit(dst_epsg))
+    udf = make_reproject_udf(dst_epsg)
+    out = df.withColumn("_g", udf(F.when(crs_in != dst_epsg, F.col(geom_col)), crs_in))
+    moved = F.col("_g.geometry").isNotNull()
+    out = out.withColumn(geom_col, F.when(moved, F.col("_g.geometry")).otherwise(F.col(geom_col)))
     if "bbox" in df.columns:
-        out = out.withColumn("bbox", envelope_wkb(F.col(geom_col)))
-    return out
+        out = out.withColumn(
+            "bbox",
+            F.when(moved, F.struct(*[F.col(f"_g.{f}").alias(f) for f in BBOX_STRUCT.names]))
+            .otherwise(F.col("bbox")),
+        )
+    return out.drop("_g").withColumn(crs_col, F.lit(dst_epsg))
 
 
 def define_projection(df: DataFrame, epsg: int, crs_col: str = "crs") -> DataFrame:
@@ -187,9 +191,11 @@ def clip_to_aoi(df: DataFrame, bbox: tuple[float, float, float, float],
                 geom_col: str = "geometry") -> DataFrame:
     """Clip features to an AOI rectangle (T3).
 
-    Plan shape: (1) envelope prefilter drops disjoint rows at scan speed;
-    (2) fully-inside rows bypass the UDF entirely; (3) only straddlers pay
-    the exact-clip cost. At 100 TB the UDF typically sees <1% of rows.
+    Plan shape: (1) the envelope prefilter drops disjoint rows (and null
+    geometries) JVM-side at scan speed; (2) one Arrow Python pass
+    (`make_clip_kernel`) over the rest, in which rows fully inside the AOI
+    pass through undecoded and only straddlers are decoded and clipped,
+    getting (geom_type, geometry, bbox) from the same kernel.
     """
     from op_etl_spark.session import ensure_shipped
 
@@ -200,23 +206,6 @@ def clip_to_aoi(df: DataFrame, bbox: tuple[float, float, float, float],
         (b["xmax"] >= xmin) & (b["xmin"] <= xmax)
         & (b["ymax"] >= ymin) & (b["ymin"] <= ymax)
     )
-    inside = (
-        (b["xmin"] >= xmin) & (b["xmax"] <= xmax)
-        & (b["ymin"] >= ymin) & (b["ymax"] <= ymax)
-    )
-    udf = make_clip_udf(bbox)
-    pre = df.filter(intersects)
-    clipped = pre.withColumn(
-        "_clip",
-        F.when(inside, F.struct(F.col("geom_type").alias("geom_type"),
-                                F.col(geom_col).alias("geometry"))).otherwise(
-            udf(F.col("geom_type"), F.col(geom_col))
-        ),
-    )
-    return (
-        clipped.filter(F.col("_clip.geometry").isNotNull())
-        .withColumn("geom_type", F.col("_clip.geom_type"))
-        .withColumn(geom_col, F.col("_clip.geometry"))
-        .drop("_clip")
-        .withColumn("bbox", envelope_wkb(F.col(geom_col)))
+    return df.filter(intersects & F.col(geom_col).isNotNull()).mapInArrow(
+        make_clip_kernel(bbox, geom_col), df.schema
     )

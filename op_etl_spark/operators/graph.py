@@ -40,6 +40,7 @@ import warnings
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import counters
 
 KCORE_DEFAULT_MAX_ROUNDS = 24
@@ -417,8 +418,8 @@ class _PeelState:
                     T.StructField("dst", st["dst"].dataType),
                 ]
             )
-            return spark.createDataFrame(
-                [(v, u) for v, s in self._local.items() for u in s], schema
+            return local_frame(
+                spark, [(v, u) for v, s in self._local.items() for u in s], schema
             )
         e = self.edges_snap
         if self._removed:
@@ -447,8 +448,8 @@ class _PeelState:
                     T.StructField("core_degree", T.LongType()),
                 ]
             )
-            return spark.createDataFrame(
-                [(v, len(s)) for v, s in self._local.items()], schema
+            return local_frame(
+                spark, [(v, len(s)) for v, s in self._local.items()], schema
             )
         return self.deg.select(
             F.col("src").alias("node"), F.col("deg").alias("core_degree")
@@ -670,7 +671,8 @@ class _TrussState:
         spark = self.sup.sparkSession
         from pyspark.sql import types as T
 
-        nodes_df = spark.createDataFrame(
+        nodes_df = local_frame(
+            spark,
             [(x,) for x in nodes],
             T.StructType([T.StructField("a", self.sup.schema["a"].dataType)]),
         )
@@ -769,8 +771,8 @@ class _TrussState:
                         T.StructField("dec", T.LongType()),
                     ]
                 )
-                decs_local = spark.createDataFrame(
-                    [(a, b, d) for (a, b), d in dec_map.items()], schema
+                decs_local = local_frame(
+                    spark, [(a, b, d) for (a, b), d in dec_map.items()], schema
                 )
                 upd = (
                     survivors.join(F.broadcast(decs_local), ["a", "b"], "left")
@@ -951,8 +953,8 @@ class _TrussState:
 
     def _finalize_local(self, sup: dict) -> None:
         spark = self.sup.sparkSession
-        self.sup = spark.createDataFrame(
-            [(a, b, s) for (a, b), s in sup.items()], self.sup.schema
+        self.sup = local_frame(
+            spark, [(a, b, s) for (a, b), s in sup.items()], self.sup.schema
         )
         self.cur_rows = len(sup)
         self._next_front_rows = None

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def _ranged_with_offsets(
     df: DataFrame, cols: list[str], num_parts: int | None = None
@@ -128,7 +130,7 @@ def grouped_row_index(
         + [keyed.schema[g] for g in gcols]
         + [StructField("__off", LongType())]
     )
-    offs = sp.createDataFrame(off_rows, schema)
+    offs = local_frame(sp, off_rows, schema)
     w = Window.partitionBy("__pid", *gcols).orderBy(*ocols)
     return (
         keyed.join(F.broadcast(offs), ["__pid", *gcols])

@@ -14,14 +14,14 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from op_etl_spark.operators.metrics import METRICS_SCHEMA
+from op_etl_spark.session import local_frame
 from op_etl_spark.sinks.load import dataset_for_authority, gate_by_manifest, truncate_and_load
-from op_etl_spark.sources.schema import FEATURE_DDL
 
-from .staging import stage_features
+from .staging import STAGED_SCHEMA, stage_features
 
 PROTOCOL_ORDER = ["http", "file", "atom", "ogc", "wfs", "rest"]
 
@@ -48,27 +48,31 @@ class Pipeline:
         subdirectory inside the per-source try block.
 
         The write is the single execution of the source's fetch DAG —
-        remote services are hit exactly once (a count-then-write shape
-        would fetch everything twice), the feature count comes from the
-        written parquet footers (metadata, no re-fetch), and an executor
-        failure during the fetch surfaces HERE, attributed to its source,
-        instead of exploding later under the unioned write."""
+        remote services are hit exactly once. The connector frame stays
+        persisted while its geometry-type vote and the write run, so the
+        vote's broadcast side does not parse the source a second time; it
+        is unpersisted in a `finally`, whatever happened. The feature count
+        comes from an Observation on the write (no read-back job), and an
+        executor failure during the fetch surfaces HERE, attributed to its
+        source, instead of exploding later under the unioned write."""
         ordered = sorted(
             sources,
             key=lambda s: PROTOCOL_ORDER.index(s["type"])
             if s["type"] in PROTOCOL_ORDER
             else 99,
         )
-        staged_schema = stage_features(
-            self.spark.createDataFrame([], FEATURE_DDL)
-        ).schema
         for src in ordered:
             conn = self.connectors.get(src["type"])
             start = time.time()
+            raw = None
             try:
                 if conn is None:
                     raise ValueError(f"no connector for type {src['type']}")
-                staged = stage_features(conn(self.spark, src))
+                raw = conn(self.spark, src).persist()
+                written = Observation()
+                staged = stage_features(raw).observe(
+                    written, F.count(F.lit(1)).alias("n")
+                )
                 # dynamic partition overwrite: this source's partitions are
                 # replaced, other sources' partitions untouched — the whole
                 # staging path stays ONE normally-readable partitioned table
@@ -78,15 +82,9 @@ class Pipeline:
                     .partitionBy("source_name")
                     .parquet(staging_path)
                 )
-                n = (
-                    self.spark.read.schema(staged_schema)
-                    .parquet(staging_path)
-                    .filter(F.col("source_name") == src["name"])
-                    .count()
-                )
                 self.metrics_rows.append(
                     (src["name"], src["authority"], src["type"], start,
-                     time.time(), True, None, None, n, 1, None, 0)
+                     time.time(), True, None, None, written.get["n"], 1, None, 0)
                 )
             except Exception as e:  # continue-on-failure (config.yaml:130)
                 self.metrics_rows.append(
@@ -94,7 +92,9 @@ class Pipeline:
                      time.time(), False, type(e).__name__, str(e)[:500],
                      0, 0, None, 0)
                 )
-                continue
+            finally:
+                if raw is not None:
+                    raw.unpersist()
         import os
 
         os.makedirs(staging_path, exist_ok=True)  # empty run: readable dir
@@ -104,7 +104,7 @@ class Pipeline:
         # sources outside its --authority/--type selection
         names = [s["name"] for s in sources]
         return (
-            self.spark.read.schema(staged_schema)
+            self.spark.read.schema(STAGED_SCHEMA)
             .parquet(staging_path)
             .filter(F.col("source_name").isin(names) if names else F.lit(False))
         )
@@ -125,10 +125,7 @@ class Pipeline:
             raise FileNotFoundError(
                 f"stage table {path} does not exist — run the producing step first"
             )
-        staged_schema = stage_features(
-            self.spark.createDataFrame([], FEATURE_DDL)
-        ).schema
-        df = self.spark.read.schema(staged_schema).parquet(path)
+        df = self.spark.read.schema(STAGED_SCHEMA).parquet(path)
         return df.filter(F.col("source_name").isin(names) if names else F.lit(False))
 
     def run(self, workspace: str, authority: str | None = None,
@@ -209,7 +206,7 @@ class Pipeline:
         # table with an empty one (round-4 advice)
         metrics_path = f"{workspace}/metrics"
         if "download" in steps:
-            metrics = self.spark.createDataFrame(self.metrics_rows, METRICS_SCHEMA)
+            metrics = local_frame(self.spark, self.metrics_rows, METRICS_SCHEMA)
             metrics.write.mode("overwrite").json(metrics_path)
             result["metrics"] = metrics_path
         else:

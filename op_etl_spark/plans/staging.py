@@ -2,7 +2,8 @@
 tables (the reference's stage step, etl/stage_files.py:218-260 +
 480-600, re-expressed as one declarative DataFrame pipeline).
 
-Steps (all JVM-side except the reproject UDF):
+Steps (all JVM-side except the reproject UDF, the one Python node these
+steps add):
  1. geometry-type election per source: majority vote, drop minority rows
     (P5, etl/stage_files.py:32-55, 515-534);
  2. coordinate-magnitude validation against the declared SR window
@@ -15,19 +16,30 @@ Steps (all JVM-side except the reproject UDF):
     overwrite).
 
 Scale notes: election is one groupBy on (source_name, geom_type) — tiny
-result, broadcast back; validation is a scan-level filter; only rows not
-already in 3006 hit the reproject UDF.
+result, broadcast back; validation is a scan-level filter; the fused
+reproject UDF sees every surviving row once but decodes only rows not
+already in 3006 — the others send a null and keep their bytes and bbox.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from op_etl_spark.functions.crs import magnitude_valid_expr
 from op_etl_spark.geometry.ops import reproject
+from op_etl_spark.sources.schema import FEATURE_SCHEMA
 
 STAGING_EPSG = 3006
+
+# stage_features' output schema (tests/test_staging_pipeline.py pins it):
+# the canonical feature columns, with source_name first because the
+# election joins on it. Staged and processed tables read back with it.
+STAGED_SCHEMA = T.StructType(
+    [FEATURE_SCHEMA["source_name"]]
+    + [f for f in FEATURE_SCHEMA.fields if f.name != "source_name"]
+)
 
 
 def elect_geometry_type(df: DataFrame, key: str = "source_name") -> DataFrame:

@@ -109,6 +109,7 @@ def default_connectors(downloads_dir: str | None = None) -> dict:
         # the matching connector; file enclosures download + parse
         from op_etl_spark.sources.atom import read_atom_routes
         from op_etl_spark.sources.download import download_file, extract_zip, select_candidates
+        from op_etl_spark.session import local_frame
         from op_etl_spark.sources.schema import FEATURE_DDL
 
         routes = read_atom_routes(default_text_fetcher, src["url"])
@@ -137,7 +138,7 @@ def default_connectors(downloads_dir: str | None = None) -> dict:
             elif route.kind == "rest":
                 dfs.append(rest_conn(spark, routed))
         if not dfs:
-            return spark.createDataFrame([], FEATURE_DDL)
+            return local_frame(spark, [], FEATURE_DDL)
         result = dfs[0]
         for extra in dfs[1:]:
             result = result.unionByName(extra)

@@ -93,6 +93,31 @@ def ensure_shipped(spark: SparkSession) -> None:
     spark._op_etl_shipped = True
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """Driver-side `rows` (tuples in `schema`'s field order; struct values
+    as tuples or dicts, map values as dicts) as a DataFrame.
+
+    The rows are built into a pyarrow.Table on the driver and the JVM
+    reads its record batches directly, so no Python worker task ever runs
+    for them. `createDataFrame(<list>)` ships the rows through a
+    PythonRDD instead: one Python task per slice, each paying Python
+    worker start-up even for one row. Every engine frame built from
+    driver rows goes through here (tests/test_local_frame.py guards it)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def session_cache(spark: SparkSession, attr: str) -> dict:
     """A dict cached on the session object (dies with the session)."""
     cache = getattr(spark, attr, None)

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from op_etl_spark.session import local_frame
+
 EXT_PRIORITY = {".gpkg": 0, ".geojson": 1, ".json": 2, ".shp": 3, ".zip": 4}
 
 
@@ -28,9 +30,7 @@ def list_files(spark: SparkSession, directory: str) -> DataFrame:
             p = os.path.join(root, name)
             stem = os.path.splitext(name)[0]
             rows.append((p, stem, ext, float(os.path.getmtime(p))))
-    return spark.createDataFrame(
-        rows or [], "path string, stem string, ext string, mtime double"
-    )
+    return local_frame(spark, rows, "path string, stem string, ext string, mtime double")
 
 
 def discover_files(spark: SparkSession, directory: str) -> DataFrame:

@@ -221,10 +221,11 @@ def parse_json_content(raw: bytes | str, source_name: str, authority: str):
 def read_feature_files(spark: SparkSession, files: list[dict]) -> DataFrame:
     """files: [{"path":..., "source_name":..., "authority":...}, ...] ->
     canonical feature DataFrame, parsed distributed (one file per task)."""
-    from op_etl_spark.session import ensure_shipped
+    from op_etl_spark.session import ensure_shipped, local_frame
 
     ensure_shipped(spark)
-    plan = spark.createDataFrame(
+    plan = local_frame(
+        spark,
         [(f["path"], f["source_name"], f["authority"]) for f in files],
         "path string, source_name string, authority string",
     ).repartition(max(len(files), 1))

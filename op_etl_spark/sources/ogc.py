@@ -133,16 +133,16 @@ def read_collections(
     delay_seconds: float = 0.1,  # reference ogc_api_delay default (etl/download_ogc.py:70)
 ) -> DataFrame:
     """Fan collections out across executors; walk each cursor in-task."""
-    from op_etl_spark.session import ensure_shipped
+    from op_etl_spark.session import ensure_shipped, local_frame
 
     ensure_shipped(spark)
     crs_param = (
         "http://www.opengis.net/def/crs/EPSG/0/3006" if supports_epsg_3006 else None
     )
     if not collection_ids:
-        return spark.createDataFrame([], FEATURE_DDL)
-    plan = spark.createDataFrame(
-        [(c,) for c in collection_ids], "collection_id string"
+        return local_frame(spark, [], FEATURE_DDL)
+    plan = local_frame(
+        spark, [(c,) for c in collection_ids], "collection_id string"
     ).repartition(fetch_parallelism(len(collection_ids)))
 
     cfg = json.dumps(

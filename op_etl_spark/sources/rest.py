@@ -132,7 +132,7 @@ def read_rest_layer(
     `use_oid_pagination` is forced; otherwise offset pages. Execution:
     one fetch task per page/batch, coalesced to the politeness cap.
     """
-    from op_etl_spark.session import ensure_shipped
+    from op_etl_spark.session import ensure_shipped, local_frame
 
     ensure_shipped(spark)
     base = build_rest_params(where, out_fields, bbox, out_sr=out_sr)
@@ -167,10 +167,10 @@ def read_rest_layer(
         ]
 
     if not tasks:
-        return spark.createDataFrame([], FEATURE_DDL)
+        return local_frame(spark, [], FEATURE_DDL)
 
-    plan = spark.createDataFrame(
-        tasks, "params_json string, start_id long"
+    plan = local_frame(
+        spark, tasks, "params_json string, start_id long"
     ).repartition(fetch_parallelism(len(tasks)))
 
     def fetch(batches_it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -144,13 +144,13 @@ def read_wfs(
     srs_name: str = "EPSG:3006",
 ) -> DataFrame:
     """Typenames fan out across executors; each task runs one GetFeature."""
-    from op_etl_spark.session import ensure_shipped
+    from op_etl_spark.session import ensure_shipped, local_frame
 
     ensure_shipped(spark)
     if not typenames:
-        return spark.createDataFrame([], FEATURE_DDL)
-    plan = spark.createDataFrame(
-        [(t,) for t in typenames], "typename string"
+        return local_frame(spark, [], FEATURE_DDL)
+    plan = local_frame(
+        spark, [(t,) for t in typenames], "typename string"
     ).repartition(fetch_parallelism(len(typenames)))
     bbox_l = list(bbox) if bbox else None
 

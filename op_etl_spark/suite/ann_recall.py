@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators import phases
 from ..operators.sampling import hash_unit, hash_unit_sql
+from ..session import local_frame
 from ._util import read_table
 
 RECALL_N_LISTS = 8
@@ -226,8 +227,8 @@ def _index_tables_core(spark: SparkSession, sf_dir: str):
 
 
 def _cents_df(spark: SparkSession, cent_list: list[list[float]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cent_list)], "list_id int, c array<double>"
+    return local_frame(
+        spark, [(i, c) for i, c in enumerate(cent_list)], "list_id int, c array<double>"
     )
 
 

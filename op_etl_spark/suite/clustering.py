@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ._util import read_table
 from .dedup import (
     DF_CAP,
@@ -662,7 +663,7 @@ def kcore_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _symmetrize(_pairs(spark, sf_dir, min_common=KCORE_MIN_COMMON))
     rows = kcore_profile_counts(edges, KCORE_PROFILE_KS,
                                 max_rounds=KCORE_PROFILE_ROUNDS)
-    return spark.createDataFrame(rows, "k int, n_nodes long, n_edges long")
+    return local_frame(spark, rows, "k int, n_nodes long, n_edges long")
 
 
 def _kcore_profile_oracle() -> str:

@@ -20,6 +20,7 @@ import math
 import numpy as np
 import pandas as pd
 
+from ..session import local_frame
 from ._util import dot_fold as _dot, fround, norm_fold, read_table
 
 N_PROBES = 10
@@ -745,7 +746,8 @@ def _assign_two_level(en: DataFrame, cent_rows) -> DataFrame:
         (i, reps[old], math.sqrt(_pydot(reps[old], reps[old])))
         for i, old in enumerate(live)
     ]
-    fine = spark.createDataFrame(
+    fine = local_frame(
+        spark,
         [
             (i, [(int(lb), list(c), float(cn)) for lb, c, cn in cells[old]])
             for i, old in enumerate(live)

@@ -7,15 +7,20 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from op_etl_spark.geometry.ops import clip_to_aoi
 from op_etl_spark.geometry.tm import geodetic_to_grid
-from op_etl_spark.geometry.wkb import wkb_loads
+from op_etl_spark.geometry.wkb import envelope, wkb_loads
+from op_etl_spark.plans.pipeline import Pipeline
 from op_etl_spark.plans.staging import (
+    STAGED_SCHEMA,
     elect_geometry_type,
     stage_features,
     validate_magnitude,
@@ -27,7 +32,13 @@ from op_etl_spark.sinks.load import (
     gate_by_manifest,
     truncate_and_load,
 )
+from op_etl_spark.session import local_frame
 from op_etl_spark.sources.geojson import read_feature_files
+from op_etl_spark.sources.schema import FEATURE_DDL
+from tools.plan_audit import audit, plan_of
+
+# AOI covering the first 4 Esri points (500000..503000) and the inside lines
+AOI = (499000.0, 6499000.0, 503500.0, 6503500.0)
 
 
 def _write_geojson(path, features, crs_name=None):
@@ -77,7 +88,33 @@ def staged_inputs(tmp_path_factory):
     }
     with open(d / "raa_fornminnen.json", "w") as f:
         json.dump(esri, f)
+
+    # source C: lines in SWEREF99 TM around AOI — inside, straddling its
+    # east and north edges, outside, and one whose envelope meets the AOI
+    # corner while the line itself passes outside it
+    def line(coords, kind="LineString", **props):
+        return {"type": "Feature", "geometry": {"type": kind, "coordinates": coords},
+                "properties": props}
+
+    lines = [
+        line([[500000, 6500000 + k * 500], [501000.5, 6501000 + k * 500]], id=k)
+        for k in range(3)
+    ] + [
+        line([[502000, 6500000], [505000, 6500000]], id=10),
+        line([[503000, 6502000], [503000, 6505000]], id=11),
+        line([[[500000, 6500000], [500500, 6500500]],
+              [[510000, 6510000], [510500, 6510500]]], "MultiLineString", id=12),
+        line([[510000, 6510000], [511000, 6511000]], id=20),
+        line([[503400, 6504000], [504000, 6503400]], id=21),
+    ]
+    _write_geojson(d / "lst_linjer.geojson", lines, "EPSG:3006")
     return d
+
+
+def _files(d, *names):
+    ext = {"nvv_skydd": "geojson", "raa_fornminnen": "json", "lst_linjer": "geojson"}
+    return [{"path": str(d / f"{n}.{ext[n]}"), "source_name": n,
+             "authority": n.split("_")[0].upper()} for n in names]
 
 
 def test_parse_and_stage(spark, staged_inputs, tmp_path):
@@ -136,13 +173,125 @@ def test_clip_to_aoi(spark, staged_inputs):
     files = [{"path": str(staged_inputs / "raa_fornminnen.json"),
               "source_name": "raa_fornminnen", "authority": "RAA"}]
     staged = stage_features(read_feature_files(spark, files))
-    # AOI covering the first 4 points (500000..503000)
-    aoi = (499000.0, 6499000.0, 503500.0, 6503500.0)
-    clipped = clip_to_aoi(staged, aoi)
+    clipped = clip_to_aoi(staged, AOI)
     assert clipped.count() == 4
     rows = clipped.collect()
     for r in rows:
-        assert aoi[0] <= r.bbox.xmin and r.bbox.xmax <= aoi[2]
+        assert AOI[0] <= r.bbox.xmin and r.bbox.xmax <= AOI[2]
+
+
+def test_staged_schema_is_the_feature_schema(spark):
+    staged = stage_features(local_frame(spark, [], FEATURE_DDL))
+    assert staged.schema.simpleString() == STAGED_SCHEMA.simpleString()
+
+
+def _python_nodes(df):
+    """Python UDF and mapInArrow nodes of the plan tree (the parse's
+    MapInPandas aside)."""
+    tree = plan_of(df).split("\n\n", 1)[0]
+    return sorted(n for n in re.findall(r"(\w+) \(\d+\)", tree)
+                  if n in ("ArrowEvalPython", "BatchEvalPython", "MapInArrow"))
+
+
+def test_staged_plan_has_one_python_udf_node(spark, staged_inputs):
+    staged = stage_features(
+        read_feature_files(spark, _files(staged_inputs, "nvv_skydd", "lst_linjer")))
+    # the fused reproject-and-envelope UDF, one call
+    assert _python_nodes(staged) == ["ArrowEvalPython"]
+    assert "DuplicatedPythonUDF" not in audit("staged", plan_of(staged))["smells"]
+    block = next(b for b in plan_of(staged).split("\n\n") if ") ArrowEvalPython" in b)
+    assert block.count("_reproject(") == 1
+
+
+@F.pandas_udf(T.BinaryType())
+def _identity_udf(geom: pd.Series) -> pd.Series:
+    return geom
+
+
+def test_clip_plan_evaluates_no_udf_twice(spark, staged_inputs):
+    staged = stage_features(
+        read_feature_files(spark, _files(staged_inputs, "nvv_skydd", "lst_linjer")))
+    clipped = clip_to_aoi(staged, AOI)
+    assert "DuplicatedPythonUDF" not in audit("clip", plan_of(clipped))["smells"]
+    assert _python_nodes(clipped) == ["ArrowEvalPython", "MapInArrow"]
+    # the shape clip_to_aoi used to have — a deterministic UDF column
+    # filtered on afterwards — is what the audit flags: the filter is
+    # pushed below the projection and every row pays the UDF twice
+    old_shape = staged.withColumn("_clip", _identity_udf(F.col("geometry"))).filter(
+        F.col("_clip").isNotNull())
+    assert "DuplicatedPythonUDF" in audit("old_clip", plan_of(old_shape))["smells"]
+
+
+def test_clip_bbox_is_envelope_and_inside_rows_keep_bytes(spark, staged_inputs):
+    staged = stage_features(
+        read_feature_files(spark, _files(staged_inputs, "raa_fornminnen", "lst_linjer")))
+    before = {(r.source_name, r.feature_id): r for r in staged.collect()}
+    got = {(r.source_name, r.feature_id): r for r in clip_to_aoi(staged, AOI).collect()}
+    # 4 points, 3 inside lines, 2 straddling lines, the straddling
+    # MultiLineString; the outside line and the corner-miss line drop
+    assert sorted(k[1] for k in got if k[0] == "lst_linjer") == [0, 1, 2, 3, 4, 5]
+    assert len(got) == 4 + 6
+    for key, r in got.items():
+        gt, coords = wkb_loads(bytes(r.geometry))
+        assert gt == r.geom_type
+        assert tuple(r.bbox) == envelope(gt, coords)
+        assert AOI[0] <= r.bbox.xmin and r.bbox.xmax <= AOI[2]
+        assert AOI[1] <= r.bbox.ymin and r.bbox.ymax <= AOI[3]
+        b = before[key].bbox
+        if AOI[0] <= b.xmin and b.xmax <= AOI[2] and AOI[1] <= b.ymin and b.ymax <= AOI[3]:
+            assert bytes(r.geometry) == bytes(before[key].geometry)
+            assert r.bbox == b
+    east = got[("lst_linjer", 3)]
+    assert wkb_loads(bytes(east.geometry)) == (
+        "LineString", [[502000.0, 6500000.0], [503500.0, 6500000.0]])
+    multi = got[("lst_linjer", 5)]
+    assert wkb_loads(bytes(multi.geometry)) == (
+        "MultiLineString", [[[500000.0, 6500000.0], [500500.0, 6500500.0]]])
+
+
+def _boom(batches):
+    for _ in batches:
+        raise RuntimeError("fetch failed during the staging write")
+    yield from ()
+
+
+def test_connector_failing_in_write_records_failure_and_unpersists(
+        spark, staged_inputs, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+
+    def connector(spark_, src):
+        if src["name"] == "broken":
+            return spark_.range(2).mapInPandas(_boom, FEATURE_DDL)
+        return read_feature_files(spark_, _files(staged_inputs, src["name"]))
+
+    pipe = Pipeline(spark, {}, {"file": connector})
+    specs = [{"name": n, "authority": "X", "type": "file"}
+             for n in ("broken", "raa_fornminnen")]
+    staged = pipe.extract_and_stage(specs, str(tmp_path / "staging"))
+    rows = {r[0]: r for r in pipe.metrics_rows}
+    assert rows["broken"][5] is False and rows["broken"][8] == 0 and rows["broken"][6]
+    assert rows["raa_fornminnen"][5] is True and rows["raa_fornminnen"][8] == 10
+    assert staged.count() == 10
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_source_with_no_valid_rows_counts_zero(spark, tmp_path):
+    d = tmp_path / "dl"
+    d.mkdir()
+    _write_geojson(d / "bad.geojson", [_pt(500.0, 57.0 + i) for i in range(5)])
+
+    def connector(spark_, src):
+        return read_feature_files(spark_, [{"path": str(d / "bad.geojson"),
+                                            "source_name": src["name"],
+                                            "authority": "X"}])
+
+    pipe = Pipeline(spark, {}, {"file": connector})
+    staged = pipe.extract_and_stage(
+        [{"name": "bad", "authority": "X", "type": "file"}], str(tmp_path / "staging"))
+    (row,) = pipe.metrics_rows
+    assert row[5] is True and row[8] == 0
+    assert staged.count() == 0
 
 
 def test_truncate_and_load_with_manifest(spark, staged_inputs, tmp_path):
