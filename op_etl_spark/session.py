@@ -35,6 +35,10 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
+        # a read of more than 32 paths (e.g. the upsert merge's touched
+        # bucket directories) lists them in a Spark job; Spark's default
+        # runs one task per path, up to 10000. Cap it at the task slots.
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

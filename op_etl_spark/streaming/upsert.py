@@ -12,18 +12,21 @@ micro-batch then
   1. collects the distinct buckets the batch touches (one tiny agg),
   2. reads back ONLY those buckets — a partition filter, so untouched
      buckets are never listed or read,
-  3. merges latest-wins over (current buckets ∪ raw batch) in ONE
-     map-side-combining aggregation — duplicate keys inside the batch
-     collapse in the partial aggregate before the shuffle, so a
-     separate reduce-the-batch-first pass would only add a second
-     shuffle and a second stage barrier for nothing, and
+  3. merges latest-wins over (current buckets ∪ raw batch) behind ONE
+     shuffle: the union is hash-partitioned on the bucket column, and
+     grouping on (bucket, key) is already satisfied by that
+     partitioning, so the aggregate plans no Exchange of its own and
+     the write needs none either, and
   4. rewrites exactly those bucket directories (per-write dynamic
      partition overwrite — a writer option, so concurrent writes in the
-     same session can't race a session-wide conf flip).
-Work per batch scales with |touched buckets| ~ |batch keys|, not with
-target size. Retries are idempotent: merging the same batch twice is a
-no-op (max-by-sequence is associative/commutative/idempotent), which is
-exactly the foreachBatch redelivery contract.
+     same session can't race a session-wide conf flip). Each bucket
+     lands in exactly one of at most `defaultParallelism` write tasks,
+     so each bucket directory still gets one file.
+Work per batch scales with |touched buckets| ~ |batch keys| and the task
+slots, not with target size or the bucket count. Retries are idempotent:
+merging the same batch twice is a no-op (max-by-sequence is
+associative/commutative/idempotent), which is exactly the foreachBatch
+redelivery contract.
 
 The bucket count is part of the target's physical identity: it's pinned
 in a `_n_buckets` marker on first write and later merges must match —
@@ -121,9 +124,10 @@ def _read_marker(spark: SparkSession, target_dir: str) -> int | None:
 
 
 def _parse_marker(lines: list[str] | None):
-    """(n_buckets, key_cols, schema) from one marker read — the merge path
-    calls this instead of three separate `_read_marker*` helpers so each
-    micro-batch pays ONE filesystem open for the marker, not three."""
+    """(n_buckets, key_cols, schema) from one marker read, so each
+    micro-batch pays ONE filesystem open for the marker. `key_cols` is
+    None for one-line markers and `schema` None for markers without a
+    schema line; both older forms stay readable and mergeable."""
     if not lines:
         return None, None, None
     n = int(lines[0])
@@ -134,28 +138,6 @@ def _parse_marker(lines: list[str] | None):
 
         schema = T.StructType.fromJson(_json.loads(lines[2]))
     return n, keys, schema
-
-
-def _read_marker_keys(spark: SparkSession, target_dir: str) -> list[str] | None:
-    """Key columns recorded at first write; None for pre-round-10
-    markers (one line), which stay readable and mergeable."""
-    lines = _read_marker_lines(spark, target_dir)
-    if lines and len(lines) > 1 and lines[1]:
-        return lines[1].split(",")
-    return None
-
-
-def _read_marker_schema(spark: SparkSession, target_dir: str) -> T.StructType | None:
-    """Target schema recorded at first write (round 11) — lets every
-    micro-batch read the target without the per-batch footer read +
-    driver schema merge. None for older markers (<= 2 lines), which fall
-    back to the inferred read."""
-    lines = _read_marker_lines(spark, target_dir)
-    if lines and len(lines) > 2 and lines[2]:
-        import json as _json
-
-        return T.StructType.fromJson(_json.loads(lines[2]))
-    return None
 
 
 def _write_marker(
@@ -204,24 +186,29 @@ def merge_upsert_batch(
             f"merging with {n_buckets} would strand stale rows — rebuild the "
             "target to re-bucket"
         )
-    # persist the RAW bucketed batch, not a pre-reduced one:
-    # latest_per_key's partial aggregate collapses the batch's duplicate
-    # keys map-side anyway, so reducing the batch separately first would
-    # just add a second shuffle and a second stage barrier per
-    # micro-batch. The persist keeps the touched-bucket probe and the
-    # merge from scanning the micro-batch source twice.
     if marker_keys is not None and marker_keys != list(key_cols):
         raise ValueError(
             f"target {target_dir} was bucketed on key {marker_keys}; merging "
             f"on {list(key_cols)} would route existing keys to the wrong "
             "buckets — rebucket_target under the new key first"
         )
+    # persist the RAW bucketed batch, not a pre-reduced one: reducing it
+    # first would cost its own shuffle. The persist keeps the
+    # touched-bucket probe and the merge from scanning the micro-batch
+    # source twice.
     batch = batch_df.withColumn(BUCKET_COL, _bucket(key_cols, n_buckets)).persist()
+    # no more write tasks than task slots: each task writes the files of
+    # every bucket hashed to it. A task per bucket would pay a task's
+    # start-up for each small bucket file.
+    n_write = min(n_buckets, spark.sparkContext.defaultParallelism)
     try:
         if existing is None:
-            merged = latest_per_key(batch, key_cols, seq_col)
+            side = batch
         else:
             touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
+            if not touched:  # empty micro-batch: nothing to rewrite
+                return
+            n_write = min(n_write, len(touched))
             # the target's schema was recorded in the marker at first
             # write — passing it to the read skips the per-batch footer
             # read + driver schema merge (~0.15s/batch at 64 buckets,
@@ -277,17 +264,20 @@ def merge_upsert_batch(
             side = batch.select(*cols, BUCKET_COL)
             if current is not None:
                 side = current.select(*cols, BUCKET_COL).unionByName(side)
-            merged = latest_per_key(side, key_cols, seq_col)
-        # one writer task per bucket: the reduced output is small enough
-        # that AQE coalesces it to a single partition, and that one task
-        # then writes every touched bucket directory sequentially (~64
-        # parquet file opens back to back). An explicit repartition on the
-        # bucket column spreads the per-file write cost across the
-        # cluster — exactly one file per bucket dir either way, so the
-        # layout contract (and the next merge's read) is unchanged.
+        # the merge's only shuffle: hash the union on the bucket column.
+        # Grouping on (bucket, key) is satisfied by that partitioning, so
+        # the aggregate adds no Exchange, and the write runs in the same
+        # n_write tasks with every bucket in exactly one of them — one
+        # file per bucket directory, the layout the next merge reads.
+        # Duplicate batch keys cross the shuffle uncombined; the current
+        # buckets, which at scale far outnumber the batch, cross it once.
+        merged = latest_per_key(
+            side.repartition(n_write, F.col(BUCKET_COL)),
+            [BUCKET_COL, *key_cols],
+            seq_col,
+        )
         (
-            merged.repartition(n_buckets, F.col(BUCKET_COL))
-            .write.mode("overwrite")
+            merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(BUCKET_COL)
             .parquet(target_dir)
@@ -385,10 +375,10 @@ def rebucket_target(
     sensible when the caller knows the stored rows are already one per
     new key)."""
     adopt_pending_rebucket(spark, target_dir)
-    existing = _read_marker(spark, target_dir)
+    existing, marker_keys, _ = _parse_marker(_read_marker_lines(spark, target_dir))
     if existing is None:
         raise ValueError(f"{target_dir} is not an upsert target (no marker)")
-    keys = list(key_cols) if key_cols else _read_marker_keys(spark, target_dir)
+    keys = list(key_cols) if key_cols else marker_keys
     if not keys:
         raise ValueError(
             f"target {target_dir} predates key recording — pass key_cols"

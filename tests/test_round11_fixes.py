@@ -228,11 +228,11 @@ def test_marker_records_schema_and_fast_read_matches(spark, tmp_path):
     """The first write records the target schema in the marker; later
     merges read with it (no per-batch footer inference) and produce the
     identical state."""
-    from op_etl_spark.streaming.upsert import _read_marker_schema
+    from op_etl_spark.streaming.upsert import _parse_marker, _read_marker_lines
 
     target = str(tmp_path / "t")
     _mk_target(spark, target, n_buckets=8)
-    sch = _read_marker_schema(spark, target)
+    _, _, sch = _parse_marker(_read_marker_lines(spark, target))
     assert sch is not None and "__bucket" in sch.fieldNames()
     assert set(sch.fieldNames()) == {"user_id", "seq", "v", "__bucket"}
     got = {r[0]: (r[1], r[2]) for r in _state(spark, target)}
@@ -243,7 +243,8 @@ def test_legacy_two_line_marker_still_merges(spark, tmp_path):
     """Pre-round-11 markers (no schema line) must keep merging via the
     inferred-read fallback — same final state."""
     from op_etl_spark.streaming.upsert import (
-        _read_marker_schema,
+        _parse_marker,
+        _read_marker_lines,
         _write_marker,
         merge_upsert_batch,
     )
@@ -252,7 +253,7 @@ def test_legacy_two_line_marker_still_merges(spark, tmp_path):
     _mk_target(spark, target, n_buckets=8)
     # rewrite the marker without the schema line (a legacy target)
     _write_marker(spark, target, 8, ["user_id"])
-    assert _read_marker_schema(spark, target) is None
+    assert _parse_marker(_read_marker_lines(spark, target)) == (8, ["user_id"], None)
     b3 = spark.createDataFrame(
         [(1, 999, 42.0)], "user_id long, seq long, v double"
     )

@@ -239,3 +239,166 @@ def _bucket_of(spark, k):
         .select(_bucket(["k"], N_BUCKETS).alias("b"))
         .collect()[0]["b"]
     )
+
+
+def _bucket_files(target):
+    """{bucket dir: {data file name: bytes}} for every `__bucket=` dir."""
+    out = {}
+    for d in sorted(glob.glob(os.path.join(target, f"{BUCKET_COL}=*"))):
+        out[d] = {}
+        for name in os.listdir(d):
+            if name.startswith("part-"):
+                with open(os.path.join(d, name), "rb") as f:
+                    out[d][name] = f.read()
+    return out
+
+
+def test_merge_into_mixed_existing_and_new_buckets(spark, tmp_path):
+    # one batch that updates keys in existing buckets AND inserts keys
+    # into buckets never written before: no key's state may be lost, and
+    # the buckets the batch does not touch keep their bytes
+    n = 16
+    target = str(tmp_path / "t")
+    by_bucket = {}
+    keyed = _updates(spark, [(k, 0, "") for k in range(64)])
+    for r in keyed.select("k", _bucket(KEYS, n).alias("b")).collect():
+        by_bucket.setdefault(r.b, []).append(r.k)
+    buckets = sorted(by_bucket)
+    old_b, new_b = buckets[: len(buckets) // 2], buckets[len(buckets) // 2:]
+    first = [(k, 1, f"a{k}") for b in old_b for k in by_bucket[b]]
+    merge_upsert_batch(_updates(spark, first), target, KEYS, SEQ, n)
+    # update one key of the first existing bucket (plus a late replay of
+    # another) and insert every key of the never-written buckets
+    upd_k, late_k = by_bucket[old_b[0]][0], by_bucket[old_b[-1]][0]
+    second = [(upd_k, 2, "upd"), (late_k, 0, "late")] + [
+        (k, 1, f"n{k}") for b in new_b for k in by_bucket[b]
+    ]
+    untouched = {
+        d: files for d, files in _bucket_files(target).items()
+        if d not in {os.path.join(target, f"{BUCKET_COL}={b}")
+                     for b in (old_b[0], old_b[-1])}
+    }
+    merge_upsert_batch(_updates(spark, second), target, KEYS, SEQ, n)
+
+    want = {k: (s, v) for k, s, v in first}
+    want.update({k: (s, v) for k, s, v in second if k != late_k})
+    assert _state(spark, target) == want
+    after = _bucket_files(target)
+    for d, files in untouched.items():
+        assert after[d] == files
+
+
+def test_one_file_per_bucket_and_one_merge_shuffle(spark, tmp_path):
+    # more buckets than task slots (local[4]): each write task writes the
+    # files of several buckets, yet every bucket dir holds exactly one
+    # data file, and a merge into an existing target shuffles once (plus
+    # the touched-bucket probe's shuffle) — no second repartition
+    n = 16
+    assert spark.sparkContext.defaultParallelism < n
+    target = str(tmp_path / "t")
+    merge_upsert_batch(
+        _updates(spark, [(k, 1, f"a{k}") for k in range(0, 60, 2)]),
+        target, KEYS, SEQ, n,
+    )
+    before = {s.stageId() for s in _stages(spark)}
+    merge_upsert_batch(
+        _updates(spark, [(k, 2, f"b{k}") for k in range(30, 90)]
+                 + [(40, 3, "dup"), (41, 0, "late")]),
+        target, KEYS, SEQ, n,
+    )
+    shuffle_writers = [
+        s for s in _stages(spark)
+        if s.stageId() not in before and s.shuffleWriteRecords() > 0
+    ]
+    assert len(shuffle_writers) == 2, [s.name() for s in shuffle_writers]
+
+    files = _bucket_files(target)
+    assert len(files) > spark.sparkContext.defaultParallelism
+    assert all(len(f) == 1 for f in files.values()), {
+        d: sorted(f) for d, f in files.items() if len(f) != 1
+    }
+    want = {k: (1, f"a{k}") for k in range(0, 60, 2)}
+    want.update({k: (2, f"b{k}") for k in range(30, 90)})
+    want[40] = (3, "dup")
+    assert _state(spark, target) == want
+
+
+def _stages(spark):
+    """Every stage in the status store, once the listener bus has
+    delivered the events of the jobs that already ran."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jvm = spark._jvm
+    empty = sc._gateway.new_array(jvm.double, 0)
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False, empty, jvm.java.util.ArrayList()
+    )
+    return [stages.apply(i) for i in range(stages.size())]
+
+
+def test_empty_batch_leaves_target_unchanged(spark, tmp_path):
+    target = str(tmp_path / "t")
+    merge_upsert_batch(
+        _updates(spark, [(k, 1, f"v{k}") for k in range(20)]),
+        target, KEYS, SEQ, N_BUCKETS,
+    )
+    state, files = _state(spark, target), _bucket_files(target)
+    empty = _updates(spark, [(0, 0, "x")]).limit(0)
+    merge_upsert_batch(empty, target, KEYS, SEQ, N_BUCKETS)
+    assert _state(spark, target) == state
+    assert _bucket_files(target) == files
+
+
+def test_stream_restart_from_checkpoint_matches_uninterrupted_run(
+    spark, tmp_path
+):
+    # stop the stream after its first file, add the second file, restart
+    # from the same checkpoint: the state must equal one uninterrupted run
+    # over both files (the second file carries updates, a late replay and
+    # new keys)
+    files = [
+        [(k, 10, f"a{k}") for k in range(12)] + [(3, 12, "a3b")],
+        [(k, 11, f"b{k}") for k in range(6, 18)] + [(2, 9, "late")],
+    ]
+
+    def put(src, i):
+        with open(src / f"{i}.json", "w") as f:
+            for k, s, v in files[i]:
+                f.write(json.dumps({"k": k, "seq": s, "val": v}) + "\n")
+
+    def stream(src):
+        return (
+            spark.readStream.schema("k long, seq long, val string")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+
+    src, target, ckpt = tmp_path / "src", str(tmp_path / "t"), str(tmp_path / "ck")
+    src.mkdir()
+    put(src, 0)
+    q = start_upsert_stream(stream(src), target, ckpt, KEYS, SEQ, N_BUCKETS)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    put(src, 1)
+    q = start_upsert_stream(
+        stream(src), target, ckpt, KEYS, SEQ, N_BUCKETS, available_now=True
+    )
+    assert q.awaitTermination(120)
+
+    one_src, one = tmp_path / "src1", str(tmp_path / "t1")
+    one_src.mkdir()
+    put(one_src, 0)
+    put(one_src, 1)
+    q = start_upsert_stream(
+        stream(one_src), one, str(tmp_path / "ck1"), KEYS, SEQ, N_BUCKETS,
+        available_now=True,
+    )
+    assert q.awaitTermination(120)
+
+    want = {k: (10, f"a{k}") for k in range(12)}
+    want[3] = (12, "a3b")
+    want.update({k: (11, f"b{k}") for k in range(6, 18)})
+    assert _state(spark, one) == want
+    assert _state(spark, target) == want
