@@ -64,12 +64,20 @@ def crs_to_epsg_py(s: str | None) -> int | None:
     return None
 
 
-def magnitude_valid_expr(x: Column, y: Column, epsg: Column) -> Column:
-    """True when (x, y) lies inside the declared SR's plausible window
-    (sr_utils.py:15-60 / stage_files.py:494-500). Unknown SRs pass (the
-    reference only validates the three canonical systems)."""
-    expr = F.lit(True)
-    for code, (xmin, ymin, xmax, ymax) in SR_BOUNDS.items():
-        in_window = (x >= xmin) & (x <= xmax) & (y >= ymin) & (y <= ymax)
-        expr = F.when(epsg == code, in_window).otherwise(expr)
-    return expr
+def magnitude_valid_sql(x: str, y: str, epsg: str) -> str:
+    """SQL predicate: true when (x, y) lies inside the declared SR's
+    plausible window (sr_utils.py:15-60 / stage_files.py:494-500).
+    `x`, `y` and `epsg` are SQL expressions. Unknown SRs pass (the
+    reference only validates the three canonical systems); a null
+    coordinate in a known SR is null, which a filter drops."""
+    arms = " ".join(
+        f"WHEN {code} THEN {x} >= {xmin!r}D AND {x} <= {xmax!r}D"
+        f" AND {y} >= {ymin!r}D AND {y} <= {ymax!r}D"
+        for code, (xmin, ymin, xmax, ymax) in SR_BOUNDS.items()
+    )
+    return f"CASE {epsg} {arms} ELSE true END"
+
+
+def magnitude_valid_expr(x: str, y: str, epsg: str) -> Column:
+    """`magnitude_valid_sql` as a Column, parsed once."""
+    return F.expr(magnitude_valid_sql(x, y, epsg))

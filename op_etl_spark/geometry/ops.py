@@ -11,8 +11,8 @@ decodes only the rows straddling the AOI edge, after the envelope
 prefilter has dropped disjoint rows JVM-side.
 
 Reference parity: T1 Project (etl/process.py:129-156), T2 DefineProjection
-(metadata-only, etl/stage_files.py:627-643 — here just setting the crs
-column), T3 Clip (etl/process.py:107-123).
+(metadata-only, etl/stage_files.py:627-643 — here the SR a null crs
+is read as), T3 Clip (etl/process.py:107-123).
 """
 
 from __future__ import annotations
@@ -161,30 +161,21 @@ def reproject(df: DataFrame, dst_epsg: int, geom_col: str = "geometry",
     Null-CRS rows: `assume_epsg` names the CRS they are assumed to be in
     (the reference's DefineProjection-then-Project chain, T2+T1). The
     default None assumes they are already in dst_epsg — metadata-only
-    stamping, NO coordinate transform — which is only sound after
-    `define_projection` has run (as in plans/staging.stage_features)."""
+    stamping, NO coordinate transform (plans/staging.stage_features
+    passes its default SR)."""
     from op_etl_spark.session import ensure_shipped
 
     ensure_shipped(df.sparkSession)
-    crs_in = F.coalesce(F.col(crs_col), F.lit(assume_epsg or dst_epsg))
+    crs_in = f"coalesce(`{crs_col}`, {assume_epsg or dst_epsg})"
     udf = make_reproject_udf(dst_epsg)
-    out = df.withColumn("_g", udf(F.when(crs_in != dst_epsg, F.col(geom_col)), crs_in))
-    moved = F.col("_g.geometry").isNotNull()
-    out = out.withColumn(geom_col, F.when(moved, F.col("_g.geometry")).otherwise(F.col(geom_col)))
+    out = df.select("*", udf(
+        F.expr(f"CASE WHEN {crs_in} != {dst_epsg} THEN `{geom_col}` END"), F.expr(crs_in)
+    ).alias("_g"))
+    new = {geom_col: f"coalesce(_g.geometry, `{geom_col}`)", crs_col: str(dst_epsg)}
     if "bbox" in df.columns:
-        out = out.withColumn(
-            "bbox",
-            F.when(moved, F.struct(*[F.col(f"_g.{f}").alias(f) for f in BBOX_STRUCT.names]))
-            .otherwise(F.col("bbox")),
-        )
-    return out.drop("_g").withColumn(crs_col, F.lit(dst_epsg))
-
-
-def define_projection(df: DataFrame, epsg: int, crs_col: str = "crs") -> DataFrame:
-    """Metadata-only SR assignment for rows with unknown CRS (T2)."""
-    return df.withColumn(
-        crs_col, F.coalesce(F.col(crs_col), F.lit(epsg)).cast("int")
-    )
+        fields = ", ".join(f"'{f}', _g.{f}" for f in BBOX_STRUCT.names)
+        new["bbox"] = f"if(_g.geometry IS NULL, bbox, named_struct({fields}))"
+    return out.selectExpr(*[f"{new.get(c, f'`{c}`')} AS `{c}`" for c in df.columns])
 
 
 def clip_to_aoi(df: DataFrame, bbox: tuple[float, float, float, float],

@@ -5,12 +5,16 @@ process -> load, fixed protocol order http/atom/ogc/wfs/rest at
 run.py:197-203) compiled into Spark jobs. Stage boundaries materialize as
 parquet tables (the reference's FileGDB handoffs); per-source failures
 are caught and recorded in the metrics frame instead of failing the run
-(continue-on-failure, config.yaml:130); the processed manifest gates the
-load via semi-join (etl/process.py:73-88 + etl/load_sde.py:51-59).
+(continue-on-failure, config.yaml:130). The process step's write observes
+which sources it wrote, and that list is the processed manifest; the load
+step reads it once on the driver and loads each selected source in it
+from its own partition (etl/process.py:73-88 + etl/load_sde.py:51-59).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 from collections.abc import Callable
 
@@ -19,7 +23,7 @@ from pyspark.sql import functions as F
 
 from op_etl_spark.operators.metrics import METRICS_SCHEMA
 from op_etl_spark.session import local_frame
-from op_etl_spark.sinks.load import dataset_for_authority, gate_by_manifest, truncate_and_load
+from op_etl_spark.sinks.load import dataset_for_authority, truncate_and_load
 
 from .staging import STAGED_SCHEMA, stage_features
 
@@ -54,7 +58,9 @@ class Pipeline:
         is unpersisted in a `finally`, whatever happened. The feature count
         comes from an Observation on the write (no read-back job), and an
         executor failure during the fetch surfaces HERE, attributed to its
-        source, instead of exploding later under the unioned write."""
+        source, instead of exploding later under the unioned write. A
+        source that now stages no rows writes no partition, so its
+        partition from an earlier run is removed instead of read back."""
         ordered = sorted(
             sources,
             key=lambda s: PROTOCOL_ORDER.index(s["type"])
@@ -82,6 +88,8 @@ class Pipeline:
                     .partitionBy("source_name")
                     .parquet(staging_path)
                 )
+                if written.get["n"] == 0:
+                    self._drop_partition(staging_path, src["name"])
                 self.metrics_rows.append(
                     (src["name"], src["authority"], src["type"], start,
                      time.time(), True, None, None, written.get["n"], 1, None, 0)
@@ -95,8 +103,6 @@ class Pipeline:
             finally:
                 if raw is not None:
                     raw.unpersist()
-        import os
-
         os.makedirs(staging_path, exist_ok=True)  # empty run: readable dir
         # restrict to THIS run's selection: dynamic overwrite preserves
         # other sources' partitions (good for incremental refresh), but a
@@ -109,6 +115,15 @@ class Pipeline:
             .filter(F.col("source_name").isin(names) if names else F.lit(False))
         )
 
+    def _drop_partition(self, table_path: str, name: str) -> None:
+        """Remove `name`'s source_name partition of a partitioned table;
+        the directory name is escaped as Spark's writer escapes it."""
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        shutil.rmtree(
+            os.path.join(table_path, f"source_name={utils.escapePathName(name)}"),
+            ignore_errors=True,
+        )
+
     # --- stages ---
 
     ALL_STEPS = ("download", "process", "load")
@@ -119,8 +134,6 @@ class Pipeline:
         --authority/--type exactly like a full run). The explicit staged
         schema makes an empty stage directory readable — same contract as
         extract_and_stage's read-back."""
-        import os
-
         if not os.path.isdir(path):
             raise FileNotFoundError(
                 f"stage table {path} does not exist — run the producing step first"
@@ -136,7 +149,12 @@ class Pipeline:
         --process / --load_sde flags, reference run.py:240-248, 289).
         Stage boundaries are materialized parquet tables, so any step can
         run standalone against a workspace a previous invocation staged —
-        e.g. re-running just the load after an SDE outage."""
+        e.g. re-running just the load after an SDE outage.
+
+        The process step writes the processed table and, from an
+        Observation on that write, the manifest of the sources it holds
+        rows for. The load step loads each source of the run's selection
+        that is in the manifest into the dataset of its spec's authority."""
         from op_etl_spark.config.loader import enabled_sources
 
         steps = tuple(steps) if steps else self.ALL_STEPS
@@ -168,37 +186,46 @@ class Pipeline:
                 processed = clip_to_aoi(staged_back, tuple(aoi))
             else:
                 processed = staged_back
-            processed.write.mode("overwrite").partitionBy("source_name").parquet(
-                processed_path
-            )
-            manifest = (
-                self.spark.read.schema(processed.schema)
-                .parquet(processed_path)
-                .select("source_name")
-                .distinct()
-            )
-            manifest.write.mode("overwrite").parquet(manifest_path)
+            wrote = Observation()
+            processed.observe(
+                wrote, F.expr("collect_set(source_name) AS names")
+            ).write.mode("overwrite").partitionBy("source_name").parquet(processed_path)
+            # one file and one task: a local frame spreads its rows over
+            # up to one partition per core
+            local_frame(
+                self.spark, [(n,) for n in sorted(wrote.get["names"])], "source_name string"
+            ).coalesce(1).write.mode("overwrite").parquet(manifest_path)
             result["processed"] = processed_path
             result["manifest"] = manifest_path
 
         if "load" in steps:
             # load: manifest-gated truncate-and-load per source into its
             # authority dataset namespace; always reads the materialized
-            # stage tables, so load-only == load-after-process bit for bit
-            processed_back = self._read_stage(processed_path, names)
-            gated = gate_by_manifest(
-                processed_back,
-                self.spark.read.schema("source_name string").parquet(manifest_path),
+            # stage tables, so load-only == load-after-process bit for bit.
+            # The gate runs on the driver, and each source's filter prunes
+            # the read to its own partition. The partition column reads
+            # back last; the targets keep the staged column order.
+            processed_back = self._read_stage(processed_path, names).select(
+                *STAGED_SCHEMA.names
             )
+            in_manifest = {
+                r.source_name
+                for r in self.spark.read.schema("source_name string")
+                .parquet(manifest_path)
+                .collect()
+            }
             loaded = {}
-            for row in gated.select("source_name", "authority").distinct().collect():
+            for src in sources:
+                if src["name"] not in in_manifest:
+                    continue
                 target = (
-                    f"{workspace}/sde/{dataset_for_authority(row.authority)}/"
-                    f"{row.source_name}"
+                    f"{workspace}/sde/{dataset_for_authority(src['authority'])}/"
+                    f"{src['name']}"
                 )
-                part = gated.filter(F.col("source_name") == row.source_name)
-                truncate_and_load(part, target)
-                loaded[row.source_name] = target
+                truncate_and_load(
+                    processed_back.filter(F.col("source_name") == src["name"]), target
+                )
+                loaded[src["name"]] = target
             result["loaded"] = loaded
 
         # metrics rows are produced by the download step only; a partial
@@ -209,9 +236,6 @@ class Pipeline:
             metrics = local_frame(self.spark, self.metrics_rows, METRICS_SCHEMA)
             metrics.write.mode("overwrite").json(metrics_path)
             result["metrics"] = metrics_path
-        else:
-            import os
-
-            if os.path.isdir(metrics_path):
-                result["metrics"] = metrics_path
+        elif os.path.isdir(metrics_path):
+            result["metrics"] = metrics_path
         return result

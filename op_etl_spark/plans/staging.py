@@ -15,19 +15,23 @@ steps add):
     the delete/rename dance becomes an atomic dynamic-partition
     overwrite).
 
-Scale notes: election is one groupBy on (source_name, geom_type) — tiny
-result, broadcast back; validation is a scan-level filter; the fused
-reproject UDF sees every surviving row once but decodes only rows not
-already in 3006 — the others send a null and keep their bytes and bbox.
+Plan shape: the vote is two small aggregates, broadcast back and joined
+on the source; the election, the DefineProjection and the validation are
+then one filter, and the reproject two projections around the fused
+UDF. Every predicate is a SQL expression parsed once, so building a
+source's plan costs a handful of DataFrame operations, not one py4j
+round trip per Column method. The UDF sees every surviving row once but
+decodes only rows not already in 3006 — the others send a null and keep
+their bytes and bbox.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from op_etl_spark.functions.crs import magnitude_valid_expr
+from op_etl_spark.functions.crs import magnitude_valid_sql
 from op_etl_spark.geometry.ops import reproject
 from op_etl_spark.sources.schema import FEATURE_SCHEMA
 
@@ -42,54 +46,61 @@ STAGED_SCHEMA = T.StructType(
 )
 
 
+# a geometry type's base type: Multi variants count toward it
+# (etl/stage_files.py:46-55)
+_BASE_TYPE = "regexp_replace(geom_type, '^Multi', '')"
+
+
+def _votes(df: DataFrame, key: str) -> DataFrame:
+    """(key, _dominant): each source's base type with the highest count;
+    a tie goes to the lowest base type, a null one first (where an
+    ascending sort puts it)."""
+    return (
+        df.groupBy(key, F.expr(f"{_BASE_TYPE} AS t"))
+        .agg(F.expr("count(1) AS n"))
+        .groupBy(key)
+        .agg(F.expr("min(named_struct('n', -n, 't', t)).t AS _dominant"))
+    )
+
+
+def _coords_valid(epsg: str) -> str:
+    """SQL: both envelope corners inside the window of SR `epsg`."""
+    return " AND ".join(
+        magnitude_valid_sql(f"bbox.{x}", f"bbox.{y}", epsg)
+        for x, y in (("xmin", "ymin"), ("xmax", "ymax"))
+    )
+
+
+def _elect(df: DataFrame, key: str, also: str = "true") -> DataFrame:
+    """The rows of each source's dominant type that also satisfy the SQL
+    predicate `also`, with `key` first. Rows with a null key or a null
+    type never match a vote and drop."""
+    return (
+        df.join(F.broadcast(_votes(df, key)), key)
+        .filter(f"{_BASE_TYPE} = _dominant AND ({also})")
+        .drop("_dominant")
+    )
+
+
 def elect_geometry_type(df: DataFrame, key: str = "source_name") -> DataFrame:
     """Keep only each source's dominant geometry type (majority vote;
     Multi-variants count toward their base type as in
     etl/stage_files.py:46-55)."""
-    base = F.regexp_replace(F.col("geom_type"), "^Multi", "")
-    with_base = df.withColumn("_base_type", base)
-    counts = with_base.groupBy(key, "_base_type").agg(F.count(F.lit(1)).alias("n"))
-    w = W.partitionBy(key).orderBy(F.desc("n"), "_base_type")
-    dominant = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(key, F.col("_base_type").alias("_dominant"))
-    )
-    return (
-        with_base.join(F.broadcast(dominant), key)
-        .filter(F.col("_base_type") == F.col("_dominant"))
-        .drop("_base_type", "_dominant")
-    )
+    return _elect(df, key)
 
 
 def validate_magnitude(df: DataFrame, drop_invalid: bool = True) -> DataFrame:
     """Flag (or drop) rows whose envelope lies outside the declared SR's
     plausible window."""
-    valid = magnitude_valid_expr(
-        F.col("bbox.xmin"), F.col("bbox.ymin"), F.col("crs")
-    ) & magnitude_valid_expr(F.col("bbox.xmax"), F.col("bbox.ymax"), F.col("crs"))
-    flagged = df.withColumn("_coords_valid", valid)
+    valid = _coords_valid("crs")
     if drop_invalid:
-        return flagged.filter(F.col("_coords_valid")).drop("_coords_valid")
-    return flagged
+        return df.filter(valid)
+    return df.selectExpr("*", f"{valid} AS _coords_valid")
 
 
 def stage_features(df: DataFrame, default_epsg: int = STAGING_EPSG) -> DataFrame:
-    """Full staging pipeline on a canonical feature DataFrame."""
-    from op_etl_spark.geometry.ops import define_projection
-
-    out = elect_geometry_type(df)
-    out = define_projection(out, default_epsg)  # unknown-SR rows assume default
-    out = validate_magnitude(out)
-    out = reproject(out, STAGING_EPSG)
-    return out
-
-
-def write_staged(df: DataFrame, path: str, partition_by: str = "source_name") -> None:
-    """K1 staging write: atomic overwrite, partitioned by source so later
-    single-source reads prune at planning time."""
-    (
-        df.write.mode("overwrite")
-        .partitionBy(partition_by)
-        .parquet(path)
-    )
+    """Full staging pipeline on a canonical feature DataFrame: election
+    and validation in one filter, unknown-SR rows validated and projected
+    as `default_epsg` (DefineProjection), then the reproject."""
+    valid = _coords_valid(f"coalesce(crs, {default_epsg})")
+    return reproject(_elect(df, "source_name", valid), STAGING_EPSG, assume_epsg=default_epsg)

@@ -5,15 +5,13 @@
    TruncateTable+Append(NO_TEST) (etl/load_sde.py:92-121). NO_TEST
    (positional, no schema check) maps to aligning by the target's column
    order with missing columns nulled.
- - K3 create-like: target created from the source's schema with zero rows
-   (etl/load_sde.py:123-143).
+ - K3 create-like is sinks/catalog.create_table_like.
  - K4 dataset routing: authority -> `underlag_{authority}` namespace with
    a special-case mapping table (etl/load_sde.py:145-173,
    config/config.yaml:191-192).
- - K6/P10 manifest gating: only feature classes present in the
-   processed-manifest survive to load — a left-semi join; the excluded
-   set (logged by the reference, etl/load_sde.py:53) is the left-anti
-   complement.
+ - K6/P10 manifest gating lives in plans/pipeline.Pipeline.run: the
+   manifest is a short list of source names, intersected with the run's
+   selection on the driver (etl/load_sde.py:51-59).
 """
 
 from __future__ import annotations
@@ -49,24 +47,3 @@ def truncate_and_load(df: DataFrame, target_path: str,
     """Idempotent full refresh of a target table directory."""
     out = align_to_template(df, template) if template is not None else df
     out.write.mode("overwrite").parquet(target_path)
-
-
-def create_like(template: DataFrame, target_path: str) -> None:
-    """Zero-row table with the template's schema."""
-    template.limit(0).write.mode("overwrite").parquet(target_path)
-
-
-def gate_by_manifest(df: DataFrame, manifest: DataFrame,
-                     key: str = "source_name",
-                     manifest_key: str = "source_name") -> DataFrame:
-    """Keep only rows whose source is in the processed manifest."""
-    m = manifest.select(F.col(manifest_key).alias(key)).distinct()
-    return df.join(F.broadcast(m), key, "left_semi")
-
-
-def excluded_by_manifest(df: DataFrame, manifest: DataFrame,
-                         key: str = "source_name",
-                         manifest_key: str = "source_name") -> DataFrame:
-    """The complement (what the reference logs as excluded)."""
-    m = manifest.select(F.col(manifest_key).alias(key)).distinct()
-    return df.join(F.broadcast(m), key, "left_anti")

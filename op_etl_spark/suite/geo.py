@@ -137,12 +137,11 @@ WHERE x >= {AOI[0]} AND x <= {AOI[2]} AND y >= {AOI[1]} AND y <= {AOI[3]}
 
 
 def magnitude_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _synth_points(read_events(spark, sf_dir))
-    epsg = F.when(F.col("event_id") % 2 == 0, 3006).otherwise(3010)
+    pts = _synth_points(read_events(spark, sf_dir)).withColumn(
+        "epsg", F.expr("CASE WHEN event_id % 2 = 0 THEN 3006 ELSE 3010 END")
+    )
     return pts.select(
-        "event_id",
-        epsg.alias("epsg"),
-        magnitude_valid_expr(F.col("x"), F.col("y"), epsg).alias("coords_valid"),
+        "event_id", "epsg", magnitude_valid_expr("x", "y", "epsg").alias("coords_valid")
     )
 
 

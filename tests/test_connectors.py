@@ -178,3 +178,31 @@ def test_ogc_next_link_walk(spark):
     assert len(rows) == 2 * 3 * 2  # 2 collections x 3 pages x 2 features
     assert {r["props"]["page"] for r in rows} == {"0", "1", "2"}
     assert all(r.crs == 4326 for r in rows)  # CRS84 default
+
+
+def test_readers_stamp_the_given_authority(spark, tmp_path):
+    """The load step routes a source by its spec's authority, and every
+    connector passes that authority to its reader: each reader must put
+    exactly it, with the source name, on every row it returns."""
+    from test_wfs_atom_pipeline import wfs_mock
+
+    from op_etl_spark.run import default_connectors
+    from op_etl_spark.sources.wfs import read_wfs
+
+    path = tmp_path / "f.geojson"
+    path.write_text(
+        '{"type": "FeatureCollection", "features": [{"type": "Feature", '
+        '"geometry": {"type": "Point", "coordinates": [15.0, 60.0]}, "properties": {}}]}'
+    )
+    frames = {
+        ("f", "F1"): default_connectors()["file"](
+            spark, {"name": "f", "authority": "F1", "raw": {"paths": [str(path)]}}),
+        ("r", "R1"): read_rest_layer(spark, "http://mock/0", "r", "R1", fetcher=rest_mock),
+        ("o", "O1"): read_collections(
+            spark, OGC_BASE, ["naturreservat"], "o", "O1", fetcher=ogc_mock),
+        ("w", "W1"): read_wfs(
+            spark, "http://mock/wfs", ["ms:naturreservat"], "w", "W1", text_fetcher=wfs_mock),
+    }
+    for want, df in frames.items():
+        got = [tuple(r) for r in df.select("source_name", "authority").distinct().collect()]
+        assert got == [want]

@@ -54,7 +54,7 @@ def test_magnitude_validation(spark):
     got = [
         r[0]
         for r in df.select(
-            magnitude_valid_expr(F.col("x"), F.col("y"), F.col("epsg"))
+            magnitude_valid_expr("x", "y", "epsg")
         ).collect()
     ]
     assert got == [w for *_, w in rows]

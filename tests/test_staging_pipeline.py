@@ -24,14 +24,8 @@ from op_etl_spark.plans.staging import (
     elect_geometry_type,
     stage_features,
     validate_magnitude,
-    write_staged,
 )
-from op_etl_spark.sinks.load import (
-    align_to_template,
-    excluded_by_manifest,
-    gate_by_manifest,
-    truncate_and_load,
-)
+from op_etl_spark.sinks.load import align_to_template
 from op_etl_spark.session import local_frame
 from op_etl_spark.sources.geojson import read_feature_files
 from op_etl_spark.sources.schema import FEATURE_DDL
@@ -152,10 +146,15 @@ def test_parse_and_stage(spark, staged_inputs, tmp_path):
     # bbox recomputed post-reproject
     assert abs(sample.bbox.xmin - float(ex)) < 1e-6
 
-    # staged write partitioned by source
+    # the download step's staged write, partitioned by source
     out = str(tmp_path / "staging")
-    write_staged(staged, out)
-    back = spark.read.parquet(out)
+    pipe = Pipeline(spark, {}, {"file": lambda spark_, src: read_feature_files(
+        spark_, [f for f in files if f["source_name"] == src["name"]])})
+    back = pipe.extract_and_stage(
+        [{"name": f["source_name"], "authority": f["authority"], "type": "file"}
+         for f in files], out)
+    assert sorted(n for n in os.listdir(out) if not n.startswith((".", "_"))) == [
+        "source_name=nvv_skydd", "source_name=raa_fornminnen"]
     assert back.count() == 28
     assert back.filter(F.col("source_name") == "raa_fornminnen").count() == 10
 
@@ -295,26 +294,30 @@ def test_source_with_no_valid_rows_counts_zero(spark, tmp_path):
 
 
 def test_truncate_and_load_with_manifest(spark, staged_inputs, tmp_path):
-    files = [
-        {"path": str(staged_inputs / "nvv_skydd.geojson"),
-         "source_name": "nvv_skydd", "authority": "NVV"},
-        {"path": str(staged_inputs / "raa_fornminnen.json"),
-         "source_name": "raa_fornminnen", "authority": "RAA"},
-    ]
-    staged = stage_features(read_feature_files(spark, files))
-    manifest = spark.createDataFrame([("raa_fornminnen",)], "source_name string")
-
-    gated = gate_by_manifest(staged, manifest)
-    assert gated.select("source_name").distinct().count() == 1
-    excluded = excluded_by_manifest(staged, manifest)
-    assert [r.source_name for r in excluded.select("source_name").distinct().collect()] == ["nvv_skydd"]
-
-    target = str(tmp_path / "sde" / "underlag_raa" / "fornminnen")
-    truncate_and_load(gated, target)
-    assert spark.read.parquet(target).count() == 10
+    # the process step clips nvv_skydd to nothing, so the manifest holds
+    # raa_fornminnen alone: only it is loaded, and a second load of the
+    # same workspace overwrites its target instead of appending
+    cfg = {
+        "sources": [
+            {"name": n, "authority": n.split("_")[0].upper(), "type": "file",
+             "enabled": True} for n in ("nvv_skydd", "raa_fornminnen")
+        ],
+        "geoprocessing": {"aoi_bbox": list(AOI)},
+    }
+    pipe = Pipeline(spark, cfg, {"file": lambda spark_, src: read_feature_files(
+        spark_, _files(staged_inputs, src["name"]))})
+    ws = str(tmp_path / "ws")
+    out = pipe.run(ws)
+    manifest = spark.read.parquet(out["manifest"]).collect()
+    assert [r.source_name for r in manifest] == ["raa_fornminnen"]
+    target = f"{ws}/sde/underlag_raa/raa_fornminnen"
+    assert out["loaded"] == {"raa_fornminnen": target}
+    assert not os.path.exists(f"{ws}/sde/underlag_nvv")
+    assert spark.read.parquet(target).count() == 4
     # idempotent overwrite (truncate semantics)
-    truncate_and_load(gated, target)
-    assert spark.read.parquet(target).count() == 10
+    again = pipe.run(ws, steps=("load",))
+    assert again["loaded"] == {"raa_fornminnen": target}
+    assert spark.read.parquet(target).count() == 4
 
 
 def test_align_to_template_no_test_semantics(spark):
