@@ -7,14 +7,19 @@ nprobe/n_lists of the data and the partition filter never even lists the
 other directories (Spark's FileIndex prunes on the `list_id` partition
 column before any file IO).
 
-Everything is DataFrame-native:
- - k-means (Lloyd) iterations broadcast the tiny centroid set as a
-   literal array-of-arrays column; assignment is argmin over a
-   `transform`-computed distance array (no UDF, no cross join);
- - the update step is the posexplode/groupBy(list, pos) mean — one
-   shuffle per iteration, map-side combined;
+The clustering is the shared k-means kernel (operators/kmeans.py):
+ - each Lloyd round is ONE `partial_sums` job: every task assigns its
+   rows to the nearest centroid and emits per-list int64 tick sums and
+   counts; the driver adds them and forms the tick means (exact, so the
+   centroids do not depend on partitioning);
+ - the stored assignment is a pandas-UDF column around `kmeans.nearest`
+   (the left-fold squared L2, first argmin: ties go to the lowest id);
  - the index layout is plain partitioned parquet + a centroids table, so
    every other operator (compaction, sampling, dedup) composes with it.
+
+A null vector, or one whose length is not the centroids', raises a
+ValueError naming the operator and the column instead of landing in a
+partition no search probes.
 
 Seeding is deterministic (first n_lists vectors in id-hash order), so
 builds are reproducible — the same property the sampling module
@@ -25,9 +30,13 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+from . import kmeans
 from .sampling import hash_unit
 
 VECTORS_DIR = "vectors"
@@ -38,52 +47,74 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
-def _centroid_literal(centroids: list[list[float]]):
-    return F.array(*[F.array(*[F.lit(float(v)) for v in c]) for c in centroids])
+def _seeds(vecs: DataFrame, id_col: str, n: int, caller: str, vec_col: str) -> list[list[float]]:
+    """The first `n` vectors in id-hash order, checked: a non-empty
+    corpus, and seeds that are non-null and all one length."""
+    seeds = [
+        r[vec_col]
+        for r in vecs.orderBy(hash_unit(F.col(id_col), "ivf-seed"), F.col(id_col))
+        .limit(n)
+        .collect()
+    ]
+    if not seeds:
+        raise ValueError("cannot build an IVF index over an empty corpus")
+    if any(v is None or len(v) != len(seeds[0] or ()) for v in seeds):
+        raise kmeans.invalid_vectors(caller, vec_col, None)
+    return [list(v) for v in seeds]
 
 
-def _assign(df: DataFrame, centroids: list[list[float]], vec_col: str) -> DataFrame:
-    """argmin_l ||v - c_l||² as a narrow projection: a distance array via
-    transform over the broadcast centroid literal, then array_position of
-    its min. Ties resolve to the lowest list id (array_position finds the
-    first occurrence)."""
-    cents = _centroid_literal(centroids)
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(F.col(vec_col), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        ),
-    )
-    return df.withColumn(
-        "list_id", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    )
+def _two_level_ids(X: np.ndarray, coarse: np.ndarray, fine: dict[int, np.ndarray]):
+    """(coarse id, fine id) of each row: the nearest coarse centroid, then
+    the nearest centroid of that cell's own sub-codebook."""
+    c = kmeans.nearest(X, coarse)
+    f = np.zeros(len(X), dtype=np.int64)
+    for cell in np.unique(c):
+        m = c == cell
+        f[m] = kmeans.nearest(X[m], fine[int(cell)])
+    return c, f
 
 
-def _lloyd(vecs: DataFrame, centroids: list[list[float]], iters: int) -> list[list[float]]:
-    """Lloyd iterations over `vecs` (must carry `__v`): assign (narrow) ->
-    quantized per-(list, pos) mean (one shuffle) -> collect n_lists tiny
-    rows to the driver. Mean via exact scaled-integer sums (1e-6 quantized
-    values), not F.avg: double summation order varies with partitioning,
-    and ulp-level centroid drift flips boundary vectors between lists —
-    breaking the promised build reproducibility."""
-    q = F.floor(F.col("val") * 1000000 + F.lit(0.5)).cast("long")
-    n_lists = len(centroids)
-    for _ in range(iters):
-        assigned = _assign(vecs, centroids, "__v")
-        rows = (
-            assigned.select("list_id", F.posexplode("__v").alias("pos", "val"))
-            .groupBy("list_id", "pos")
-            .agg((F.sum(q) / F.lit(1000000.0) / F.count(F.lit(1))).alias("m"))
-            .groupBy("list_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pairs"))
-            .select("list_id", F.transform("pairs", lambda s: s["m"]).alias("c"))
-            .collect()
+def _list_id(centroids: list[list[float]]):
+    """Pandas UDF over an array<double> column: the nearest centroid's
+    id, null for a null or misshapen vector."""
+    C = np.asarray(centroids, dtype="float64")
+
+    @F.pandas_udf("int")
+    def _ids(v: pd.Series) -> pd.Series:
+        X, ok = kmeans.matrix(v, C.shape[1])
+        ids = np.zeros(len(v), dtype="int32")
+        ids[ok] = kmeans.nearest(X, C)
+        return pd.Series(ids, dtype="Int32").where(ok)
+
+    return _ids
+
+
+def _with_cells(df: DataFrame, coarse, fine, vec_col: str) -> DataFrame:
+    """`df` plus the (coarse_id, fine_id) of `_two_level_ids`, both null
+    for a null or misshapen vector; one pandas-UDF pass."""
+    C = np.asarray(coarse, dtype="float64")
+    Fc = {c: np.asarray(cl, dtype="float64") for c, cl in fine.items()}
+
+    @F.pandas_udf("struct<coarse_id:int, fine_id:int>")
+    def _ids(v: pd.Series) -> pd.DataFrame:
+        X, ok = kmeans.matrix(v, C.shape[1])
+        c = np.zeros(len(v), dtype="int32")
+        f = np.zeros(len(v), dtype="int32")
+        c[ok], f[ok] = _two_level_ids(X, C, Fc)
+        return pd.DataFrame(
+            {
+                "coarse_id": pd.Series(c, dtype="Int32").where(ok),
+                "fine_id": pd.Series(f, dtype="Int32").where(ok),
+            }
         )
-        updated = {r.list_id: list(r.c) for r in rows}
-        centroids = [updated.get(i, centroids[i]) for i in range(n_lists)]
-    return centroids
+
+    return df.withColumn("__ids", _ids(F.col(vec_col).cast("array<double>"))).select(
+        *df.columns, "__ids.coarse_id", "__ids.fine_id"
+    )
+
+
+def _write_table(spark: SparkSession, rows, schema: str, path: str) -> None:
+    local_frame(spark, rows, schema).coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def build_ivf_index(
@@ -98,45 +129,30 @@ def build_ivf_index(
 
     Layout: {path}/vectors/list_id=K/*.parquet (the corpus, partitioned by
     assigned list) and {path}/centroids/*.parquet (list_id, centroid).
+    `iters` >= 1: the Lloyd rounds are also what checks every vector.
     Returns the final centroids."""
-    vecs = df.select(id_col, F.col(vec_col).cast("array<double>").alias("__v")).persist()
+    if iters < 1:
+        raise ValueError(f"build_ivf_index: iters must be >= 1, got {iters}")
+    vecs = df.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col)).persist()
     try:
-        seeds = (
-            vecs.orderBy(hash_unit(F.col(id_col), "ivf-seed"), F.col(id_col))
-            .limit(n_lists)
-            .collect()
-        )
-        centroids = [list(r["__v"]) for r in seeds]
-        if not centroids:
-            raise ValueError("cannot build an IVF index over an empty corpus")
-        centroids = _lloyd(vecs, centroids, iters)
-
-        final = _assign(
-            df.withColumn("__v", F.col(vec_col).cast("array<double>")), centroids, "__v"
-        )
+        centroids = _seeds(vecs, id_col, n_lists, "build_ivf_index", vec_col)
+        for _ in range(iters):
+            centroids = kmeans.lloyd_round(
+                vecs, vec_col, centroids, caller="build_ivf_index", scale=kmeans.TICK
+            )
         (
-            final.drop("__v")
+            df.withColumn("list_id", _list_id(centroids)(F.col(vec_col).cast("array<double>")))
             .write.mode("overwrite")
             .partitionBy("list_id")
             .parquet(f"{path}/{VECTORS_DIR}")
         )
     finally:
         vecs.unpersist()
-    spark = df.sparkSession
-    cent_structs = [
-        F.struct(
-            F.lit(i).alias("list_id"),
-            F.array(*[F.lit(float(v)) for v in c]).alias("centroid"),
-        )
-        for i, c in enumerate(centroids)
-    ]
-    (
-        spark.range(1)
-        .select(F.explode(F.array(*cent_structs)).alias("s"))
-        .select("s.list_id", "s.centroid")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/{CENTROIDS_DIR}")
+    _write_table(
+        df.sparkSession,
+        list(enumerate(centroids)),
+        "list_id int, centroid array<double>",
+        f"{path}/{CENTROIDS_DIR}",
     )
     return centroids
 
@@ -206,8 +222,8 @@ def ivf_append_batch(
     codebook is frozen — standard IVF maintenance; re-train only when
     drift warrants a rebuild) and append parquet files into exactly the
     touched list partitions. Work is proportional to the batch, never
-    the index: assignment is a narrow projection against the broadcast
-    centroid literal, and `partitionBy(list_id)` append writes only
+    the index: assignment is a narrow projection (`kmeans.nearest` in a
+    pandas UDF), and `partitionBy(list_id)` append writes only
     directories the batch touches — untouched lists keep their files
     byte-identical, so searches probing them see no churn. Returns the
     touched list ids (a bounded |n_lists| collect, for cache
@@ -217,22 +233,17 @@ def ivf_append_batch(
     # the write; without it a non-deterministic batch source could be
     # re-executed differently for each, making the returned touched list
     # disagree with the partitions actually written
-    assigned = _assign(
-        batch.withColumn("__v", F.col(vec_col).cast("array<double>")),
-        centroids,
-        "__v",
+    assigned = batch.withColumn(
+        "list_id", _list_id(centroids)(F.col(vec_col).cast("array<double>"))
     ).persist()
     try:
         touched = [
             r.list_id
             for r in assigned.select("list_id").distinct().orderBy("list_id").collect()
         ]
-        (
-            assigned.drop("__v")
-            .write.mode("append")
-            .partitionBy("list_id")
-            .parquet(f"{path}/{VECTORS_DIR}")
-        )
+        if None in touched:
+            raise kmeans.invalid_vectors("ivf_append_batch", vec_col, len(centroids[0]))
+        assigned.write.mode("append").partitionBy("list_id").parquet(f"{path}/{VECTORS_DIR}")
     finally:
         assigned.unpersist()
     return touched
@@ -255,30 +266,6 @@ CENTROIDS_COARSE_DIR = "centroids_coarse"
 CENTROIDS_FINE_DIR = "centroids_fine"
 
 
-def _assign_fine(df: DataFrame, fine: dict[int, list[list[float]]], vec_col: str) -> DataFrame:
-    """argmin over the row's OWN cell's sub-codebook: a coarse_id-dispatched
-    when-chain of centroid-literal argmins — narrow, no shuffle, and each
-    row evaluates only its matching branch (n_fine distances, not
-    n_coarse*n_fine). With very large n_coarse you would switch this
-    literal dispatch to a broadcast join on coarse_id; the cost contract
-    (n_fine distances per row) is the same."""
-    expr = None
-    for c, cl in sorted(fine.items()):
-        cents = _centroid_literal(cl)
-        dists = F.transform(
-            cents,
-            lambda cc: F.aggregate(
-                F.zip_with(F.col(vec_col), cc, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda s, v: s + v,
-            ),
-        )
-        am = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        cond = F.col("coarse_id") == c
-        expr = F.when(cond, am) if expr is None else expr.when(cond, am)
-    return df.withColumn("fine_id", expr)
-
-
 def build_ivf2_index(
     df: DataFrame,
     path: str,
@@ -292,79 +279,63 @@ def build_ivf2_index(
     {path}/vectors/coarse_id=C/fine_id=F/*.parquet plus two centroid
     tables. Coarse codebook = the same deterministic Lloyd as the flat
     build; fine codebooks are trained for ALL cells at once (seeds via a
-    per-cell row_number window, update via one quantized
-    (coarse, fine, pos) mean shuffle per iteration — never one job per
-    cell). Returns {coarse_id: fine_centroids}."""
+    per-cell row_number window; each round is one `kmeans.partial_sums`
+    job keyed by (coarse, fine) — never one job per cell). `iters` >= 1.
+    Returns {coarse_id: fine_centroids}."""
     from pyspark.sql import Window as W
 
-    vecs = df.select(id_col, F.col(vec_col).cast("array<double>").alias("__v")).persist()
+    caller = "build_ivf2_index"
+    if iters < 1:
+        raise ValueError(f"{caller}: iters must be >= 1, got {iters}")
+    vecs = df.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col)).persist()
     try:
-        seeds = (
-            vecs.orderBy(hash_unit(F.col(id_col), "ivf-seed"), F.col(id_col))
-            .limit(n_coarse)
-            .collect()
-        )
-        coarse = [list(r["__v"]) for r in seeds]
-        if not coarse:
-            raise ValueError("cannot build an IVF index over an empty corpus")
-        coarse = _lloyd(vecs, coarse, iters)
+        coarse = _seeds(vecs, id_col, n_coarse, caller, vec_col)
+        for _ in range(iters):
+            coarse = kmeans.lloyd_round(vecs, vec_col, coarse, caller=caller, scale=kmeans.TICK)
 
-        cvecs = _assign(vecs, coarse, "__v").withColumnRenamed("list_id", "coarse_id")
+        cvecs = vecs.withColumn("coarse_id", _list_id(coarse)(F.col(vec_col)))
         w = W.partitionBy("coarse_id").orderBy(
             hash_unit(F.col(id_col), "ivf2-fine-seed"), F.col(id_col)
         )
         seed_rows = (
             cvecs.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= n_fine)
-            .select("coarse_id", (F.col("rn") - 1).alias("fine_id"), "__v")
+            .select("coarse_id", (F.col("rn") - 1).alias("fine_id"), vec_col)
             .collect()
         )
         fine: dict[int, list[list[float]]] = {}
         for r in sorted(seed_rows, key=lambda r: (r.coarse_id, r.fine_id)):
-            fine.setdefault(r.coarse_id, []).append(list(r["__v"]))
+            fine.setdefault(r.coarse_id, []).append(list(r[vec_col]))
         # a coarse cell empty at build time still needs a sub-codebook:
         # a later frozen-codebook APPEND can assign vectors to it (its
-        # centroid survives Lloyd unchanged), and without a fine branch
-        # those rows would get a NULL fine_id and land in a default
-        # partition. Seed empty cells with their coarse centroid.
+        # centroid survives Lloyd unchanged), and without one those rows
+        # would have no fine_id. Seed empty cells with their coarse centroid.
         for c in range(len(coarse)):
             fine.setdefault(c, [list(coarse[c])])
 
-        q = F.floor(F.col("val") * 1000000 + F.lit(0.5)).cast("long")
+        C = np.asarray(coarse, dtype="float64")
         for _ in range(iters):
-            assigned = _assign_fine(cvecs, fine, "__v")
-            rows = (
-                assigned.select(
-                    "coarse_id", "fine_id", F.posexplode("__v").alias("pos", "val")
-                )
-                .groupBy("coarse_id", "fine_id", "pos")
-                .agg((F.sum(q) / F.lit(1000000.0) / F.count(F.lit(1))).alias("m"))
-                .groupBy("coarse_id", "fine_id")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pairs"))
-                .select(
-                    "coarse_id",
-                    "fine_id",
-                    F.transform("pairs", lambda s: s["m"]).alias("c"),
-                )
-                .collect()
+            Fc = {c: np.asarray(cl, dtype="float64") for c, cl in fine.items()}
+
+            def _key(pdf, X, Fc=Fc):
+                c, f = _two_level_ids(X, C, Fc)
+                return c * n_fine + f, X
+
+            tot = kmeans.partial_sums(
+                vecs.select(vec_col), vec_col, _key, caller=caller, scale=kmeans.TICK,
+                dim=C.shape[1],
             )
-            updated = {(r.coarse_id, r.fine_id): list(r.c) for r in rows}
+            flat = kmeans.combine(
+                tot,
+                scale=kmeans.TICK,
+                prev={c * n_fine + f: v for c, cl in fine.items() for f, v in enumerate(cl)},
+            )
             fine = {
-                c: [updated.get((c, f), cl[f]) for f in range(len(cl))]
-                for c, cl in fine.items()
+                c: [flat[c * n_fine + f] for f in range(len(cl))] for c, cl in fine.items()
             }
 
-        final = _assign_fine(
-            _assign(
-                df.withColumn("__v", F.col(vec_col).cast("array<double>")),
-                coarse,
-                "__v",
-            ).withColumnRenamed("list_id", "coarse_id"),
-            fine,
-            "__v",
-        )
         (
-            final.drop("__v")
+            _with_cells(df, coarse, fine, vec_col)
             .write.mode("overwrite")
             .partitionBy("coarse_id", "fine_id")
             .parquet(f"{path}/{VECTORS_DIR}")
@@ -372,32 +343,17 @@ def build_ivf2_index(
     finally:
         vecs.unpersist()
     spark = df.sparkSession
-    c_structs = [
-        F.struct(F.lit(i).alias("coarse_id"),
-                 F.array(*[F.lit(float(v)) for v in c]).alias("centroid"))
-        for i, c in enumerate(coarse)
-    ]
-    (
-        spark.range(1)
-        .select(F.explode(F.array(*c_structs)).alias("s"))
-        .select("s.coarse_id", "s.centroid")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/{CENTROIDS_COARSE_DIR}")
+    _write_table(
+        spark,
+        list(enumerate(coarse)),
+        "coarse_id int, centroid array<double>",
+        f"{path}/{CENTROIDS_COARSE_DIR}",
     )
-    f_structs = [
-        F.struct(F.lit(c).alias("coarse_id"), F.lit(f).alias("fine_id"),
-                 F.array(*[F.lit(float(v)) for v in cl[f]]).alias("centroid"))
-        for c, cl in sorted(fine.items())
-        for f in range(len(cl))
-    ]
-    (
-        spark.range(1)
-        .select(F.explode(F.array(*f_structs)).alias("s"))
-        .select("s.coarse_id", "s.fine_id", "s.centroid")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/{CENTROIDS_FINE_DIR}")
+    _write_table(
+        spark,
+        [(c, f, v) for c, cl in sorted(fine.items()) for f, v in enumerate(cl)],
+        "coarse_id int, fine_id int, centroid array<double>",
+        f"{path}/{CENTROIDS_FINE_DIR}",
     )
     return fine
 
@@ -468,15 +424,7 @@ def ivf2_append_batch(
     fine, append parquet into exactly the touched (coarse, fine)
     partitions. Same contract as ivf_append_batch."""
     coarse, fine = _load_ivf2_codebooks(spark, path)
-    assigned = _assign_fine(
-        _assign(
-            batch.withColumn("__v", F.col(vec_col).cast("array<double>")),
-            coarse,
-            "__v",
-        ).withColumnRenamed("list_id", "coarse_id"),
-        fine,
-        "__v",
-    ).persist()
+    assigned = _with_cells(batch, coarse, fine, vec_col).persist()
     try:
         touched = [
             (r.coarse_id, r.fine_id)
@@ -485,9 +433,10 @@ def ivf2_append_batch(
             .orderBy("coarse_id", "fine_id")
             .collect()
         ]
+        if (None, None) in touched:
+            raise kmeans.invalid_vectors("ivf2_append_batch", vec_col, len(coarse[0]))
         (
-            assigned.drop("__v")
-            .write.mode("append")
+            assigned.write.mode("append")
             .partitionBy("coarse_id", "fine_id")
             .parquet(f"{path}/{VECTORS_DIR}")
         )

@@ -1,7 +1,7 @@
 """IVF recall gate: recall@k of partition-pruned IVF search against the
 brute-force exact top-k, as an ORACLE-CHECKED query.
 
-The persisted IVF index (operators/ann_index.py:64,144) had build/search/
+The persisted IVF index (operators/ann_index.py) had build/search/
 append tests but no declared recall measurement — this module closes that:
 `ivf_recall_at_k` runs the same pipeline shape END TO END (deterministic
 seeding -> Lloyd iterations -> nearest-centroid assignment -> rank lists
@@ -15,7 +15,8 @@ integer-valued doubles (micro-units). Products are < 1e13 and 64-dim sums
 < 1e15 — all integers below 2^53, so double arithmetic is EXACT and
 argmin/top-k orderings are bit-identical on both engines; the only
 non-integer outputs are sqrt/divide applied to identical inputs.
-Centroid updates round the per-position mean back onto the micro grid.
+Centroid updates are `kmeans.lloyd_round` under the grid rule: the
+per-position mean floored back onto the micro grid.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators import phases
+from ..operators import kmeans, phases
 from ..operators.sampling import hash_unit, hash_unit_sql
 from ..session import local_frame
 from ._util import read_table
@@ -83,102 +84,29 @@ def _cos_np():
 
 
 def _assign_literal(qv: DataFrame, cent_list: list[list[float]]) -> DataFrame:
-    """argmin_list sqdist(q, c) — NARROW, zero shuffles (the earlier
-    join+window form paid two shuffles per Lloyd round for the identical
-    result). Vectorized since round 11 as one pandas-UDF NumPy pass with
-    the n_lists x 64 centroid matrix held executor-local in the task
-    closure: the literal-array formulation evaluated ~8 x 190 interpreted
-    CodegenFallback ops per row per Lloyd pass. Bit-exact because every
-    operand is an exact-integer-valued double (products and partial sums
-    stay integers < 2^53 — summation order cannot round, and the direct
-    (a-b)^2 form equals the expanded |a|^2+|b|^2-2ab literal form
-    exactly), and NumPy's first-argmin reproduces the
-    array_position-of-min / SQL (d, list_id) tie-break."""
+    """argmin_list sqdist(q, c) — NARROW, zero shuffles: one pandas-UDF
+    pass of `kmeans.nearest` with the n_lists x 64 centroid matrix held
+    executor-local in the task closure. Its first argmin reproduces the
+    SQL (d, list_id) tie-break, and on the integer grid every distance is
+    exact, so it equals the oracle's expanded |a|^2+|b|^2-2ab form."""
     C = np.asarray(cent_list, dtype="float64")  # (n_lists, 64)
 
     @F.pandas_udf("int")
     def _amin(q: pd.Series) -> pd.Series:
         if not len(q):
             return pd.Series([], dtype="int32")
-        Q = np.vstack(q.to_numpy())  # (n, 64)
-        diff = Q[:, None, :] - C[None, :, :]
-        return pd.Series(
-            (diff * diff).sum(axis=2).argmin(axis=1).astype("int32")
-        )
+        return pd.Series(kmeans.nearest(np.vstack(q.to_numpy()), C).astype("int32"))
 
     return qv.withColumn("list_id", _amin(F.col("q")))
 
 
-def _lloyd_update(qv: DataFrame, cent_list: list[list[float]]) -> list[list[float]]:
-    """One Lloyd round fused into a SINGLE pass over the vectors: each
-    task assigns its rows with the same NumPy argmin as `_assign_literal`
-    and accumulates per-list partial sums + counts, yielding at most
-    n_lists metadata rows per task (one mapInPandas job — no posexplode
-    of N x 64 value rows, no two-level shuffled aggregation, no second
-    ArrowEvalPython pass shipping assignments back to the JVM). The
-    driver combines the task partials and floors the means back onto the
-    micro grid.
-
-    Bit-exact vs the previous posexplode + groupBy((list_id, pos)) form:
-    assignments reuse the identical argmin expression; every vector
-    component and partial sum is an exact-integer-valued double (< 2^53,
-    the module's quantization discipline — the same envelope F.sum ran
-    under), so summation order cannot round, and
-    floor(sum / count + 0.5) sees the identical operands. Empty lists
-    keep their previous centroid, exactly like the old
-    `updated.get(i, cent_list[i])` fallback."""
-    C = np.asarray(cent_list, dtype="float64")
-    n_lists, dim = C.shape
-
-    def _partials(batches):
-        sums = np.zeros((n_lists, dim))
-        cnts = np.zeros(n_lists, dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.vstack(pdf["q"].to_numpy())
-            diff = Q[:, None, :] - C[None, :, :]
-            a = (diff * diff).sum(axis=2).argmin(axis=1)
-            np.add.at(sums, a, Q)
-            cnts += np.bincount(a, minlength=n_lists)
-        live = np.flatnonzero(cnts)
-        yield pd.DataFrame(
-            {
-                "list_id": pd.Series(live, dtype="int32"),
-                "s": [sums[i] for i in live],
-                "n": pd.Series(cnts[live], dtype="int64"),
-            }
-        )
-
-    rows = (
-        qv.select("q")
-        .mapInPandas(_partials, "list_id int, s array<double>, n bigint")
-        .collect()
-    )
-    tot = np.zeros((n_lists, dim))
-    cnt = np.zeros(n_lists, dtype="int64")
-    for r in rows:
-        tot[r["list_id"]] += np.asarray(r["s"], dtype="float64")
-        cnt[r["list_id"]] += r["n"]
-    return [
-        [float(v) for v in np.floor(tot[i] / cnt[i] + 0.5)]
-        if cnt[i]
-        else cent_list[i]
-        for i in range(n_lists)
-    ]
-
-
 def _assign_residual(qv: DataFrame, cent_list: list[list[float]]) -> DataFrame:
     """(vec_id, list_id, q = vector - centroid[list_id]) in ONE kernel
-    pass — the fused form of `_assign_literal(...).localCheckpoint()`
-    followed by the broadcast-centroid join + zip_with subtraction
-    (guide §2.3/§2.4/§4.2): one pass over the vectors instead of two,
-    one materialization instead of two, no join. Bit-exact: the argmin
-    is the identical NumPy expression `_assign_literal` uses, and the
-    residual subtraction operates on exact-integer-valued doubles
-    (< 2^53, the module's quantization contract), where NumPy and
-    zip_with(x - y) agree bit-for-bit elementwise. Pinned by
-    tests/test_round12_more.py::
+    pass: the assignment (`kmeans.nearest`) and the residual in one pass
+    over the vectors, with no centroid join. The residual subtraction
+    operates on exact-integer-valued doubles (< 2^53, the module's
+    quantization contract), where NumPy and zip_with(x - y) agree
+    bit-for-bit elementwise. Pinned by tests/test_round12_more.py::
     test_fused_assign_residual_matches_retired_formulation."""
     C = np.asarray(cent_list, dtype="float64")  # (n_lists, 64)
 
@@ -187,14 +115,12 @@ def _assign_residual(qv: DataFrame, cent_list: list[list[float]]) -> DataFrame:
             if not len(pdf):
                 continue
             Q = np.vstack(pdf["q"].to_numpy())
-            diff = Q[:, None, :] - C[None, :, :]
-            a = (diff * diff).sum(axis=2).argmin(axis=1)
-            R = Q - C[a]
+            a = kmeans.nearest(Q, C)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "list_id": a.astype("int32"),
-                    "q": list(R),
+                    "q": list(Q - C[a]),
                 }
             )
 
@@ -219,7 +145,8 @@ def _index_tables_core(spark: SparkSession, sf_dir: str):
     cent_list = [list(r.q) for r in seeds]
     for _ in range(RECALL_ITERS):
         with phases.phase("ivf_build", "lloyd"):
-            cent_list = _lloyd_update(qv, cent_list)
+            # one job per round: assignment + per-list grid sums in the kernel
+            cent_list = kmeans.lloyd_round(qv, "q", cent_list, caller="ivf_recall")
     probes = qv.filter(F.col("vec_id") < RECALL_N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("q").alias("pq")
     )
@@ -246,7 +173,7 @@ def ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-probe recall@10 of nprobe=2 IVF search over an 8-list index
     (deterministic seeds, 2 Lloyd rounds) vs the exact cosine top-10 —
     the measured answer to 'what does partition pruning cost in recall?'
-    for the persisted index operator (operators/ann_index.py:144).
+    for the persisted index operator (operators/ann_index.py ivf_search).
 
     Plan shape: see `_index_tables`; centroids live in an 8-row broadcast
     table; the search arms are a broadcast join of the 10-probe set onto

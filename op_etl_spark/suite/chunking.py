@@ -9,11 +9,12 @@ Scale shapes:
  - chunking is a single narrow scan — `sequence()` generates chunk
    starts per row and `slice()` cuts token windows, all inside codegen;
    output rows ≈ corpus_tokens / stride, partition-local, no shuffle.
- - centroids aggregate positionally with EXACT integer arithmetic
-   (floats scaled to 1e6 ticks) so the per-partition partial sums merge
-   to the same bits regardless of row order / partitioning — the same
-   determinism contract as `money_sum`, applied to vectors. The shuffle
-   carries (#labels x dim) partial rows per partition, not raw vectors.
+ - centroids are the shared k-means kernel's label means
+   (operators/kmeans.py) with EXACT integer arithmetic (floats scaled to
+   1e6 ticks), so the per-task partial sums merge to the same bits
+   regardless of row order / partitioning — the same determinism
+   contract as `money_sum`, applied to vectors. Each task sends
+   (#labels) partial rows to the driver, not raw vectors.
 """
 
 from __future__ import annotations
@@ -21,12 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.kmeans import TICK, label_means
+from ..session import local_frame
 from ._util import fround, read_table
 
 CHUNK_TOKENS = 64
 CHUNK_STRIDE = 48
-EMB_DIM = 64
-TICK = 1_000_000  # fixed-point scale for float components
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,27 +83,19 @@ FROM c
 
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label mean embedding, positionally exact: each float component
-    becomes an integer tick count, vectors posexplode to (label, pos,
-    tick) and a plain sum/count aggregate runs per (label, pos). The
-    64x row fanout buys FULL map-side partial aggregation — partials
-    shrink to (#labels x 64) rows per partition before the shuffle, vs.
-    collect_list shipping every vector whole. Exact integer sums make
+    """Per-label mean embedding, positionally exact: one
+    `kmeans.label_means` job sums each label's integer tick vectors per
+    task, and the driver forms the tick means. Exact integer sums make
     the result bit-identical under any partitioning. Emitted as
     (label, pos, mean) scalars so the oracle compares cleanly."""
     emb = read_table(spark, sf_dir, "embeddings", fan=True)
-    ticks = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * TICK + 0.5).cast("long")
-    )
-    ex = emb.select("label", F.posexplode(ticks).alias("pos", "t"))
-    agg = ex.groupBy("label", "pos").agg(
-        F.sum("t").alias("s"), F.count(F.lit(1)).alias("n_vecs")
-    )
-    return agg.select(
-        "label",
-        "n_vecs",
-        "pos",
-        fround(F.col("s") / F.lit(float(TICK)) / F.col("n_vecs"), 6).alias("mean"),
+    rows = [
+        (r["label"], r["n"], pos, m)
+        for r in label_means(emb, "label", "embedding", caller="label_centroids", scale=TICK)
+        for pos, m in enumerate(r["centroid"])
+    ]
+    return local_frame(spark, rows, "label int, n_vecs bigint, pos int, mean double").select(
+        "label", "n_vecs", "pos", fround("mean", 6).alias("mean")
     )
 
 

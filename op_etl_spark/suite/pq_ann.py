@@ -20,9 +20,10 @@ paper. The declared queries measure exactly what that compression costs:
 
 Plan shape at scale: codebooks are 16 x 16 x 4 doubles — literal arrays in
 the plan (the executor-local lookup tables a production ADC scan uses);
-training reuses the deterministic Lloyd discipline of ann_recall.py
-(micro-quantized integer-valued doubles, first-min tie-breaks, means
-floored back onto the grid) independently per subspace; encoding is one
+training is the shared k-means kernel (operators/kmeans.py) under the
+grid rule of ann_recall.py (micro-quantized integer-valued doubles,
+first-min tie-breaks, means floored back onto the grid), all subspaces
+in one job per round; encoding is one
 narrow map over the corpus (zero shuffles); search is a broadcast of the
 10-probe set + per-probe top-k. Nothing corpus-scale is ever collected.
 
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators import phases
+from ..operators import kmeans, phases
 from ..operators.sampling import hash_unit, hash_unit_sql
 from ._util import fround, read_table
 
@@ -104,13 +105,10 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
 def _train_codebooks(
     qv: DataFrame, pipeline: str = "pq_build"
 ) -> list[list[list[float]]]:
-    """codebooks[m][c] = 16-dim codeword c of subspace m. One seed scan
+    """codebooks[m][c] = codeword c of subspace m. One seed scan
     (PQ_KCODES rows by salted-hash order — same discipline as the IVF
-    gate), then PQ_ITERS Lloyd rounds run for ALL subspaces in one
-    DataFrame pass per round: assignment is a literal-codebook argmin per
-    subspace (narrow, zero shuffles); the update is one posexplode +
-    groupBy((m, code, pos)) mean floored back onto the micro grid —
-    16 x 16 x 4 = 1024 result rows, pure metadata.
+    gate), then PQ_ITERS Lloyd rounds for ALL subspaces at once, each one
+    `_lloyd_update_books` job.
 
     `pipeline` labels the driver-blocking phase timings
     (operators/phases.py) so bench decomposes build vs search."""
@@ -130,84 +128,37 @@ def _train_codebooks(
     return books
 
 
+def _codes(X: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(n, M) codes: per subspace, the `kmeans.nearest` codeword of
+    B (M, KCODES, SUBDIM), first minimum — the SQL twin's (d, code) order."""
+    Q = X.reshape(len(X), PQ_M, PQ_SUBDIM)
+    return np.stack([kmeans.nearest(Q[:, m], B[m]) for m in range(PQ_M)], axis=1)
+
+
 def _lloyd_update_books(qv: DataFrame, books) -> list[list[list[float]]]:
-    """One Lloyd round over ALL subspaces fused into a SINGLE pass: each
-    task encodes its rows with the same NumPy argmin as `_encode` and
-    accumulates per-(m, code) partial subvector sums + counts, yielding
-    at most M x KCODES metadata rows per task (one mapInPandas job — no
-    16-way struct explode + posexplode of N x 64 value rows, no shuffled
-    two-key aggregation, no separate ArrowEvalPython encode pass per
-    round). The driver combines the task partials and floors the means
-    back onto the micro grid.
-
-    Bit-exact vs the previous explode + groupBy((m, code, pos)) form:
-    codes reuse the identical argmin expression; every subvector
-    component and partial sum is an exact-integer-valued double (< 2^53,
-    the module's quantization discipline — the same envelope F.sum ran
-    under), so summation order cannot round, and floor(sum/count + 0.5)
-    sees identical operands. A (m, code) cell with zero members keeps
-    its previous codeword, exactly like the old per-position
-    `upd.get(...).get(p, books[m][c][p])` fallback (a present cell always
-    carried all SUBDIM positions, so the fallbacks coincide)."""
+    """One Lloyd round over ALL subspaces in one kernel job: each
+    subvector is keyed by (subspace m, its code) as m * KCODES + code,
+    and each codeword moves to its members' mean floored back onto the
+    micro grid. A codeword with no members keeps its previous value."""
     B = np.asarray(books, dtype="float64")  # (M, KCODES, SUBDIM)
+    base = np.arange(PQ_M) * PQ_KCODES
 
-    def _partials(batches):
-        sums = np.zeros((PQ_M, PQ_KCODES, PQ_SUBDIM))
-        cnts = np.zeros((PQ_M, PQ_KCODES), dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.vstack(pdf["q"].to_numpy()).reshape(len(pdf), PQ_M, PQ_SUBDIM)
-            diff = Q[:, :, None, :] - B[None, :, :, :]  # (n, M, K, S)
-            codes = (diff * diff).sum(axis=3).argmin(axis=2)  # (n, M)
-            for m in range(PQ_M):
-                np.add.at(sums[m], codes[:, m], Q[:, m, :])
-                cnts[m] += np.bincount(codes[:, m], minlength=PQ_KCODES)
-        m_idx, c_idx = np.nonzero(cnts)
-        yield pd.DataFrame(
-            {
-                "m": pd.Series(m_idx, dtype="int32"),
-                "code": pd.Series(c_idx, dtype="int32"),
-                "s": [sums[m, c] for m, c in zip(m_idx, c_idx)],
-                "n": pd.Series(cnts[m_idx, c_idx], dtype="int64"),
-            }
-        )
+    def _key(pdf, X):
+        return (base + _codes(X, B)).ravel(), X.reshape(-1, PQ_SUBDIM)
 
-    rows = (
-        qv.select("q")
-        .mapInPandas(_partials, "m int, code int, s array<double>, n bigint")
-        .collect()
+    tot = kmeans.partial_sums(
+        qv.select("q"), "q", _key, caller="pq _lloyd_update_books", dim=PQ_M * PQ_SUBDIM
     )
-    tot = np.zeros((PQ_M, PQ_KCODES, PQ_SUBDIM))
-    cnt = np.zeros((PQ_M, PQ_KCODES), dtype="int64")
-    for r in rows:
-        tot[r["m"], r["code"]] += np.asarray(r["s"], dtype="float64")
-        cnt[r["m"], r["code"]] += r["n"]
-    return [
-        [
-            [float(v) for v in np.floor(tot[m, c] / cnt[m, c] + 0.5)]
-            if cnt[m, c]
-            else books[m][c]
-            for c in range(PQ_KCODES)
-        ]
-        for m in range(PQ_M)
-    ]
+    flat = kmeans.combine(
+        tot, prev={m * PQ_KCODES + c: w for m, b in enumerate(books) for c, w in enumerate(b)}
+    )
+    return [[flat[m * PQ_KCODES + c] for c in range(PQ_KCODES)] for m in range(PQ_M)]
 
 
 def _encode(qv: DataFrame, books) -> DataFrame:
-    """Add code columns c0..c{M-1}: per-subspace argmin over the codebook
-    (first minimum — matches the SQL twin's (d, code) order).
-
-    Vectorized as ONE pandas-UDF pass holding the (M, K, SUBDIM) codebook
-    tensor executor-local (shipped once with the task closure — the same
-    lookup-table locality the old literal-array plan had, without the
-    interpreted CodegenFallback fold that evaluated each multiply-add
-    through the expression interpreter: M*K*SUBDIM ~ 1k interpreted ops
-    per row per argmin column). Bit-exact because every operand is an
-    exact-integer-valued double on the micro grid: products and partial
-    sums stay integers < 2^53, so summation order cannot round, and
-    NumPy's first-argmin reproduces the array_position-of-min tie-break
-    over the code-ordered codebook."""
+    """Add code columns c0..c{M-1} (`_codes`) in ONE pandas-UDF pass
+    holding the (M, K, SUBDIM) codebook tensor executor-local (shipped
+    once with the task closure)."""
     B = np.asarray(books, dtype="float64")  # (M, KCODES, SUBDIM)
 
     @F.pandas_udf(
@@ -215,15 +166,13 @@ def _encode(qv: DataFrame, books) -> DataFrame:
             [T.StructField(f"c{m}", T.IntegerType()) for m in range(PQ_M)]
         )
     )
-    def _codes(q: pd.Series) -> pd.DataFrame:
+    def _codes_udf(q: pd.Series) -> pd.DataFrame:
         if not len(q):
             return pd.DataFrame({f"c{m}": pd.Series([], dtype="int32") for m in range(PQ_M)})
-        Q = np.vstack(q.to_numpy()).reshape(len(q), PQ_M, PQ_SUBDIM)
-        diff = Q[:, :, None, :] - B[None, :, :, :]  # (n, M, K, S)
-        codes = (diff * diff).sum(axis=3).argmin(axis=2).astype("int32")
+        codes = _codes(np.vstack(q.to_numpy()), B).astype("int32")
         return pd.DataFrame({f"c{m}": codes[:, m] for m in range(PQ_M)})
 
-    out = qv.withColumn("__codes", _codes(F.col("q")))
+    out = qv.withColumn("__codes", _codes_udf(F.col("q")))
     return out.select(
         *qv.columns, *[F.col(f"__codes.c{m}").alias(f"c{m}") for m in range(PQ_M)]
     )

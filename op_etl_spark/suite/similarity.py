@@ -20,6 +20,7 @@ import math
 import numpy as np
 import pandas as pd
 
+from ..operators import kmeans
 from ..session import local_frame
 from ._util import dot_fold as _dot, fround, norm_fold, read_table
 
@@ -105,18 +106,18 @@ FROM ranked WHERE rk <= {TOP_K}
 # --- IVF-style: per-label centroids, rank centroids per probe ---
 
 def ivf_centroid_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per probe, the 2 label centroids (exact tick means, one
+    `kmeans.label_means` job) with the highest cosine."""
     e = _emb(spark, sf_dir)
-    pos = e.select("label", F.posexplode("emb").alias("pos", "val"))
-    cent = (
-        pos.groupBy("label", "pos")
-        .agg((F.sum(F.floor(F.col("val") * 1000000 + F.lit(0.5)).cast("long"))
-              / F.lit(1000000.0) / F.count(F.lit(1))).alias("cval"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cval"))).alias("pairs"))
-        .select(
-            F.col("label").alias("c_label"),
-            F.transform(F.col("pairs"), lambda s: s["cval"]).alias("centroid"),
-        )
+    cent = local_frame(
+        spark,
+        [
+            (r["label"], r["centroid"])
+            for r in kmeans.label_means(
+                e, "label", "emb", caller="ivf_centroid_rank", scale=kmeans.TICK
+            )
+        ],
+        "c_label int, centroid array<double>",
     )
     probes = e.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("emb").alias("p_emb")
@@ -551,73 +552,6 @@ SEMDEDUP_TAU = 0.35  # within-cluster cosine above this marks a semantic dup
 SEMDEDUP_FLAT_K_MAX = 128
 
 
-def _semdedup_centroids(e: DataFrame) -> list:
-    """Exact per-label tick-mean centroids, collected as k rows of driver
-    metadata (sorted by label). The suite's reproducible stand-in for
-    trained k-means centroids — identical arithmetic on both engines, so
-    the oracle replicates it bit-for-bit.
-
-    Fused into ONE mapInPandas pass (the §2.3 discipline every other
-    centroid/Lloyd build in the suite now uses): each task quantizes its
-    rows to the integer tick grid and accumulates per-label partial tick
-    sums + counts as int64 — at most k metadata rows per task, no
-    posexplode of N x d value rows, no two-level shuffled aggregation.
-    The driver combines partials and divides exactly like the retired
-    groupBy chain: tick sums are exact int64 on both formulations (same
-    wrap envelope as Spark's long sum), and
-    float(total) / 1000000.0 / count reproduces Spark's
-    `sum(ticks) / lit(1000000.0) / count(1)` operand-for-operand (the
-    long -> double cast rounds identically), so every cval is the same
-    double the retired chain produced."""
-
-    def _partials(batches):
-        sums: dict = {}
-        cnts: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.vstack(pdf["emb"].to_numpy())
-            T = np.floor(E * 1000000 + 0.5).astype("int64")
-            lab = pdf["label"].to_numpy()
-            for lb in np.unique(lab):
-                m = lab == lb
-                lb = int(lb)
-                if lb in sums:
-                    sums[lb] += T[m].sum(axis=0)
-                    cnts[lb] += int(m.sum())
-                else:
-                    sums[lb] = T[m].sum(axis=0)
-                    cnts[lb] = int(m.sum())
-        labs = sorted(sums)
-        yield pd.DataFrame(
-            {
-                "label": pd.Series(labs, dtype="int64"),
-                "s": [sums[lb] for lb in labs],
-                "n": pd.Series([cnts[lb] for lb in labs], dtype="int64"),
-            }
-        )
-
-    rows = (
-        e.select("label", "emb")
-        .mapInPandas(_partials, "label bigint, s array<bigint>, n bigint")
-        .collect()
-    )
-    tot: dict[int, list] = {}
-    cnt: dict[int, int] = {}
-    for r in rows:
-        lb = r["label"]
-        s = [int(v) for v in r["s"]]
-        tot[lb] = [a + b for a, b in zip(tot[lb], s)] if lb in tot else s
-        cnt[lb] = cnt.get(lb, 0) + r["n"]
-    return [
-        {
-            "label": lb,
-            "centroid": [float(v) / 1000000.0 / cnt[lb] for v in tot[lb]],
-        }
-        for lb in sorted(tot)
-    ]
-
-
 def _pydot(a, b):
     acc = 0.0
     for x, y in zip(a, b):  # left fold = F.aggregate's order, bit-identical
@@ -918,7 +852,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines, so the oracle replicates it bit-for-bit).
 
     100 TB shape: the centroid table is k rows of driver-side metadata
-    (collected once — the ann_index `_assign` pattern), so assignment is
+    (collected once, as ann_index collects its centroids), so assignment is
     a NARROW projection: the corpus never shuffles to pick its cluster.
     While k is driver-scale the centroids bake into the plan as literals;
     past SEMDEDUP_FLAT_K_MAX (SemDeDup's own regime scales k with corpus
@@ -938,7 +872,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _emb(spark, sf_dir)
     with phases.phase("semantic_dedup", "centroids"):
-        cent_rows = _semdedup_centroids(e)
+        cent_rows = kmeans.label_means(
+            e, "label", "emb", caller="semantic_dedup", scale=kmeans.TICK
+        )
     # zero-norm guard (mirrored in the oracle): Spark's Divide NULLs on
     # x/0.0 while DuckDB follows IEEE (inf/NaN) — degenerate vectors and
     # degenerate centroids are excluded on BOTH engines so the declared
@@ -1048,63 +984,6 @@ SEM2_K = 160
 SEM2_QSCALE = 1_000_000
 
 
-def _label_centroids_np(en: DataFrame, k: int) -> list[dict]:
-    """Per-label floored-mean centroids over the SEM2 integer grid, fused
-    into a SINGLE pass: each task accumulates per-label partial sums +
-    counts with NumPy and yields at most k metadata rows (no posexplode
-    of N x d value rows, no two-level shuffled aggregation). The driver
-    combines partials and floors the means back onto the grid —
-    identical operands to the retired
-    groupBy((label, pos)).floor(sum/count + 0.5) chain: every component
-    and partial sum is an exact-integer-valued double < 2^53 (the
-    SEM2_QSCALE discipline), so summation order cannot round. Labels
-    with no rows are simply absent, exactly like the retired groupBy.
-    Returns label-sorted [{'label', 'centroid'}] rows."""
-
-    def _partials(batches):
-        sums = None
-        cnts = np.zeros(k, dtype="int64")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.vstack(pdf["emb"].to_numpy())
-            if sums is None:
-                sums = np.zeros((k, E.shape[1]))
-            lab = pdf["label"].to_numpy()
-            np.add.at(sums, lab, E)
-            cnts += np.bincount(lab, minlength=k)
-        live = np.flatnonzero(cnts)
-        if sums is None:
-            sums = np.zeros((k, 0))
-        yield pd.DataFrame(
-            {
-                "label": pd.Series(live, dtype="int32"),
-                "s": [sums[i] for i in live],
-                "n": pd.Series(cnts[live], dtype="int64"),
-            }
-        )
-
-    rows = (
-        en.select("label", "emb")
-        .mapInPandas(_partials, "label int, s array<double>, n bigint")
-        .collect()
-    )
-    tot: dict[int, np.ndarray] = {}
-    cnt: dict[int, int] = {}
-    for r in rows:
-        lb = r["label"]
-        s = np.asarray(r["s"], dtype="float64")
-        tot[lb] = tot[lb] + s if lb in tot else s
-        cnt[lb] = cnt.get(lb, 0) + r["n"]
-    return [
-        {
-            "label": lb,
-            "centroid": [float(v) for v in np.floor(tot[lb] / cnt[lb] + 0.5)],
-        }
-        for lb in sorted(tot)
-    ]
-
-
 def semantic_assign_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checked gate for the coarse->fine two-level assignment
     (_assign_two_level) — the path SemDeDup's k~N regime runs at scale,
@@ -1142,7 +1021,7 @@ def semantic_assign_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("nrm", _norm(F.col("emb")))
         .filter(F.col("nrm") > 0)
     )
-    cent_rows = _label_centroids_np(en, SEM2_K)
+    cent_rows = kmeans.label_means(en, "label", "emb", caller="semantic_assign_two_level")
     cent_rows = [r for r in cent_rows if _pydot(r["centroid"], r["centroid"]) > 0]
     if len(cent_rows) != SEM2_K:
         # the oracle bakes k (seed positions, n_coarse) as constants; a

@@ -140,17 +140,15 @@ class TestIncrementalAppend:
 
         # frozen codebook: appended vectors sit in the argmin list of the
         # ORIGINAL centroids (spot-check via a fresh assignment)
-        from op_etl_spark.operators.ann_index import _assign
+        import numpy as np
 
-        expected = _assign(
-            batch.withColumn("__v", F.col("embedding").cast("array<double>")),
-            centroids,
-            "__v",
-        ).select("vec_id", "list_id")
+        from op_etl_spark.operators.kmeans import nearest
+
+        rows = batch.select("vec_id", "embedding").collect()
+        X = np.array([r.embedding for r in rows], dtype="float64")
+        expected = zip([r.vec_id for r in rows], nearest(X, np.array(centroids)).tolist())
         got = allv.join(batch.select("vec_id"), "vec_id").select("vec_id", "list_id")
-        assert {(r.vec_id, r.list_id) for r in got.collect()} == {
-            (r.vec_id, r.list_id) for r in expected.collect()
-        }
+        assert {(r.vec_id, r.list_id) for r in got.collect()} == set(expected)
 
         # search still finds an appended vector as its own nearest neighbor
         target = batch.orderBy("vec_id").limit(1).collect()[0]

@@ -19,6 +19,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from op_etl_spark.operators import kmeans
 from op_etl_spark.suite import similarity as S
 
 SF = "/root/testdata/sf0.001"
@@ -34,7 +35,7 @@ def _assignments(df):
 @pytest.fixture(scope="module")
 def cent_and_corpus(spark):
     e = S._emb(spark, SF)
-    cent = S._semdedup_centroids(e)
+    cent = kmeans.label_means(e, "label", "emb", caller="test", scale=kmeans.TICK)
     en = e.withColumn("nrm", S._norm(F.col("emb"))).filter(F.col("nrm") > 0)
     return cent, en
 

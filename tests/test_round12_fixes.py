@@ -1,8 +1,9 @@
 """Round-12 pins.
 
 ANN builds:
-- the fused single-pass Lloyd update (mapInPandas partial sums) must
-  reproduce the retired posexplode + groupBy floored means BIT-EXACTLY,
+- the k-means kernel's Lloyd round (operators/kmeans.py: one
+  mapInPandas partial-sums job) must reproduce the retired posexplode +
+  groupBy floored means BIT-EXACTLY,
   including the empty-list / empty-codeword fallback to the previous
   centroid.
 Two-level routing:
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-# --- fused Lloyd round (ann_recall._lloyd_update) ---
+# --- fused Lloyd round (kmeans.lloyd_round, as the IVF recall gates run it) ---
 
 
 def _retired_ivf_lloyd(qv, cent_list):
@@ -52,12 +53,9 @@ def _retired_ivf_lloyd(qv, cent_list):
 
 
 def test_fused_ivf_lloyd_matches_retired_formulation(spark):
+    from op_etl_spark.operators.kmeans import lloyd_round
     from op_etl_spark.operators.sampling import hash_unit
-    from op_etl_spark.suite.ann_recall import (
-        RECALL_N_LISTS,
-        _lloyd_update,
-        _quantized,
-    )
+    from op_etl_spark.suite.ann_recall import RECALL_N_LISTS, _quantized
 
     qv = _quantized(spark, SF).localCheckpoint()
     seeds = (
@@ -67,7 +65,7 @@ def test_fused_ivf_lloyd_matches_retired_formulation(spark):
     )
     cents = [list(r.q) for r in seeds]
     for _ in range(2):  # two rounds: exercises the updated-centroid input
-        new = _lloyd_update(qv, cents)
+        new = lloyd_round(qv, "q", cents, caller="test")
         want = _retired_ivf_lloyd(qv, cents)
         assert new == want  # bit-exact doubles, list for list
         cents = new
@@ -76,13 +74,14 @@ def test_fused_ivf_lloyd_matches_retired_formulation(spark):
 def test_fused_ivf_lloyd_keeps_empty_list_centroid(spark):
     """A centroid so far away that no row assigns to it must survive a
     round unchanged (the retired updated.get(i, cent_list[i]) fallback)."""
-    from op_etl_spark.suite.ann_recall import _lloyd_update, _quantized
+    from op_etl_spark.operators.kmeans import lloyd_round
+    from op_etl_spark.suite.ann_recall import _quantized
 
     qv = _quantized(spark, SF).localCheckpoint()
     dim = len(qv.first()["q"])
     near = list(qv.first()["q"])
     far = [1e12] * dim
-    out = _lloyd_update(qv, [near, far])
+    out = lloyd_round(qv, "q", [near, far], caller="test")
     assert out[1] == far  # empty list: previous centroid kept
     assert out[0] != near  # every row landed here: mean recomputed
 
@@ -192,13 +191,15 @@ def sem2_en(spark):
 
 
 def test_fused_label_centroids_match_retired_formulation(spark, sem2_en):
-    """_label_centroids_np (single-pass partial sums) must reproduce the
-    retired posexplode + groupBy((label, pos)) floored means bit-exactly
-    — sem2_en's fixture centroids ARE that retired chain's output."""
+    """kmeans.label_means on the grid (single-pass partial sums) must
+    reproduce the retired posexplode + groupBy((label, pos)) floored
+    means bit-exactly — sem2_en's fixture centroids ARE that retired
+    chain's output."""
+    from op_etl_spark.operators.kmeans import label_means
     from op_etl_spark.suite import similarity as S
 
     en, want_rows = sem2_en
-    got = S._label_centroids_np(en, S.SEM2_K)
+    got = label_means(en, "label", "emb", caller="test")
     got = [r for r in got if S._pydot(r["centroid"], r["centroid"]) > 0]
     assert [(r["label"], list(r["centroid"])) for r in got] == [
         (r["label"], list(r["centroid"])) for r in want_rows
@@ -440,16 +441,17 @@ def test_robust_pair_matches_retired_scored_chain(spark):
     assert got == {k: (want_med[k], want_mad[k]) for k in want_med}
 
 
-# --- fused semdedup tick-mean centroid build (_semdedup_centroids) ---
+# --- fused semdedup tick-mean centroid build (kmeans.label_means, ticks) ---
 
 
 def test_fused_semdedup_centroids_match_retired_formulation(spark):
     """The mapInPandas partial-tick-sums build must reproduce the retired
     posexplode + groupBy((label, pos)) tick-mean chain BIT-EXACTLY."""
+    from op_etl_spark.operators.kmeans import TICK, label_means
     from op_etl_spark.suite import similarity as S
 
     e = S._emb(spark, SF)
-    got = S._semdedup_centroids(e)
+    got = label_means(e, "label", "emb", caller="test", scale=TICK)
 
     want = [
         {"label": r["label"], "centroid": list(r["centroid"])}

@@ -642,10 +642,11 @@ def semantic_assign_probe(spark, scaled: str) -> dict:
     implementations over the same corpus so the ~sqrt(k) claim is a
     measured number, not a cost-model citation. (Assignment only: the
     pair join downstream is identical either way.)"""
+    from op_etl_spark.operators import kmeans
     from op_etl_spark.suite import similarity as S
 
     e = S._emb(spark, scaled)
-    cent = S._semdedup_centroids(e)
+    cent = kmeans.label_means(e, "label", "emb", caller="semantic_assign_probe", scale=kmeans.TICK)
     en = e.withColumn("nrm", S._norm(F.col("emb"))).filter(F.col("nrm") > 0)
     k = len(cent)
     n_coarse = max(2, __import__("math").isqrt(k - 1) + 1)
