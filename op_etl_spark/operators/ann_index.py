@@ -35,16 +35,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import ensure_shipped, local_frame
+from ..suite._util import dot_fold
 from . import kmeans
 from .sampling import hash_unit
 
 VECTORS_DIR = "vectors"
 CENTROIDS_DIR = "centroids"
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
 def _seeds(vecs: DataFrame, id_col: str, n: int, caller: str, vec_col: str) -> list[list[float]]:
@@ -78,6 +75,7 @@ def _list_id(centroids: list[list[float]]):
     """Pandas UDF over an array<double> column: the nearest centroid's
     id, null for a null or misshapen vector."""
     C = np.asarray(centroids, dtype="float64")
+    ensure_shipped(SparkSession.active())  # the UDF calls kmeans by reference
 
     @F.pandas_udf("int")
     def _ids(v: pd.Series) -> pd.Series:
@@ -94,6 +92,7 @@ def _with_cells(df: DataFrame, coarse, fine, vec_col: str) -> DataFrame:
     for a null or misshapen vector; one pandas-UDF pass."""
     C = np.asarray(coarse, dtype="float64")
     Fc = {c: np.asarray(cl, dtype="float64") for c, cl in fine.items()}
+    ensure_shipped(df.sparkSession)  # the UDF calls kmeans by reference
 
     @F.pandas_udf("struct<coarse_id:int, fine_id:int>")
     def _ids(v: pd.Series) -> pd.DataFrame:
@@ -163,10 +162,10 @@ def _cosine_to_query(query: list[float], qn: float, vec_col: str):
     raising DIVIDE_BY_ZERO under ANSI mode."""
     qcol = F.array(*[F.lit(float(v)) for v in query])
     emb = F.col(vec_col).cast("array<double>")
-    nrm = F.sqrt(_dot(emb, emb))
+    nrm = F.sqrt(dot_fold(emb, emb))
     if qn <= 0:
         return F.lit(-1.0)
-    return F.when(nrm > 0, _dot(emb, qcol) / (nrm * F.lit(qn))).otherwise(F.lit(-1.0))
+    return F.when(nrm > 0, dot_fold(emb, qcol) / (nrm * F.lit(qn))).otherwise(F.lit(-1.0))
 
 
 def load_centroids(spark: SparkSession, path: str) -> list[list[float]]:

@@ -1,7 +1,8 @@
-"""The one k-means kernel: nearest-centroid assignment, per-key partial
-sums, and the driver-side means. The IVF/IVF2 index builds
-(operators/ann_index.py) and every centroid gate in suite/ (IVF, PQ and
-IVFPQ recall, the label centroids, SemDeDup) call it.
+"""The one k-means kernel: nearest-centroid assignment (by L2 and by
+cosine), per-key partial sums, and the driver-side means. The IVF/IVF2
+index builds (operators/ann_index.py) and every centroid gate in suite/
+(IVF, PQ and IVFPQ recall, the label centroids, SemDeDup, the semantic
+decontamination) call it.
 
 - `nearest(X, C)` is the first argmin over centroids of the squared L2
   distance, summed as a LEFT FOLD over the dimensions. That is the order
@@ -9,6 +10,13 @@ IVFPQ recall, the label centroids, SemDeDup) call it.
   same doubles on any input. NumPy's `.sum(axis=...)` sums pairwise and
   differs at the last ulp off the integer grid. Ties go to the lowest
   centroid id, as `ORDER BY d, id` does in the oracles.
+- `cosine_argmax(X, C)` is the first argmax of `dot / (|x| * |c|)`, the
+  dot and both squared norms left folds over the dimensions: the doubles
+  of Spark's `dot_fold(x, c) / (norm_fold(x) * norm_fold(c))` and of
+  DuckDB's `list_dot_product`, on any input. Ties go to the lowest
+  centroid index, as `ORDER BY cos DESC, id` does in the oracles; it can
+  also return the runner-up. `cosine_assign` runs a batch function built
+  on it as one `mapInPandas` pass.
 - `partial_sums` is one `mapInPandas` job. Each task keys its rows with
   the caller's `key` function and emits, per key, the int64 sum of the
   keyed vectors and their count. The driver adds the task partials; they
@@ -31,6 +39,9 @@ from typing import Callable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from ..session import ensure_shipped
 
 TICK = 1_000_000
 _GRID_LIMIT = 2.0**53
@@ -48,6 +59,74 @@ def nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
         d = X[:, j, None] - C[None, :, j]
         acc += d * d
     return acc.argmin(axis=1)
+
+
+def _dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(len(A), len(B)) dot products, each a left fold over the dimensions."""
+    acc = np.zeros((len(A), len(B)))
+    for j in range(A.shape[1]):
+        acc += A[:, j, None] * B[None, :, j]
+    return acc
+
+
+def _norms(A: np.ndarray) -> np.ndarray:
+    acc = np.zeros(len(A))
+    for j in range(A.shape[1]):
+        acc += A[:, j] * A[:, j]
+    return np.sqrt(acc)
+
+
+def cosine_argmax(X: np.ndarray, C: np.ndarray, runner_up: bool = False) -> tuple:
+    """(best, cos): row i's most cosine-similar row of C, the first argmax
+    (ties go to the lowest index), and that cosine. A zero-norm row or
+    centroid scores -1.0. With `runner_up`, a third array holds the
+    second best index by the same rule (-1 when C has one row)."""
+    den = _norms(X)[:, None] * _norms(C)[None, :]
+    cos = np.divide(_dots(X, C), den, out=np.full(den.shape, -1.0), where=den > 0)
+    rows = np.arange(len(X))
+    best = cos.argmax(axis=1)
+    out = (best, cos[rows, best])
+    if not runner_up:
+        return out
+    if len(C) < 2:
+        return out + (np.full(len(X), -1),)
+    cos[rows, best] = -np.inf
+    return out + (cos.argmax(axis=1),)
+
+
+def cosine_assign(
+    df: DataFrame,
+    vec_col: str,
+    best: Callable[[np.ndarray], tuple[np.ndarray, np.ndarray]],
+    dim: int,
+    *,
+    caller: str,
+    keep: list[str],
+    out: tuple[str, str],
+) -> DataFrame:
+    """One `mapInPandas` pass: the `keep` columns of `df` plus the two
+    `out` columns (bigint id, double cosine) that `best` gives for each
+    batch of `vec_col` as an (n, dim) matrix. A null or misshapen vector
+    raises `invalid_vectors`. The matrices `best` closes over ride the
+    task closure, which PySpark broadcasts once it passes 1 MB. The
+    optimizer cannot push a filter below the pass, so no plan evaluates
+    it twice."""
+    id_col, cos_col = out
+
+    def _task(batches):
+        for pdf in batches:
+            X, ok = matrix(pdf[vec_col], dim)
+            if not ok.all():
+                raise invalid_vectors(caller, vec_col, dim)
+            ids, cos = best(X)
+            yield pdf[keep].assign(**{id_col: np.asarray(ids, dtype=np.int64), cos_col: cos})
+
+    schema = StructType(
+        [df.schema[c] for c in keep]
+        + [StructField(id_col, LongType()), StructField(cos_col, DoubleType())]
+    )
+    ensure_shipped(df.sparkSession)  # the task calls this module by reference
+    return df.mapInPandas(_task, schema)
 
 
 def matrix(v: pd.Series, dim: int | None) -> tuple[np.ndarray, np.ndarray]:
@@ -123,6 +202,7 @@ def partial_sums(
             }
         )
 
+    ensure_shipped(df.sparkSession)  # the task calls this module by reference
     rows = df.mapInPandas(_task, "key bigint, s array<bigint>, n bigint").collect()
     tot: dict[int, tuple[np.ndarray, int]] = {}
     for r in rows:

@@ -86,8 +86,3 @@ def rollup_by_source_type(metrics: DataFrame) -> DataFrame:
         )
     )
     return base.join(errs, "source_type", "left")
-
-
-def write_summary(metrics: DataFrame, path: str) -> None:
-    """K5 metrics sink: one JSON summary per run."""
-    rollup_by_source_type(metrics).coalesce(1).write.mode("overwrite").json(path)

@@ -31,6 +31,11 @@ from pyspark.sql.window import Window
 
 from ..session import local_frame
 
+# grouped_rows_at_rank collects (partition x group) counts and filters on
+# one predicate per group; above this many groups, grouped_row_index is
+# the operator to use
+MAX_RANK_GROUPS = 1000
+
 
 def _ranged_with_offsets(
     df: DataFrame, cols: list[str], num_parts: int | None = None
@@ -175,6 +180,11 @@ def grouped_rows_at_rank(
     by_group: dict[tuple, list] = {}
     for r in rows:
         by_group.setdefault(tuple(r[g] for g in gcols), []).append(r)
+    if len(by_group) > MAX_RANK_GROUPS:
+        raise ValueError(
+            f"grouped_rows_at_rank: {len(by_group)} groups, more than "
+            f"{MAX_RANK_GROUPS}; use grouped_row_index for many groups"
+        )
     counts = {k: sum(r["__n"] for r in rs) for k, rs in by_group.items()}
     # Locate each group's global rank inside the contiguous run of
     # (partition, group) blocks — identical offset algebra to

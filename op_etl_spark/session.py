@@ -153,25 +153,3 @@ def read_events(spark: SparkSession, sf_dir: str):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     cache[sf_dir] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Register the synthetic test tables as temp views; return dict of DFs."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    dfs = {}
-    for n in names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        df.createOrReplaceTempView(n)
-        dfs[n] = df
-    return dfs

@@ -1,4 +1,4 @@
-"""Stream-stream and stream-static joins.
+"""Stream-stream joins.
 
 The reference has no streaming surface (SURVEY.md §2.12); these are the
 extension operators a continuous ingest pipeline needs to correlate two
@@ -94,10 +94,3 @@ def attribute_purchases_to_clicks(
     if observe_as and counters.is_enabled() and not out.isStreaming:
         out = counters.observe_stage(out, observe_as, "output")
     return out
-
-
-def enrich_stream_with_dimension(stream: DataFrame, dim: DataFrame, key: str) -> DataFrame:
-    """Stream-static join: each micro-batch hash-joins against the (small,
-    broadcastable) dimension snapshot — re-resolved per batch, so a
-    refreshed dimension table is picked up without restarting the query."""
-    return stream.join(F.broadcast(dim), key, "left")

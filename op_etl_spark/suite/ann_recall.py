@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..operators import kmeans, phases
 from ..operators.sampling import hash_unit, hash_unit_sql
 from ..session import local_frame
-from ._util import read_table
+from ._util import dot_fold, read_table
 
 RECALL_N_LISTS = 8
 RECALL_ITERS = 2
@@ -38,12 +38,6 @@ RECALL_NPROBE = 2
 RECALL_K = 10
 RECALL_N_PROBES = 10  # probe set: vec_id < 10
 _QSCALE = 1_000_000
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
-    )
 
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,7 +51,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sqdist(a, b):
     # |a|^2 + |b|^2 - 2 a.b — every term exact on integer-valued doubles
-    return _dot(a, a) + _dot(b, b) - 2 * _dot(a, b)
+    return dot_fold(a, a) + dot_fold(b, b) - 2 * dot_fold(a, b)
 
 
 def _cos_np():

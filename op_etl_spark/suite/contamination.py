@@ -28,10 +28,12 @@ Three operators every large-scale LLM data pipeline runs before training:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import dot_fold, fround, norm_fold, read_table
+from ._util import fround, norm_fold, read_table
+from ..operators import kmeans
 from ..operators.sampling import hash_unit, hash_unit_sql
 
 NGRAM_N = 5
@@ -438,77 +440,57 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval side). Output: one row per training vector with its nearest
     eval probe, the cosine, and the 0/1 contaminated decision.
 
-    100 TB shape: the eval set is aggregated into ONE row holding an
-    eval array (sorted by eval id) and broadcast — the corpus side is
-    then a SINGLE NARROW projection: a per-row fold over the eval array
-    computes max-cosine + argmax in one pass, so there is NO corpus
-    shuffle, no groupBy, no window anywhere in the plan. Contrast
-    ann_bruteforce_topk (probe rows × corpus join + per-probe top-k):
-    here the decision is per-corpus-row, so the join can collapse to a
-    1-row broadcast and the argmax to a row-local reduce. A real eval
-    set of ~100k × 1k-dim floats is ~400 MB as one row — above that,
-    chunk the eval array into B broadcast rows and take the max of B
-    narrow folds (still shuffle-free)."""
+    100 TB shape: the eval set is a small FIXED artifact (at most
+    SEM_DECON_EVAL_CAP / SEM_DECON_MOD = 40 probes by construction), so
+    it is collected to the driver, sorted by eval id, and rides the task
+    closure of one `kmeans.cosine_assign` pass — the corpus side is then
+    a SINGLE NARROW pass: max-cosine + argmax per row, with NO corpus
+    shuffle, no join, no groupBy, no window anywhere in the plan.
+    Contrast ann_bruteforce_topk (probe rows × corpus join + per-probe
+    top-k): here the decision is per-corpus-row, so the argmax is a
+    row-local reduce. A real eval set of ~100k × 1k-dim floats is
+    ~400 MB of closure — above that, chunk the eval set and take the max
+    of the per-chunk argmaxes (still shuffle-free)."""
     e = read_table(spark, sf_dir, "embeddings", fan=True).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     is_eval = (F.col("vec_id") % SEM_DECON_MOD == 0) & (
         F.col("vec_id") < SEM_DECON_EVAL_CAP
     )
-    # probe norms computed ONCE per probe before the aggregation — Spark
-    # does not CSE inside higher-order-function lambdas, so a naive
-    # per-(row, probe) re-fold of both norms multiplies the dominant
-    # O(N·|eval|·d) flops several-fold (measured on the sibling
-    # semantic_dedup assignment)
     # zero-norm guard (both sides, mirrored in the oracle): Spark's
     # Divide returns NULL on x/0.0 while DuckDB follows IEEE (inf/NaN),
     # so a zero-norm vector would diverge the argmax across engines —
     # the declared semantics exclude degenerate vectors from BOTH the
     # probe set and the corpus, engine-independently.
-    evals = (
-        e.filter(is_eval)
-        .withColumn("en", norm_fold("emb"))
-        .filter(F.col("en") > 0)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("vec_id").alias("eid"),
-                        F.col("emb").alias("ev"),
-                        F.col("en").alias("en"),
-                    )
-                )
-            ).alias("evals")
-        )
+    probes = e.filter(is_eval & (norm_fold("emb") > 0)).orderBy("vec_id").collect()
+    ids = np.array([r["vec_id"] for r in probes], dtype="int64")
+    P = np.array([r["emb"] for r in probes], dtype="float64")
+
+    def best(X):
+        # first argmax over the id-sorted probes: on an exact double tie
+        # the LOWEST eval id, as the oracle's ORDER BY cos DESC, eid
+        j, cos = kmeans.cosine_argmax(X, P)
+        return ids[j], cos
+
+    corpus = (
+        e.filter(~is_eval & (norm_fold("emb") > 0))
         # empty eval set -> zero output rows, matching the oracle's cross
-        # join with an empty ev relation (without this the single
-        # empty-array row would keep every corpus row and emit sentinel
-        # cosines)
-        .filter(F.size("evals") > 0)
+        # join with an empty ev relation
+        .filter(F.lit(len(ids) > 0))
     )
-    # row norm projected once; cosine computed once per (row, probe);
-    # argmax via array_max over (cos, -eid) structs — on exact double
-    # ties the max of -eid is the LOWEST eid, matching the oracle's
-    # row_number ORDER BY cos DESC, eid
-    scored = F.transform(
-        F.col("evals"),
-        lambda s: F.struct(
-            (dot_fold(F.col("emb"), s["ev"]) / (F.col("nrm") * s["en"])).alias("c"),
-            (-s["eid"]).alias("negid"),
-        ),
-    )
-    return (
-        e.filter(~is_eval)
-        .withColumn("nrm", norm_fold("emb"))
-        .filter(F.col("nrm") > 0)
-        .join(F.broadcast(evals))
-        .withColumn("best", F.array_max(scored))
-        .select(
-            "vec_id",
-            (-F.col("best.negid")).alias("eval_id"),
-            fround(F.col("best.c"), 4).alias("eval_cos"),
-            F.when(F.col("best.c") >= SEM_DECON_TAU, F.lit(1)).otherwise(F.lit(0)).alias("contaminated"),
-        )
+    return kmeans.cosine_assign(
+        corpus,
+        "emb",
+        best,
+        P.shape[-1],
+        caller="semantic_decontaminate",
+        keep=["vec_id"],
+        out=("eval_id", "cos"),
+    ).select(
+        "vec_id",
+        "eval_id",
+        fround(F.col("cos"), 4).alias("eval_cos"),
+        F.when(F.col("cos") >= SEM_DECON_TAU, F.lit(1)).otherwise(F.lit(0)).alias("contaminated"),
     )
 
 
@@ -547,10 +529,10 @@ def embedding_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: the two declared queries compose as DataFrames, so
     Catalyst fuses them — the corpus is scanned by each stage's own
-    bounded pattern (narrow literal-centroid assignment + cluster-keyed
-    self-join; 1-row broadcast eval array), the stage outputs join on
-    vec_id, and the rollup is one map-side-combining aggregate on
-    cluster id. Eval probes are absent from the decontamination output
+    bounded pattern (narrow kernel assignment + cluster-keyed self-join;
+    narrow kernel argmax over the collected eval probes), the stage
+    outputs join on vec_id, and the rollup is one map-side-combining
+    aggregate on cluster id. Eval probes are absent from the decontamination output
     by construction (left join), counted as n_eval and excluded from
     the final set: eval material is never training data."""
     from .similarity import semantic_dedup

@@ -54,12 +54,6 @@ PQ_N_PROBES = 10  # probe set: vec_id < 10
 _QSCALE = 1_000_000
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
-    )
-
-
 def _sqdist(a, b):
     """sum((a_i - b_i)^2) — the direct form (one zip_with, not three
     dots) to keep the literal-codebook expression trees small. Exact on

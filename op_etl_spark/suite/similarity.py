@@ -5,9 +5,10 @@ Brute-force cosine top-k is the exact baseline; the IVF-style variant
 centroid assignment is a broadcast join (centroid set is tiny), so the
 all-pairs cross join never materializes at scale.
 
-All vector math stays JVM-side: `aggregate(zip_with(...))` sequential-folds
-the dot product in deterministic order (matching DuckDB's list functions
-bit-for-bit in double precision) — no Python/Pandas UDF in the hot path.
+Every dot product is a sequential left fold — JVM-side as
+`aggregate(zip_with(...))`, or in the NumPy kernels of operators/kmeans.py
+(the nearest-centroid assignments) — matching DuckDB's list functions
+bit-for-bit in double precision.
 """
 
 from __future__ import annotations
@@ -537,18 +538,17 @@ WHERE o.d2_orig > 0
 
 SEMDEDUP_TAU = 0.35  # within-cluster cosine above this marks a semantic dup
 
-# Above this many centroids the flat literal-baked argmax stops being the
-# right shape: SemDeDup's own operating regime scales k with the corpus
-# (50k lists for LAION-440M in the paper), and flat assignment is then
-# O(N*k*d) flops AND O(k*d) serialized-plan bytes. Past the threshold the
-# assignment routes through a two-level coarse/fine argmax (the
-# operators/ann_index.py build_ivf2_index cost model): ~3*sqrt(k)
-# distance evaluations per row, coarse reps as plan literals (O(sqrt(k))
-# plan bytes), fine cells as a BROADCAST table (data, not plan). Every
-# oracle-swept scale (sf0.001/0.01/0.1 at k=10; the sf1 rehearsal's
-# label fan at k=100) stays under the threshold, so declared results are
-# bit-exact flat argmax; the two-level path is exercised by the x32
-# scale probe (k=320) and by tests that force the threshold down.
+# Above this many centroids exact flat assignment stops being the right
+# shape: SemDeDup's own operating regime scales k with the corpus (50k
+# lists for LAION-440M in the paper), and flat assignment is then
+# O(N*k*d) flops. Past the threshold the assignment routes through a
+# two-level coarse/fine argmax (the operators/ann_index.py
+# build_ivf2_index cost model): ~3*sqrt(k) cosine evaluations per row.
+# Every oracle-swept scale (sf0.001/0.01/0.1 at k=10; the sf1
+# rehearsal's label fan at k=100) stays under the threshold, so declared
+# results are the exact flat argmax; the two-level path is exercised by
+# the SEM2 gate (k=160), the x32 scale probe (k=320) and tests that move
+# the threshold down.
 SEMDEDUP_FLAT_K_MAX = 128
 
 
@@ -559,54 +559,38 @@ def _pydot(a, b):
     return acc
 
 
-def _best_struct(cands):
-    """One-fold argmax: array_max over (cosine, -label) structs — the
-    cosine is computed ONCE per (row, centroid). Higher-order functions
-    are CodegenFallback, so Spark's subexpression elimination does NOT
-    collapse repeated transform()s: the earlier array_position(coss,
-    array_max(coss)) formulation paid the dominant O(N*k*d) fold ~3x per
-    row. Struct max compares cosine first, then -label: on exact double
-    ties the max of -label is the LOWEST label, matching both the old
-    first-position semantics and the oracle's ORDER BY cosc DESC, label."""
-    return F.array_max(
-        F.transform(
-            cands,
-            lambda s: F.struct(
-                (_dot(F.col("emb"), s["c"]) / (F.col("nrm") * s["cn"])).alias("c"),
-                s["neglabel"].alias("neglabel"),
-            ),
-        )
-    )
+def _centroids(cent_rows) -> tuple[np.ndarray, np.ndarray]:
+    """(labels, C) of label-sorted centroid rows, so the kernel's first
+    argmax is the lowest label on an exact cosine tie."""
+    labels = np.array([int(r["label"]) for r in cent_rows], dtype="int64")
+    return labels, np.array([list(r["centroid"]) for r in cent_rows], dtype="float64")
 
 
-def _cent_literal(rows) -> F.Column:
-    """[(label, centroid, cn)] -> literal array of (c, cn, neglabel)."""
-    return F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(float(v)) for v in c]).alias("c"),
-                F.lit(cn).alias("cn"),
-                F.lit(-int(label)).alias("neglabel"),
-            )
-            for label, c, cn in rows
-        ]
-    )
+def _assigned(en: DataFrame, best, dim: int) -> DataFrame:
+    return kmeans.cosine_assign(
+        en,
+        "emb",
+        best,
+        dim,
+        caller="semdedup_assign",
+        keep=["vec_id", "emb", "nrm"],
+        out=("cluster", "cosc"),
+    ).withColumn("cluster", F.col("cluster").cast("int"))
+
+
+def _flat_best(cent_rows):
+    """The exact assignment: every row against every centroid."""
+    labels, C = _centroids(cent_rows)
+
+    def best(X):
+        j, cos = kmeans.cosine_argmax(X, C)
+        return labels[j], cos
+
+    return best, C.shape[-1]
 
 
 def _assign_flat(en: DataFrame, cent_rows) -> DataFrame:
-    cents = _cent_literal(
-        [
-            (r["label"], r["centroid"], math.sqrt(_pydot(r["centroid"], r["centroid"])))
-            for r in cent_rows
-        ]
-    )
-    return en.withColumn("best", _best_struct(cents)).select(
-        "vec_id",
-        "emb",
-        "nrm",
-        (-F.col("best.neglabel")).alias("cluster"),
-        F.col("best.c").alias("cosc"),
-    )
+    return _assigned(en, *_flat_best(cent_rows))
 
 
 def _assign_two_level(en: DataFrame, cent_rows) -> DataFrame:
@@ -615,10 +599,12 @@ def _assign_two_level(en: DataFrame, cent_rows) -> DataFrame:
     k~N regime): group the k centroids into ~sqrt(k) coarse cells with a
     deterministic driver-side Lloyd over the CENTROIDS (k rows of driver
     metadata — the corpus never participates), route each row to its
-    max-cosine coarse rep (literal argmax, O(sqrt(k)) plan bytes), then
-    argmax over ONLY that cell's member centroids, shipped as a broadcast
-    fine table keyed by coarse_id (data bytes, not plan bytes). Per-row
-    flops: n_coarse + 2*|cell| ~ 3*sqrt(k) instead of k (nprobe=2).
+    top-2 coarse reps (nprobe=2, standard IVF: the true nearest centroid
+    of a borderline row often lives in the runner-up cell), then argmax
+    over ONLY those two cells' member centroids. Per-row cosines:
+    n_coarse + 2*|cell| ~ 3*sqrt(k) instead of k. Everything is one
+    `kmeans.cosine_argmax` call per step, inside one `mapInPandas` pass
+    whose closure carries the reps and cells.
     Assignment is approximate in the standard IVF sense — the true
     nearest centroid of a borderline row can live outside the probed
     coarse cells — exactly like ivf_search with nprobe < n_lists, and
@@ -627,211 +613,56 @@ def _assign_two_level(en: DataFrame, cent_rows) -> DataFrame:
     (fraction of rows agreeing with the exact flat argmax) and pin
     determinism; every ORACLE-swept scale stays on the flat path (see
     SEMDEDUP_FLAT_K_MAX), so declared results are never approximate."""
-    spark = en.sparkSession
-    cents = [
-        (
-            int(r["label"]),
-            list(r["centroid"]),
-            math.sqrt(_pydot(r["centroid"], r["centroid"])),
-        )
-        for r in cent_rows
-    ]
-    k = len(cents)
+    labels, C = _centroids(cent_rows)
+    k = len(C)
     n_coarse = max(2, math.isqrt(k - 1) + 1)
-
-    def _cos(a, an, b, bn):
-        return _pydot(a, b) / (an * bn) if an and bn else -1.0
-
     # deterministic seeds: evenly spaced over the label-sorted centroids
-    reps = [list(cents[(i * k) // n_coarse][1]) for i in range(n_coarse)]
-    assign = [0] * k
-
-    def _reassign() -> None:
-        rep_norms = [math.sqrt(_pydot(r, r)) for r in reps]
-        for j, (_, c, cn) in enumerate(cents):
-            assign[j] = max(
-                range(n_coarse),
-                key=lambda i: (_cos(c, cn, reps[i], rep_norms[i]), -i),
-            )
-
-    for _ in range(2):  # 2 Lloyd rounds over k driver rows — O(k*sqrt(k)*d)
-        _reassign()
+    reps = C[[(i * k) // n_coarse for i in range(n_coarse)]].copy()
+    for _ in range(2):  # 2 Lloyd rounds over k driver rows
+        assign = kmeans.cosine_argmax(C, reps)[0]
         for i in range(n_coarse):
-            members = [cents[j][1] for j in range(k) if assign[j] == i]
-            if members:
-                reps[i] = [
-                    sum(m[d] for m in members) / len(members)
-                    for d in range(len(members[0]))
-                ]
+            members = C[assign == i]
+            if len(members):
+                acc = np.zeros(C.shape[1])
+                for m in members:  # a left fold: off the grid, the order is in the result
+                    acc += m
+                reps[i] = acc / len(members)
     # one final reassignment against the post-update reps: the cells rows
-    # are ROUTED to (the _route closure below is built from the final
-    # reps) must be the cells those same reps DEFINE — without it, membership came
-    # from the start-of-last-iteration reps and routing from the end,
-    # silently costing recall on every centroid the last update moved
-    # across a cell boundary
-    _reassign()
-    cells: dict[int, list] = {}
-    for j, (label, c, cn) in enumerate(cents):
-        cells.setdefault(assign[j], []).append((label, c, cn))
-    # drop empty cells and reindex so the literal argmax never routes a
-    # row to a coarse id with no fine members
-    live = sorted(cells)
-    coarse_rows = [
-        (i, reps[old], math.sqrt(_pydot(reps[old], reps[old])))
-        for i, old in enumerate(live)
-    ]
-    fine = local_frame(
-        spark,
-        [
-            (i, [(int(lb), list(c), float(cn)) for lb, c, cn in cells[old]])
-            for i, old in enumerate(live)
-        ],
-        "coarse_id int, cell array<struct<label:int, c:array<double>, cn:double>>",
-    )
-    # nprobe=2 routing (standard IVF): the true nearest centroid of a
-    # borderline row often lives in the runner-up coarse cell; probing
-    # the top-2 cells costs one extra broadcast join + ~sqrt(k) flops
-    # and removes most routing misses. Vectorized since round 12 as one
-    # pandas-UDF NumPy matmul per Arrow batch against the ~sqrt(k) coarse
-    # reps riding the task closure (sqrt(k) x d doubles — scale-safe;
-    # the fine cells stay a broadcast TABLE below, data bytes not
-    # closure bytes): the literal array_sort formulation evaluated
-    # n_coarse x d interpreted CodegenFallback multiply-adds per row.
-    # Bit-exact ONLY on the integer-grid discipline (every dot is an
-    # exact integer < 2^53 in any summation order; the divide sees the
-    # identical (nrm * cn) product) — the same precondition as
-    # _flat_best_np, satisfied by the SEM2 gate fixture; a non-integer
-    # caller (none declared) could see last-ulp routing flips vs the
-    # retired fold, never an invalid assignment. Tie-breaks match the
-    # retired desc-sort of (cos, -i) structs: NumPy first-argmax picks
-    # the LOWEST coarse index, and the runner-up repeats that rule with
-    # the winner masked out.
-    R = np.array([c for _, c, _ in coarse_rows], dtype="float64")
-    Rn = np.array([cn for _, _, cn in coarse_rows], dtype="float64")
-    n_live = len(coarse_rows)
+    # are ROUTED to must be the cells those same reps DEFINE — without
+    # it, membership came from the start-of-last-iteration reps and
+    # routing from the end, silently costing recall on every centroid
+    # the last update moved across a cell boundary
+    assign = kmeans.cosine_argmax(C, reps)[0]
+    # drop empty cells and reindex, so no row is routed to a cell with no
+    # members; each cell keeps its members in label order
+    live = np.unique(assign)
+    R = reps[live]
+    cells = [(labels[assign == i], C[assign == i]) for i in live]
 
-    @F.pandas_udf("struct<cid1: int, cid2: int>")
-    def _route(emb: pd.Series, nrm: pd.Series) -> pd.DataFrame:
-        if not len(emb):
-            return pd.DataFrame(
-                {
-                    "cid1": pd.Series([], dtype="int32"),
-                    "cid2": pd.array([], dtype="Int32"),
-                }
-            )
-        E = np.vstack(emb.to_numpy())
-        cs = (E @ R.T) / (nrm.to_numpy()[:, None] * Rn[None, :])
-        j1 = cs.argmax(axis=1)  # first max = lowest coarse index on ties
-        if n_live > 1:
-            cs[np.arange(len(j1)), j1] = -np.inf
-            cid2 = pd.array(cs.argmax(axis=1).astype("int32"), dtype="Int32")
-        else:
-            cid2 = pd.array([None] * len(j1), dtype="Int32")
-        return pd.DataFrame(
-            {"cid1": pd.Series(j1.astype("int32")), "cid2": cid2}
-        )
+    def best(X):
+        first, _, second = kmeans.cosine_argmax(X, R, runner_up=True)
+        out = []
+        for cid in (first, second):
+            lab = np.full(len(X), -1, dtype="int64")
+            cos = np.full(len(X), -np.inf)
+            for i in np.unique(cid[cid >= 0]):
+                rows = cid == i
+                j, c = kmeans.cosine_argmax(X[rows], cells[i][1])
+                lab[rows], cos[rows] = cells[i][0][j], c
+            out.append((lab, cos))
+        (l1, c1), (l2, c2) = out
+        # the better of the two cells; on an exact tie, the lower label
+        two = (c2 > c1) | ((c2 == c1) & (l2 < l1))
+        return np.where(two, l2, l1), np.where(two, c2, c1)
 
-    # asNondeterministic (guide §4.4): the fine join's isnotnull(cid1)
-    # filter otherwise gets pushed below this projection and the
-    # optimizer DUPLICATES the routing UDF — every row would pay the
-    # matmul twice (plan_audit's DuplicatedPythonUDF axis catches this).
-    # The kernel IS deterministic; the marker only pins evaluation count.
-    _route_once = _route.asNondeterministic()
-    routed = (
-        en.withColumn("__r", _route_once(F.col("emb"), F.col("nrm")))
-        .withColumn("cid1", F.col("__r.cid1"))
-        .withColumn("cid2", F.col("__r.cid2"))
-        .drop("__r")
-    )
-
-    def _cell_best(cell_col):
-        return F.array_max(
-            F.transform(
-                cell_col,
-                lambda s: F.struct(
-                    (_dot(F.col("emb"), s["c"]) / (F.col("nrm") * s["cn"])).alias("c"),
-                    (-s["label"]).alias("neglabel"),
-                ),
-            )
-        )
-
-    f1 = fine.select(
-        F.col("coarse_id").alias("cid1"), F.col("cell").alias("__cell1")
-    )
-    f2 = fine.select(
-        F.col("coarse_id").alias("cid2"), F.col("cell").alias("__cell2")
-    )
-    return (
-        routed.join(F.broadcast(f1), "cid1")
-        .join(F.broadcast(f2), "cid2", "left")  # cid2 null when n_coarse == 1
-        .withColumn(
-            "best",
-            # greatest ignores the null second-cell argmax; on an exact
-            # (cosine, neglabel) tie across cells both structs are equal,
-            # so the pick is still the lowest label
-            F.greatest(_cell_best(F.col("__cell1")), _cell_best(F.col("__cell2"))),
-        )
-        .select(
-            "vec_id",
-            "emb",
-            "nrm",
-            (-F.col("best.neglabel")).alias("cluster"),
-            F.col("best.c").alias("cosc"),
-        )
-    )
+    return _assigned(en, best, C.shape[-1])
 
 
-def _flat_best_np(cent_rows):
-    """Vectorized twin of `_assign_flat`'s argmax as a pandas-UDF column
-    over (emb, nrm): one NumPy matmul per Arrow batch instead of an
-    interpreted Catalyst higher-order fold (CodegenFallback evaluates
-    each multiply-add through the expression interpreter — at k=160,
-    d=64 that is ~10k interpreted ops per ROW, the dominant cost of the
-    literal argmax past k~100).
-
-    ONLY bit-exact when embeddings AND centroids are exact-integer-valued
-    doubles (the SEM2_QSCALE quantization discipline): every product and
-    partial sum is then an integer below 2^53, exactly representable, so
-    any summation order — BLAS pairwise, FMA, or the sequential fold —
-    produces the identical double. Tie-break matches `_best_struct`:
-    NumPy argmax returns the FIRST maximum, and `cent_rows` arrives
-    label-sorted, so an exact cosine tie picks the lowest label. Norms
-    reuse `_pydot` per centroid so the divisor is computed by the same
-    fold as the literal path. Do NOT use for non-integer centroids
-    (e.g. `semantic_dedup`'s tick-means) — their sums round, and
-    summation order would leak into the last ulp."""
-
-    C = np.array([list(r["centroid"]) for r in cent_rows], dtype="float64")
-    cn = np.array(
-        [math.sqrt(_pydot(r["centroid"], r["centroid"])) for r in cent_rows]
-    )
-    labels = np.array([int(r["label"]) for r in cent_rows], dtype="int64")
-
-    @F.pandas_udf("struct<cluster: long, cosc: double>")
-    def _best(emb: pd.Series, nrm: pd.Series) -> pd.DataFrame:
-        if not len(emb):  # np.vstack raises on an empty Arrow batch
-            return pd.DataFrame(
-                {
-                    "cluster": pd.Series([], dtype="int64"),
-                    "cosc": pd.Series([], dtype="float64"),
-                }
-            )
-        E = np.vstack(emb.to_numpy())  # (n, d) exact-integer doubles
-        cos = (E @ C.T) / (nrm.to_numpy()[:, None] * cn[None, :])
-        j = cos.argmax(axis=1)  # first max = lowest label (label-sorted C)
-        return pd.DataFrame(
-            {"cluster": labels[j], "cosc": cos[np.arange(len(j)), j]}
-        )
-
-    return _best
-
-
-def semdedup_assign(en: DataFrame, cent_rows, flat_k_max: int | None = None) -> DataFrame:
+def semdedup_assign(en: DataFrame, cent_rows) -> DataFrame:
     """Nearest-centroid assignment for a corpus with a projected `nrm`
-    norm column: flat literal argmax while the codebook is driver-scale,
+    norm column: exact flat argmax while the codebook is driver-scale,
     two-level coarse/fine past SEMDEDUP_FLAT_K_MAX."""
-    cap = SEMDEDUP_FLAT_K_MAX if flat_k_max is None else flat_k_max
-    if len(cent_rows) <= cap:
+    if len(cent_rows) <= SEMDEDUP_FLAT_K_MAX:
         return _assign_flat(en, cent_rows)
     return _assign_two_level(en, cent_rows)
 
@@ -854,11 +685,11 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the centroid table is k rows of driver-side metadata
     (collected once, as ann_index collects its centroids), so assignment is
     a NARROW projection: the corpus never shuffles to pick its cluster.
-    While k is driver-scale the centroids bake into the plan as literals;
-    past SEMDEDUP_FLAT_K_MAX (SemDeDup's own regime scales k with corpus
-    size — 50k lists for LAION-440M in the paper) assignment routes
-    through the two-level coarse/fine argmax so per-row flops stay
-    ~2*sqrt(k) and plan bytes ~sqrt(k) (see semdedup_assign). The only
+    The centroids ride the assignment kernel's task closure, not the
+    plan; past SEMDEDUP_FLAT_K_MAX (SemDeDup's own regime scales k with
+    corpus size — 50k lists for LAION-440M in the paper) assignment routes
+    through the two-level coarse/fine argmax so per-row cosines stay
+    ~3*sqrt(k) (see semdedup_assign). The only
     corpus shuffle is the cluster-keyed self-join, and with k~N the
     per-cluster population — and with it per-cluster pair cost — stays
     constant: total cost is linear in the corpus. The reference has no
@@ -993,8 +824,8 @@ def semantic_assign_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     SEM2_K = 160 > 128, so `semdedup_assign` dispatches the REAL
     two-level pipeline: driver-side Lloyd over the k centroid rows
     (seeded evenly over label order, 2 rounds, final reassignment
-    against the post-update reps), nprobe=2 literal coarse routing, and
-    the broadcast fine-cell argmax. The DuckDB twin replays every step
+    against the post-update reps), nprobe=2 coarse routing, and the
+    argmax over the two probed cells. The DuckDB twin replays every step
     in SQL — exactly as ivf_recall_at_k replays IVF — and the output
     carries agreement-with-flat as a measured column. Agreement here is
     a MEASUREMENT, not a gate: vec_id%160 labels give essentially random
@@ -1030,27 +861,26 @@ def semantic_assign_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"semantic_assign_two_level fixture produced {len(cent_rows)} "
             f"centroids, expected {SEM2_K}"
         )
-    # the two-level output carries emb/nrm for exactly en's rows, so the
-    # flat agreement column rides the SAME pass as a vectorized pandas-UDF
-    # argmax (see _flat_best_np: bit-exact here because this fixture's
-    # embeddings and centroids are integer-valued doubles) — no second
-    # full-table literal argmax, no vec_id re-join. Before: scan + k=160
-    # interpreted fold + join (~6s of the query at sf0.1); after: one
-    # ArrowEvalPython matmul on rows already in flight.
+    # the flat agreement column: one more kernel pass over the two-level
+    # output's rows, no second scan, no re-join
     two = semdedup_assign(en, cent_rows)
-    flat_best = _flat_best_np(cent_rows)
-    return (
-        two.withColumn("__flat", flat_best(F.col("emb"), F.col("nrm")))
-        .select(
-            "vec_id",
-            F.col("cluster").cast("int").alias("cluster"),
-            F.col("__flat.cluster").cast("int").alias("flat_cluster"),
-            F.when(F.col("cluster") == F.col("__flat.cluster"), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("agree"),
-            "cosc",
-        )
+    both = kmeans.cosine_assign(
+        two,
+        "emb",
+        *_flat_best(cent_rows),
+        caller="semantic_assign_two_level",
+        keep=["vec_id", "cluster", "cosc"],
+        out=("flat_cluster", "flat_cos"),
+    )
+    return both.select(
+        "vec_id",
+        "cluster",
+        F.col("flat_cluster").cast("int").alias("flat_cluster"),
+        F.when(F.col("cluster") == F.col("flat_cluster"), 1)
+        .otherwise(0)
+        .cast("int")
+        .alias("agree"),
+        "cosc",
     )
 
 

@@ -26,12 +26,20 @@ from pyspark.sql import SparkSession
 spark = SparkSession.builder.master("local[4]").getOrCreate()
 import __spark_entry__ as m
 qs = m.queries()
-# one representative per Python-UDF family: stateful stream (module-level
-# applyInPandasWithState fn), multimodal (mapInPandas), geometry pandas_udf
-for name in ["stateful_sessionize_stream", "media_byte_entropy", "reproject_points"]:
+for name in sys.argv[1:]:
     n = len(qs[name](spark, {SF_DIR!r}).collect())
     print("OK", name, n)
 """
+
+# One representative per Python-UDF family, each list in a fresh session
+# (shipping is per session, so the first query of a list is the one that
+# proves its own entry point ships the package): the k-means partial sums
+# (mapInPandas), stateful stream (module-level applyInPandasWithState fn),
+# multimodal (mapInPandas), geometry pandas_udf; and the cosine argmax.
+RUNS = [
+    ["label_centroids", "stateful_sessionize_stream", "media_byte_entropy", "reproject_points"],
+    ["semantic_decontaminate"],
+]
 
 
 @pytest.mark.slow
@@ -40,14 +48,15 @@ def test_udf_queries_run_under_bare_foreign_cwd_session(tmp_path):
         pytest.skip(f"no testdata at {SF_DIR}")
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # the driver does not export the repo path
-    proc = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
-        cwd=str(tmp_path),  # foreign cwd: repo not importable implicitly
-        capture_output=True,
-        text=True,
-        timeout=600,
-        env=env,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    for name in ["stateful_sessionize_stream", "media_byte_entropy", "reproject_points"]:
-        assert f"OK {name}" in proc.stdout
+    for names in RUNS:
+        proc = subprocess.run(
+            [sys.executable, "-c", SCRIPT, *names],
+            cwd=str(tmp_path),  # foreign cwd: repo not importable implicitly
+            capture_output=True,
+            text=True,
+            timeout=600,
+            env=env,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        for name in names:
+            assert f"OK {name}" in proc.stdout

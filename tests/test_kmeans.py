@@ -3,9 +3,12 @@ against a short pure-Python reference: a left-fold squared distance, the
 first minimum, and the grid (`floor(sum / n + 0.5)`) and tick
 (`sum(floor(x * 1e6 + 0.5)) / 1e6 / n`) means.
 
+The cosine argmax is pinned against Spark's own `dot_fold` cosine (a
+tie, the runner-up, a zero-norm centroid, an empty batch).
+
 Also: the preconditions the kernel checks (null or misshapen vectors,
-values off the integer grid), and the guard that keeps every argmin and
-scatter-add of the engine inside the kernel."""
+values off the integer grid), and the guard that keeps every argmin,
+argmax and scatter-add of the engine inside the kernel."""
 
 from __future__ import annotations
 
@@ -204,6 +207,63 @@ def test_kernel_matches_python_reference(spark, emb, vecs, tmp_path, name):
     assert got == want  # exact doubles and ids
 
 
+# --- the cosine argmax, against Spark's fold ---
+
+
+def _spark_top2(spark, X, C):
+    """Per row of X: [(index, cosine)] of its two best rows of C by
+    ORDER BY cos DESC, index, with Spark's dot_fold / (norm_fold *
+    norm_fold) and -1.0 for a zero-norm side."""
+    from pyspark.sql import Window
+
+    from op_etl_spark.suite._util import dot_fold, norm_fold
+
+    xs = spark.createDataFrame([(i, x.tolist()) for i, x in enumerate(X)], "i int, x array<double>")
+    cs = spark.createDataFrame([(j, c.tolist()) for j, c in enumerate(C)], "j int, c array<double>")
+    den = norm_fold("x") * norm_fold("c")
+    rk = F.row_number().over(Window.partitionBy("i").orderBy(F.desc("cos"), "j"))
+    top = {}
+    for r in (
+        xs.crossJoin(cs)
+        .select("i", "j", F.when(den > 0, dot_fold("x", "c") / den).otherwise(-1.0).alias("cos"))
+        .withColumn("rk", rk)
+        .filter("rk <= 2")
+        .orderBy("i", "rk")
+        .collect()
+    ):
+        top.setdefault(r.i, []).append((r.j, r.cos))
+    return [top[i] for i in range(len(X))]
+
+
+def _cosine_cases():
+    rng = np.random.default_rng(6)
+    X, C = rng.normal(size=(60, 7)) / 3, rng.normal(size=(9, 7)) * 1.7
+    tie = C.copy()
+    tie[6] = tie[2]  # an exact duplicate: every row scores both the same
+    near = tie[2] + rng.normal(size=(20, 7)) * 0.01  # rows whose best is the pair
+    zero = C.copy()
+    zero[0] = 0.0
+    return {
+        "non_integer": (X, C),
+        "duplicated_centroid_ties_to_lowest_index": (np.vstack([X, near]), tie),
+        "zero_norm_centroid_scores_minus_one": (X, zero),
+        "one_centroid_has_no_runner_up": (X, C[:1]),
+        "empty_batch": (np.empty((0, 7)), C),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_cosine_cases()))
+def test_cosine_argmax_matches_spark_fold(spark, name):
+    X, C = _cosine_cases()[name]
+    best, cos, second = kmeans.cosine_argmax(X, C, runner_up=True)
+    got = [(b, c, s) for b, c, s in zip(best.tolist(), cos.tolist(), second.tolist())]
+    want = [(t[0][0], t[0][1], t[1][0] if len(t) > 1 else -1) for t in _spark_top2(spark, X, C)]
+    assert got == want  # exact doubles and indices
+    if name.startswith("duplicated"):
+        assert [(b, s) for b, _, s in got[-20:]] == [(2, 6)] * 20
+    assert kmeans.cosine_argmax(X, C)[0].tolist() == best.tolist()
+
+
 # --- preconditions ---
 
 
@@ -259,12 +319,13 @@ def test_grid_check_runs_in_the_job(spark):
 
 
 def _kernel_calls(tree: ast.AST):
-    """Lines of every `<x>.argmin(...)` and `<x>.add.at(...)` call."""
+    """Lines of every `<x>.argmin(...)`, `<x>.argmax(...)` and
+    `<x>.add.at(...)` call."""
     out = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
             f = node.func
-            if f.attr == "argmin" or (
+            if f.attr in ("argmin", "argmax") or (
                 f.attr == "at" and isinstance(f.value, ast.Attribute) and f.value.attr == "add"
             ):
                 out.append(node.lineno)
@@ -272,8 +333,8 @@ def _kernel_calls(tree: ast.AST):
 
 
 def test_guard_sees_the_kernel_calls():
-    src = "import numpy as np\nnp.add.at(s, i, v)\nd.argmin(axis=1)\nnp.argmin(d)\n"
-    assert sorted(_kernel_calls(ast.parse(src))) == [2, 3, 4]
+    src = "import numpy as np\nnp.add.at(s, i, v)\nd.argmin(axis=1)\nnp.argmin(d)\nc.argmax(axis=1)\n"
+    assert sorted(_kernel_calls(ast.parse(src))) == [2, 3, 4, 5]
 
 
 def test_argmin_and_scatter_add_live_only_in_the_kernel():

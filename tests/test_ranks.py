@@ -130,3 +130,12 @@ def test_grouped_row_index_plan_windows_partitioned(spark):
     for line in plan.splitlines():
         if "Partition Specification" in line:
             assert "__pid" in line
+
+
+def test_grouped_rows_at_rank_refuses_too_many_groups(spark):
+    from op_etl_spark.operators.ranks import MAX_RANK_GROUPS, grouped_rows_at_rank
+
+    n = MAX_RANK_GROUPS + 1
+    df = spark.range(2 * n).select((F.col("id") % n).alias("g"), F.col("id").alias("v"))
+    with pytest.raises(ValueError, match=f"{n} groups.*grouped_row_index"):
+        grouped_rows_at_rank(df, "g", ["v"], lambda k: 0)

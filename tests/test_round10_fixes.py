@@ -4,8 +4,6 @@ Semantic family:
 - semdedup_assign dispatches flat vs two-level on the centroid count;
   the two-level (coarse -> fine, nprobe=2) path is deterministic and its
   assignment recall vs the exact flat argmax is gated.
-- The one-fold argmax (array_max over (cos, -label) structs) keeps the
-  old first-max-position tie semantics.
 - Zero-norm vectors are excluded engine-independently (Spark NULL vs
   DuckDB IEEE divergence guard), mirrored in the DuckDB oracle.
 - semantic_dedup publishes a centroids/assign phase split and persists
@@ -44,19 +42,19 @@ def test_semdedup_dispatch_flat_below_threshold(cent_and_corpus):
     cent, en = cent_and_corpus
     assert len(cent) <= S.SEMDEDUP_FLAT_K_MAX  # suite fixtures stay flat
     plan = S.semdedup_assign(en, cent)._jdf.queryExecution().optimizedPlan().toString()
-    # the flat path is a narrow projection: no join anywhere
+    # one narrow kernel pass: no join, and no centroid baked into the
+    # plan as a literal fold
     assert "Join" not in plan
+    assert "transform(" not in plan and "array_max(" not in plan
+    assert _assignments(S.semdedup_assign(en, cent)) == _assignments(S._assign_flat(en, cent))
 
 
-def test_semdedup_dispatch_two_level_above_threshold(cent_and_corpus):
+def test_semdedup_dispatch_two_level_above_threshold(cent_and_corpus, monkeypatch):
     cent, en = cent_and_corpus
-    plan = (
-        S.semdedup_assign(en, cent, flat_k_max=2)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "Join" in plan  # fine cells ship as a broadcast table
+    monkeypatch.setattr(S, "SEMDEDUP_FLAT_K_MAX", 2)
+    got = _assignments(S.semdedup_assign(en, cent))
+    assert got == _assignments(S._assign_two_level(en, cent))
+    assert got != _assignments(S._assign_flat(en, cent))  # the paths differ here
 
 
 def test_two_level_recall_and_determinism(cent_and_corpus):
@@ -76,35 +74,6 @@ def test_two_level_recall_and_determinism(cent_and_corpus):
     # the approximate pick can never beat the exact max cosine
     for v, (_, cosc) in two_a.items():
         assert cosc <= flat[v][1] + 1e-12
-
-
-def test_one_fold_argmax_matches_position_formulation(cent_and_corpus):
-    """The (cos, -label) struct max must reproduce the retired
-    element_at(labels, array_position(coss, array_max(coss))) semantics:
-    first max position in the label-sorted array = lowest label."""
-    cent, en = cent_and_corpus
-    labels = F.array(*[F.lit(int(r["label"])) for r in cent])
-    cents = F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(float(v)) for v in r["centroid"]]).alias("c"),
-                F.lit(math.sqrt(S._pydot(r["centroid"], r["centroid"]))).alias("cn"),
-            )
-            for r in cent
-        ]
-    )
-    coss = F.transform(
-        cents, lambda s: S._dot(F.col("emb"), s["c"]) / (F.col("nrm") * s["cn"])
-    )
-    old = {
-        r["vec_id"]: (r["cluster"], r["cosc"])
-        for r in en.select(
-            "vec_id",
-            F.element_at(labels, F.array_position(coss, F.array_max(coss)).cast("int")).alias("cluster"),
-            F.array_max(coss).alias("cosc"),
-        ).collect()
-    }
-    assert _assignments(S._assign_flat(en, cent)) == old
 
 
 def test_zero_norm_vectors_excluded_on_both_engines(spark, tmp_path):

@@ -277,51 +277,6 @@ def test_marker_schema_drift_message_names_columns(spark, tmp_path):
     assert len(_state(spark, target)) == 40  # nothing lost
 
 
-# ---- round-11 optimization: vectorized flat-argmax agreement column ----
-
-
-def test_flat_best_np_matches_literal_argmax_bitexact(spark):
-    """_flat_best_np (NumPy matmul in a pandas UDF) must reproduce
-    _assign_flat's (cluster, cosc) EXACTLY on integer-valued-double
-    fixtures — including ties, which both sides break to the lowest
-    label. Random integer embeddings exercise exact-integer arithmetic,
-    duplicated centroids exercise the tie-break."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from op_etl_spark.suite.similarity import (
-        _assign_flat,
-        _flat_best_np,
-        _norm,
-    )
-
-    rng = random.Random(11)
-    d, k, n = 16, 12, 300
-    cents = [[float(rng.randint(-1000, 1000)) for _ in range(d)] for _ in range(k)]
-    cents[7] = list(cents[3])  # exact duplicate -> cosine tie on every row
-    cent_rows = [{"label": i, "centroid": c} for i, c in enumerate(cents)]
-    rows = [
-        (i, [float(rng.randint(-1000, 1000)) for _ in range(d)]) for i in range(n)
-    ]
-    en = (
-        spark.createDataFrame(rows, "vec_id long, emb array<double>")
-        .withColumn("nrm", _norm(F.col("emb")))
-        .filter(F.col("nrm") > 0)
-    )
-    lit = {
-        r["vec_id"]: (r["cluster"], r["cosc"])
-        for r in _assign_flat(en, cent_rows).collect()
-    }
-    best = _flat_best_np(cent_rows)
-    got = {
-        r["vec_id"]: (r["b"]["cluster"], r["b"]["cosc"])
-        for r in en.withColumn("b", best(F.col("emb"), F.col("nrm"))).collect()
-    }
-    assert got == lit  # exact doubles, exact tie-breaks
-    assert any(v[0] == 3 for v in got.values())  # the duplicated pair hit
-
-
 @pytest.mark.parametrize("seed,k", [(3, 4), (9, 4), (17, 3), (21, 5)])
 def test_ktruss_with_support_matches_recount(spark, seed, k):
     """The maintained-support output path (ktruss_edges since round 11)

@@ -6,12 +6,10 @@ ANN builds:
   groupBy floored means BIT-EXACTLY,
   including the empty-list / empty-codeword fallback to the previous
   centroid.
-Two-level routing:
-- the vectorized nprobe=2 coarse routing must reproduce the retired
-  array_sort-of-(cos, -i)-structs formulation on the integer grid,
-  including exact-tie handling, and must be evaluated ONCE in the plan
-  (the un-marked UDF was duplicated by the fine join's isnotnull
-  pushdown — guide §4.4).
+Two-level assignment:
+- routing and the fine argmax are ONE mapInPandas pass, evaluated once
+  even under a filter on its output (a filter pushed below a projection
+  would duplicate a UDF column — guide §4.4).
 Funnel:
 - the persisted flags table carries ONLY the columns the downstream
   stages read (no md5/token stats in the cache).
@@ -206,140 +204,21 @@ def test_fused_label_centroids_match_retired_formulation(spark, sem2_en):
     ]
 
 
-def test_vectorized_routing_matches_retired_sort_formulation(spark, sem2_en):
-    """Replays _assign_two_level's driver-side Lloyd verbatim to obtain
-    the SAME coarse reps/cells, then compares the vectorized routing's
-    final (cluster, cosc) against a reference built with the retired
-    array_sort-of-structs routing over those cells — bit-exact on the
-    integer grid."""
-    import math
-
-    from op_etl_spark.suite import similarity as S
-
-    en, cent_rows = sem2_en
-    got = {
-        r["vec_id"]: (r["cluster"], r["cosc"])
-        for r in S._assign_two_level(en, cent_rows).collect()
-    }
-
-    # -- reference: retired routing over the identical cells --
-    cents = [
-        (
-            int(r["label"]),
-            list(r["centroid"]),
-            math.sqrt(S._pydot(r["centroid"], r["centroid"])),
-        )
-        for r in cent_rows
-    ]
-    k = len(cents)
-    n_coarse = max(2, math.isqrt(k - 1) + 1)
-
-    def _cos(a, an, b, bn):
-        return S._pydot(a, b) / (an * bn) if an and bn else -1.0
-
-    reps = [list(cents[(i * k) // n_coarse][1]) for i in range(n_coarse)]
-    assign = [0] * k
-
-    def _reassign():
-        rep_norms = [math.sqrt(S._pydot(r, r)) for r in reps]
-        for j, (_, c, cn) in enumerate(cents):
-            assign[j] = max(
-                range(n_coarse),
-                key=lambda i: (_cos(c, cn, reps[i], rep_norms[i]), -i),
-            )
-
-    for _ in range(2):
-        _reassign()
-        for i in range(n_coarse):
-            members = [cents[j][1] for j in range(k) if assign[j] == i]
-            if members:
-                reps[i] = [
-                    sum(m[d] for m in members) / len(members)
-                    for d in range(len(members[0]))
-                ]
-    _reassign()
-    cells: dict[int, list] = {}
-    for j, (label, c, cn) in enumerate(cents):
-        cells.setdefault(assign[j], []).append((label, c, cn))
-    live = sorted(cells)
-    coarse_rows = [
-        (i, reps[old], math.sqrt(S._pydot(reps[old], reps[old])))
-        for i, old in enumerate(live)
-    ]
-    coarse_lit = S._cent_literal(coarse_rows)
-    fine = spark.createDataFrame(
-        [
-            (i, [(int(lb), list(c), float(cn)) for lb, c, cn in cells[old]])
-            for i, old in enumerate(live)
-        ],
-        "coarse_id int, cell array<struct<label:int, c:array<double>, cn:double>>",
-    )
-    coarse_scored = F.transform(
-        coarse_lit,
-        lambda s: F.struct(
-            (S._dot(F.col("emb"), s["c"]) / (F.col("nrm") * s["cn"])).alias("c"),
-            s["neglabel"].alias("neglabel"),
-        ),
-    )
-    routed = (
-        en.withColumn("__top2", F.slice(F.reverse(F.array_sort(coarse_scored)), 1, 2))
-        .withColumn("cid1", (-F.col("__top2")[0]["neglabel"]).cast("int"))
-        .withColumn("cid2", (-F.col("__top2")[1]["neglabel"]).cast("int"))
-    )
-
-    def _cell_best(cell_col):
-        return F.array_max(
-            F.transform(
-                cell_col,
-                lambda s: F.struct(
-                    (S._dot(F.col("emb"), s["c"]) / (F.col("nrm") * s["cn"])).alias(
-                        "c"
-                    ),
-                    (-s["label"]).alias("neglabel"),
-                ),
-            )
-        )
-
-    f1 = fine.select(F.col("coarse_id").alias("cid1"), F.col("cell").alias("__cell1"))
-    f2 = fine.select(F.col("coarse_id").alias("cid2"), F.col("cell").alias("__cell2"))
-    want = {
-        r["vec_id"]: (r["cluster"], r["cosc"])
-        for r in (
-            routed.join(F.broadcast(f1), "cid1")
-            .join(F.broadcast(f2), "cid2", "left")
-            .withColumn(
-                "best",
-                F.greatest(_cell_best(F.col("__cell1")), _cell_best(F.col("__cell2"))),
-            )
-            .select(
-                "vec_id",
-                (-F.col("best.neglabel")).alias("cluster"),
-                F.col("best.c").alias("cosc"),
-            )
-            .collect()
-        )
-    }
-    assert got == want
-
-
 def test_routing_udf_evaluated_once_in_plan(spark, sem2_en):
-    """Guide §4.4: without the nondeterministic marker the fine join's
-    isnotnull(cid1) pushdown duplicates the routing UDF below the
-    projection — the plan must carry exactly ONE _route eval node."""
+    """The two-level assignment (routing and fine argmax) is ONE
+    mapInPandas pass, and stays one when a consumer filters on its
+    cluster column: a filter pushed below a projection would evaluate a
+    deterministic UDF column twice (guide §4.4)."""
     from op_etl_spark.suite import similarity as S
 
     en, cent_rows = sem2_en
-    df = S._assign_two_level(en, cent_rows)
+    df = S._assign_two_level(en, cent_rows).filter(F.col("cluster") > 3)
     p = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    assert len(re.findall(r"_route\(", p)) == len(set(re.findall(r"_route\([^#]*", p)))
-    blocks = [
-        b
-        for b in p.split("\n\n")
-        if re.match(r"\(\d+\) ArrowEvalPython", b.strip()) and "_route(" in b
-    ]
-    assert len(blocks) == 1, p[:2000]
+    tree = p.split("\n\n", 1)[0]
+    assert tree.count("MapInPandas") == 1, tree
+    assert "EvalPython" not in tree, tree
 
 
 # --- funnel flags persist projection ---

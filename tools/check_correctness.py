@@ -12,10 +12,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
@@ -51,6 +54,24 @@ def table_hash(rows, colnames):
     return h.hexdigest()[:16]
 
 
+def clean_head(repo: str) -> str:
+    """HEAD's sha; exits non-zero when tracked files differ from HEAD, so
+    an artifact's sha always names the code that produced it."""
+
+    def git(*args):
+        return subprocess.run(
+            ["git", *args], cwd=repo, capture_output=True, text=True, check=True
+        ).stdout.strip()
+
+    dirty = git("status", "--porcelain", "--untracked-files=no")
+    if dirty:
+        raise SystemExit(
+            "--artifact: tracked files differ from HEAD; commit or stash "
+            f"them first:\n{dirty}"
+        )
+    return git("rev-parse", "HEAD")
+
+
 def main():
     # --artifact PATH: also write the sweep as a committed, diffable JSON
     # (git SHA inside) so the 170/170 claim is a checked-in artifact, not
@@ -66,13 +87,12 @@ def main():
             )
         artifact = args[i + 1]
         args = args[:i] + args[i + 2 :]
+        sha = clean_head(REPO)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
     import __spark_entry__ as entrymod
     from op_etl_spark.session import get_spark
-
-    import os
 
     spark = get_spark("correctness-check")
     con = duckdb.connect()
@@ -168,12 +188,7 @@ def main():
     print(f"\n{n_pass} passed, {n_fail} failed, {len(qs)} total")
     if artifact:
         import json
-        import subprocess
 
-        sha = subprocess.run(
-            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
-            cwd="/root/repo",
-        ).stdout.strip()
         with open(artifact, "w") as f:
             json.dump(
                 {

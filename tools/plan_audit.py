@@ -59,8 +59,6 @@ ALLOW = {
     "negative_pair_sample": {"BroadcastNestedLoopJoin"}, # 1-row corpus-size aggregate broadcast into the index math
     "neardup_triangle_stats": {"BroadcastNestedLoopJoin"},  # final assembly cross-join of three 1-row aggregates (node/edge stats, wedge count, triangle count)
     "temperature_mix_sample": {"BroadcastNestedLoopJoin"},  # 1-row (ntot, Z) normalizer broadcast onto the |sources| rate table
-    "semantic_decontaminate": {"BroadcastNestedLoopJoin"},  # 1-row eval-probe ARRAY broadcast over the corpus; the argmax is a row-local fold, so the corpus never shuffles
-    "embedding_curation_funnel": {"BroadcastNestedLoopJoin"},  # inherits the decontamination stage's 1-row eval-array broadcast; the dedup stage's assignment table is persisted, so the corpus carries no extra scan
     "training_corpus_funnel": {"BroadcastNestedLoopJoin"},  # same 1-row mix normalizer inside the capstone funnel
     # Presentation ORDER BY over a group-bounded aggregate output: the
     # declared query semantics include the output order (oracle twins carry
@@ -93,15 +91,6 @@ ALLOW = {
 # independent corpus passes (doc flags, near-dup pair generation,
 # eval-overlap decontam) feeding one persisted flags table
 ALLOW["training_corpus_funnel"] = ALLOW["training_corpus_funnel"] | {"TableRescan"}
-
-# embedding_curation_funnel: three textually-distinct embeddings scans =
-# the decontamination stage's two passes (eval-probe agg + corpus side)
-# plus the SemDeDup assignment cache's BUILD scan, which the
-# InMemoryRelation detail block prints but which executed ONCE at
-# persist-materialization time — this plan only reads the cached blocks.
-# Independent hygiene stages, not missed reuse (the r10 persist change
-# made the build scan visible where the old localCheckpoint hid it).
-ALLOW["embedding_curation_funnel"] = ALLOW["embedding_curation_funnel"] | {"TableRescan"}
 
 
 def plan_of(df) -> str:
