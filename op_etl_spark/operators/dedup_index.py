@@ -1,6 +1,6 @@
 """Persisted MinHash-LSH dedup index: build / dedup-delta / append.
 
-The suite's `incremental_lsh_dedup` (suite/dedup.py:1273) proves the
+The suite's `incremental_lsh_dedup` (suite/dedup.py) proves the
 delta-vs-corpus PLAN — broadcast the batch's band keys against the
 corpus band table, never re-pair the corpus with itself — but rebuilds
 both sides from the documents table on every call (correct for the
@@ -12,7 +12,7 @@ against them and fold each accepted delta in.
 
 On disk (both plain parquet):
 
-- ``{path}/bands``    — (band_id, x0..x{BAND_ROWS-1}, doc_id), the LSH
+- ``{path}/bands``    — (doc_id, band_id, x0..x{BAND_ROWS-1}), the LSH
   posting table, repartitioned by band key so a read starts
   hash-clustered for the bucket groupBy;
 - ``{path}/shingles`` — (doc_id, shingles: array<bigint>), the
@@ -34,6 +34,11 @@ this module's read path works with unchanged. Minhash signatures are
 pure functions of the text (md5-derived 60/56-bit integers,
 suite/dedup._minhash_sigs_np), so index rows written today and rows
 computed tomorrow always agree.
+
+Every step is suite/dedup.py's: the shingle ids, the signatures, the
+banding and the delta-vs-corpus match (`_delta_matches`, which
+`incremental_lsh_dedup` runs too). A NULL-text document gets no band
+rows and matches nothing.
 """
 
 from __future__ import annotations
@@ -43,28 +48,20 @@ from pyspark.sql import functions as F
 
 
 def _banded(docs: DataFrame):
-    """(bands, hashed_shingles) for a documents(doc_id, text) frame —
-    the exact expressions the suite gate verifies, shared by deferred
-    import (suite.dedup imports operators.counters, so the import points
-    down-module to avoid a cycle)."""
-    from ..suite.dedup import _band_structs, _minhash_sigs_np, _shingle_arrays
+    """(bands, shingle ids) for a documents(doc_id, text) frame. The
+    suite.dedup import is deferred: suite.dedup imports
+    operators.counters, so the import points down-module to avoid a
+    cycle."""
+    from ..suite.dedup import _bands, _minhash_sigs_np, _shingle_arrays, _shingle_ids
 
     arrs = _shingle_arrays(docs)
-    sigs = _minhash_sigs_np(arrs)
-    bands = sigs.select(
-        "doc_id", F.explode(_band_structs()).alias("band")
-    ).select("doc_id", "band.*")
-    hashed = arrs.select(
-        "doc_id",
-        F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles"),
-    )
-    return bands, hashed
+    return _bands(_minhash_sigs_np(arrs)), _shingle_ids(arrs)
 
 
 def band_key() -> list[str]:
-    from ..suite.dedup import BAND_ROWS
+    from ..suite.dedup import BAND_KEY
 
-    return ["band_id"] + [f"x{r}" for r in range(BAND_ROWS)]
+    return list(BAND_KEY)
 
 
 def build_dedup_index(docs: DataFrame, path: str, n_buckets: int = 0) -> None:
@@ -83,46 +80,14 @@ def dedup_delta(spark: SparkSession, path: str, new_docs: DataFrame) -> DataFram
     against the persisted corpus at JACCARD_THRESHOLD — the delta is
     broadcast; the corpus pays one scan + one band-key aggregate, and
     never re-pairs with itself."""
-    from ..suite.dedup import JACCARD_THRESHOLD, LSH_BUCKET_CAP
-    from ..suite._util import fround
+    from ..suite.dedup import _delta_matches
 
-    key = band_key()
-    corpus_bands = spark.read.parquet(f"{path}/bands")
-    corpus_sh = spark.read.parquet(f"{path}/shingles")
-    new_bands, new_hashed = _banded(new_docs)
-
-    posts_old = (
-        corpus_bands.groupBy(*key)
-        .agg(F.collect_list("doc_id").alias("olds"))
-        .filter(F.size("olds") <= LSH_BUCKET_CAP)
-    )
-    b_new = new_bands.withColumnRenamed("doc_id", "new_id")
-    cand = (
-        posts_old.join(F.broadcast(b_new), key)
-        .select("new_id", F.explode("olds").alias("old_id"))
-        .distinct()
-    )
-    a_new = new_hashed.select(
-        F.col("doc_id").alias("new_id"), F.col("shingles").alias("shn")
-    )
-    a_old = corpus_sh.select(
-        F.col("doc_id").alias("old_id"), F.col("shingles").alias("sho")
-    )
-    n_common = F.size(F.array_intersect("shn", "sho"))
-    return (
-        cand.join(F.broadcast(a_new), "new_id")
-        .join(a_old, "old_id")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            fround(
-                F.col("n_common")
-                / (F.size("shn") + F.size("sho") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("new_id", "old_id", "n_common", "jaccard")
+    new_bands, new_ids = _banded(new_docs)
+    return _delta_matches(
+        spark.read.parquet(f"{path}/bands"),
+        spark.read.parquet(f"{path}/shingles"),
+        new_bands,
+        F.broadcast(new_ids),
     )
 
 

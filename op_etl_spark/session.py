@@ -56,6 +56,18 @@ def get_spark(
     return spark
 
 
+def _ship_zip_path(pkg_dir: str) -> str:
+    """The cached zip of the package at `pkg_dir`: one per checkout, so
+    two checkouts on one host never ship each other's code."""
+    import hashlib
+    import tempfile
+
+    key = hashlib.sha1(os.path.abspath(pkg_dir).encode("utf-8")).hexdigest()[:16]
+    return os.path.join(
+        tempfile.gettempdir(), "op_etl_spark_ship", f"op_etl_spark_pkg_{key}.zip"
+    )
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     """Make op_etl_spark importable on executor Python workers.
 
@@ -68,15 +80,11 @@ def ensure_shipped(spark: SparkSession) -> None:
     """
     if getattr(spark, "_op_etl_shipped", False):
         return
-    import os
     import shutil
-    import tempfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    staging = os.path.join(tempfile.gettempdir(), "op_etl_spark_ship")
-    os.makedirs(staging, exist_ok=True)
-    zip_base = os.path.join(staging, "op_etl_spark_pkg")
-    zip_path = zip_base + ".zip"
+    zip_path = _ship_zip_path(pkg_dir)
+    os.makedirs(os.path.dirname(zip_path), exist_ok=True)
 
     def _newest_source_mtime() -> float:
         newest = 0.0
@@ -87,12 +95,15 @@ def ensure_shipped(spark: SparkSession) -> None:
         return newest
 
     # the zip is cached across processes — REBUILD when any package source
-    # is newer, or a stale zip (missing newly added modules) ships forever
+    # is newer, or a stale zip (missing newly added modules) ships forever.
+    # Built under a per-process name and renamed into place, so a reader
+    # never sees a half-written zip.
     if (not os.path.exists(zip_path)
             or os.path.getmtime(zip_path) < _newest_source_mtime()):
-        shutil.make_archive(zip_base, "zip",
-                            root_dir=os.path.dirname(pkg_dir),
-                            base_dir=os.path.basename(pkg_dir))
+        tmp = shutil.make_archive(f"{zip_path}.{os.getpid()}", "zip",
+                                  root_dir=os.path.dirname(pkg_dir),
+                                  base_dir=os.path.basename(pkg_dir))
+        os.replace(tmp, zip_path)
     spark.sparkContext.addPyFile(zip_path)
     spark._op_etl_shipped = True
 

@@ -77,6 +77,18 @@ def dot_fold(a, b) -> Column:
     )
 
 
+def word_ngrams(words, n: int) -> Column:
+    """Every run of `n` consecutive words of an array<string> column, in
+    order and with repeats, each joined by one space — DuckDB's
+    `[array_to_string(ws[i:i+n-1], ' ') for i in range(1, len(ws) - n + 2)]`.
+    NULL for NULL words. Needs at least n - 1 words (slice refuses a
+    negative length), so callers guard shorter arrays first."""
+    w = _c(words)
+    m = F.size(w) - (n - 1)
+    zipped = F.arrays_zip(*[F.slice(w, i + 1, m) for i in range(n)])
+    return F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]))
+
+
 def norm_fold(a) -> Column:
     return F.sqrt(dot_fold(a, a))
 

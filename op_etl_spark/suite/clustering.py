@@ -48,8 +48,9 @@ from .dedup import (
     INC_REMAINDER,
     _DUCK_SHINGLES,
     _docs,
-    _hashed_shingle_arrays,
     _posting_pairs,
+    _shingle_arrays,
+    _shingle_ids,
 )
 
 MIN_COMMON_TRIGRAMS = 6
@@ -67,7 +68,7 @@ def _pairs(
     oracle applies the identical cap. Since near-dup pairs share many
     LOW-frequency shingles, the >= MIN_COMMON_TRIGRAMS edge test is
     insensitive to losing ubiquitous ones."""
-    arrs = _hashed_shingle_arrays(_docs(spark, sf_dir))
+    arrs = _shingle_ids(_shingle_arrays(_docs(spark, sf_dir)))
     sh = arrs.select(
         F.struct(F.col("doc_id")).alias("m"),
         F.explode("shingles").alias("shingle"),

@@ -32,7 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import fround, norm_fold, read_table
+from ._util import fround, norm_fold, read_table, word_ngrams
 from ..operators import kmeans
 from ..operators.sampling import hash_unit, hash_unit_sql
 
@@ -53,18 +53,8 @@ def _word_5grams(d: DataFrame) -> DataFrame:
     """(doc_id, g): distinct word-5-grams. Same single-narrow-stage shape
     as dedup._shingle_arrays — split once, slice+zip, no shuffle."""
     d = d.select("doc_id", F.split(F.col("text"), " ").alias("w"))
-    w = F.col("w")
-    sz = F.size(w)
-    m = sz - (NGRAM_N - 1)
-    zipped = F.arrays_zip(*[F.slice(w, i + 1, m) for i in range(NGRAM_N)])
     grams = F.when(
-        sz >= NGRAM_N,
-        F.array_distinct(
-            F.transform(
-                zipped,
-                lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(NGRAM_N)]),
-            )
-        ),
+        F.size("w") >= NGRAM_N, F.array_distinct(word_ngrams("w", NGRAM_N))
     ).otherwise(F.array().cast("array<string>"))
     return d.select("doc_id", F.explode(grams).alias("g"))
 

@@ -5,24 +5,32 @@ scale-first:
  - exact dedup = one hash-groupBy (single shuffle, map-side combine);
  - n-gram Jaccard = shingle inverted-index self-join (the exact baseline;
    at 100 TB you run it only on LSH candidates);
- - MinHash+LSH = signatures in one pass: a fused mapInPandas kernel over
-   the shingle arrays for scan-direct callers (one md5 per distinct
-   shingle per batch, per-doc minima via reduceat), the codegen
-   md5/conv expression chain for callers whose arrays are already
-   persisted (dispatch rule on `_minhash_sigs`); band-bucket join
-   produces candidates without any all-pairs work;
+ - MinHash+LSH = signatures in one mapInPandas pass over the shingle
+   arrays (one md5 per distinct shingle per batch, per-doc minima via
+   reduceat); band-bucket join produces candidates without any
+   all-pairs work;
  - SimHash = 16-bit fingerprint via per-bit majority vote, prefix-bucket
    join (banding) instead of an O(n^2) cross join.
 
+Each step of the near-dup family has one owner here, which
+operators/dedup_index.py and suite/clustering.py call too:
+`_shingle_arrays` (the shingle sets), `_shingle_ids` (their 64-bit ids),
+`_minhash_sigs_np` (signatures), `_bands` (the LSH layout),
+`_exact_overlap` (the verify join) and `_rounded_jaccard` (the score).
+A NULL text has no shingles: its shingle array and signature are NULL
+and it matches nothing, as in the DuckDB oracles, where NULL never joins
+NULL.
+
 Hash contract shared with the DuckDB oracles: ONE md5 per shingle/token,
-hex-parsed into 60/56-bit ints on both engines (Spark `conv`, DuckDB
-`('0x'||…)::BIGINT`), then a Carter-Wegman family h_k = (a + k*b) mod
-(2^61-1) derives all minhash functions with exact int64 arithmetic — 16×
-less hashing than the naive min(md5(k|shingle)) per k, with the pairwise-
-independence guarantee the naive seeding lacks. Everything is codegen'd
-column expressions, except the 64-bit SimHash vote partials and the
-minhash signature minima, which run as vectorized mapInPandas kernels
-(bit-exact by integer arithmetic — see `_simhash64`, `_minhash_sigs_np`).
+hex-parsed into 60/56-bit ints on both engines (Spark `conv` or Python
+`int(hex, 16)`, DuckDB `('0x'||…)::BIGINT`), then a Carter-Wegman family
+h_k = (a + k*b) mod (2^61-1) derives all minhash functions with exact
+int64 arithmetic — 16× less hashing than the naive min(md5(k|shingle))
+per k, with the pairwise-independence guarantee the naive seeding lacks.
+Everything is column expressions, except the 64-bit SimHash vote
+partials and the minhash signature minima, which run as vectorized
+mapInPandas kernels (bit-exact by integer arithmetic — see `_simhash64`,
+`_minhash_sigs_np`).
 """
 
 from __future__ import annotations
@@ -32,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import fround, read_table
+from ._util import fround, read_table, word_ngrams
 
 N_HASHES = 16  # minhash signature length
 BAND_ROWS = 4  # rows per LSH band -> 4 bands
@@ -40,6 +48,7 @@ MINHASH_P = (1 << 61) - 1  # Mersenne prime; a < 2^60, k*b < 2^60 -> no int64 ov
 JACCARD_THRESHOLD = 0.3
 SIMHASH_BITS = 16
 SIMHASH_MAX_HAMMING = 3
+BAND_KEY = ["band_id"] + [f"x{r}" for r in range(BAND_ROWS)]
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,39 +56,63 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_arrays(d: DataFrame) -> DataFrame:
-    """(doc_id, shingles: array<string>) — distinct word-3-gram shingles.
+    """(doc_id, shingles: array<string>) — distinct word-3-gram shingles;
+    a text of fewer than 3 words is its own single shingle, and a NULL
+    text has a NULL array.
 
     `split(text)` is materialized into a `words` column first so the slice
     lambda doesn't re-split the text once per shingle (O(len²) otherwise).
-    One narrow stage, no shuffle, codegen'd end to end.
+    One narrow stage, no shuffle.
     """
     d = d.select("doc_id", F.split(F.col("text"), " ").alias("words"))
     words = F.col("words")
-    n = F.size(words)
-    zipped = F.arrays_zip(
-        F.slice(words, 1, n - 2), F.slice(words, 2, n - 2), F.slice(words, 3, n - 2)
+    sh = F.when(F.size(words) >= 3, F.array_distinct(word_ngrams(words, 3))).when(
+        words.isNotNull(), F.array(F.array_join(words, " "))
     )
-    sh = F.when(
-        n >= 3,
-        F.array_distinct(
-            F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"]))
-        ),
-    ).otherwise(F.array(F.array_join(words, " ")))
     return d.select("doc_id", sh.alias("shingles"))
 
 
-def _hashed_shingle_arrays(d: DataFrame) -> DataFrame:
-    """(doc_id, shingles: array<long>) — the same distinct shingle sets as
-    `_shingle_arrays`, as 64-bit xxhash64 IDs: everything downstream
+def _shingle_ids(arrs: DataFrame) -> DataFrame:
+    """(doc_id, shingles: array<long>) — a `_shingle_arrays` table with
+    each shingle as its 64-bit xxhash64 ID: everything downstream
     (shuffle keys, posting lists) moves 8-byte longs instead of ~25-byte
     strings — the standard trick at scale (Spark MLlib's MinHashLSH
     likewise hashes terms to ints first). The string-side oracle still
     matches because the final pair output only depends on set equality,
     and 64-bit collisions at ~2^22 distinct shingles (~1e-6,
-    deterministic) don't occur in these corpora."""
-    arrs = _shingle_arrays(d)
+    deterministic) don't occur in these corpora. A NULL array stays
+    NULL, so a NULL text explodes to no posting and matches nothing."""
     return arrs.select(
         "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles")
+    )
+
+
+def _rounded_jaccard(common: str = "n_common", n1: str = "n1", n2: str = "n2"):
+    """|A ∩ B| / |A ∪ B| from the overlap and the two sizes, rounded to 4
+    decimals the way every oracle rounds it."""
+    c = F.col(common)
+    return fround(c / (F.col(n1) + F.col(n2) - c), 4)
+
+
+def _exact_overlap(
+    cand: DataFrame, ids: tuple[str, str], side1: DataFrame, side2: DataFrame
+) -> DataFrame:
+    """The exact verify: candidate pairs joined back to both documents'
+    shingle-id arrays (`_shingle_ids` tables), as (id1, id2, n_common,
+    n1, n2) under the column names in `ids`: n_common = |S1 ∩ S2| by
+    `array_intersect`, n1 and n2 the set sizes. Cost is
+    O(|candidates| x shingles/doc); no corpus-wide posting expansion.
+    Callers score and threshold the overlap; a side that should be
+    broadcast arrives already wrapped in `F.broadcast`."""
+    id1, id2 = ids
+    s1 = side1.select(F.col("doc_id").alias(id1), F.col("shingles").alias("_s1"))
+    s2 = side2.select(F.col("doc_id").alias(id2), F.col("shingles").alias("_s2"))
+    return cand.join(s1, id1).join(s2, id2).select(
+        id1,
+        id2,
+        F.size(F.array_intersect("_s1", "_s2")).alias("n_common"),
+        F.size("_s1").alias("n1"),
+        F.size("_s2").alias("n2"),
     )
 
 
@@ -121,6 +154,10 @@ _DUCK_SHINGLES = """
 """
 
 
+# `_rounded_jaccard`'s twin over the oracles' `sizes` joins sa and sb
+_DUCK_JACCARD = "floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0"
+
+
 # --- exact dedup: hash-groupBy on content fingerprint ---
 
 def exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,7 +196,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two small shuffles total, zero joins; shingles are 64-bit IDs so both
     shuffles move longs, not strings.
     """
-    arrs = _hashed_shingle_arrays(_docs(spark, sf_dir))
+    arrs = _shingle_ids(_shingle_arrays(_docs(spark, sf_dir)))
     sh = arrs.select(
         F.struct(F.col("doc_id"), F.size("shingles").alias("n_sh")).alias("m"),
         F.explode("shingles").alias("shingle"),
@@ -180,10 +217,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     return (
-        common.withColumn(
-            "jaccard",
-            fround(F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common")), 4),
-        )
+        common.withColumn("jaccard", _rounded_jaccard())
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id1", "id2", "n_common", "jaccard")
     )
@@ -197,73 +231,38 @@ common AS (
   FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2)
 SELECT id1, id2, n_common,
-       floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0 AS jaccard
+       {_DUCK_JACCARD} AS jaccard
 FROM common
 JOIN sizes sa ON sa.doc_id = id1
 JOIN sizes sb ON sb.doc_id = id2
-WHERE floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0 >= {JACCARD_THRESHOLD}
+WHERE {_DUCK_JACCARD} >= {JACCARD_THRESHOLD}
 """
 
 
 # --- MinHash signatures + LSH band candidates ---
 
-def _minhash_sigs(sh: DataFrame) -> DataFrame:
-    """One shuffle: groupBy doc_id with 16 min((a + k*b) mod p) aggregates
-    over an exploded (doc_id, shingle) stream.
-
-    ONE md5 per shingle; a = md5 hex chars 1-15 (60 bits), b = chars 17-30
-    (56 bits), so a + 15*b < 2^61 stays exact in int64 on both engines.
-
-    Dispatch rule vs the fused kernel `_minhash_sigs_np` (measured at
-    sf0.1, guide §1): callers whose shingle-array table is ALREADY
-    persisted use this JVM expression chain — reading cached arrays into
-    codegen is cheaper than shipping them through Arrow to Python
-    (0.57 vs 0.69 s) — while scan-direct callers use the kernel, which
-    beats the per-occurrence md5/conv expression work 0.71 vs 1.07 s.
-    Both produce bit-identical signatures (pinned by
-    test_round12_more.py)."""
-    hx = F.md5(F.col("shingle").cast("binary"))
-    base = sh.select(
-        "doc_id",
-        F.conv(F.substring(hx, 1, 15), 16, 10).cast("long").alias("a"),
-        F.conv(F.substring(hx, 17, 14), 16, 10).cast("long").alias("b"),
-    )
-    aggs = [
-        F.min((F.col("a") + F.lit(k) * F.col("b")) % F.lit(MINHASH_P)).alias(f"h{k}")
-        for k in range(N_HASHES)
-    ]
-    return base.groupBy("doc_id").agg(*aggs)
-
-
 def _minhash_sigs_np(arrs: DataFrame) -> DataFrame:
-    """(doc_id, h0..h15) minhash signatures from the shingle-ARRAY table
+    """(doc_id, h0..h15) minhash signatures from a shingle-array table
     (`_shingle_arrays` output) — h_k = min over the doc's shingles of
     (a + k*b) mod p, a = md5 hex chars 1-15 (60 bits), b = chars 17-30
     (56 bits), so a + 15*b < 2^61 stays exact in int64 on both engines.
 
-    Fused (guide §2.3/§2.4/§4.2 — the `_simhash64` discipline): the
-    retired chain exploded every (doc, shingle) occurrence and ran
-    md5 -> 32-char hex -> two conv() hex-parses -> 16 modular
-    multiply-adds per exploded row, then folded the corpus-sized stream
-    through the 16-way min aggregate. Now ONE mapInPandas pass per Arrow
-    batch: each DISTINCT shingle in the batch is hashed once
-    (hashlib.md5 over the same UTF-8 bytes Spark's md5(cast binary)
-    hashes; the hex-slice parses are identical to the conv() columns),
+    ONE mapInPandas pass per Arrow batch (guide §2.3/§2.4/§4.2 — the
+    `_simhash64` discipline): each DISTINCT shingle in the batch is
+    hashed once (hashlib.md5 over the same UTF-8 bytes DuckDB's md5
+    hashes; the hex-slice parses equal its `('0x'||…)::BIGINT` casts),
     the 16 Carter-Wegman values are one int64 NumPy expression, and
     per-doc batch minima come from one reduceat over the array offsets.
-    The groupBy(doc_id) min that follows combines batch partials —
-    one 16-long row per (doc, batch) instead of the per-shingle stream.
+    The groupBy(doc_id) min that follows combines batch partials — one
+    16-long row per (doc, batch) instead of a per-shingle stream — and
+    equals the global min for ANY doc_id multiplicity, since min is
+    associative and commutative over any row split. int64
+    (a + k*b) % p never wraps (envelope above).
 
-    Bit-exact vs the retired formulation: min is associative and
-    commutative over any row split, so batch-local minima + the final
-    min-agg equal the retired global min for ANY doc_id multiplicity;
-    int64 (a + k*b) % p never wraps (envelope above) so NumPy and JVM
-    long arithmetic agree bit-for-bit; NULL shingle elements (the
-    null-text fallback array [NULL]) are ignored exactly like min()
-    ignores NULL rows, a doc whose every element is NULL keeps its row
-    with NULL h's in both formulations, and NULL/empty ARRAYS drop the
-    doc exactly like explode() did. Pinned by tests/test_round12_more.py
-    ::test_kernel_minhash_sigs_matches_retired_formulation."""
+    A doc with no shingle (a NULL or empty array, or only NULL elements)
+    keeps its row with NULL h's, as the oracle's min over NULL does;
+    `_bands` gives it no band. Checked against the DuckDB formulation in
+    tests/test_minhash.py."""
 
     def _sigs(batches):
         import hashlib
@@ -272,25 +271,15 @@ def _minhash_sigs_np(arrs: DataFrame) -> DataFrame:
         sentinel = np.int64(1) << 62  # > any (a + k*b) % p < 2^61
         for pdf in batches:
             lists = pdf["shingles"].to_numpy()
-            keep = np.array(
-                [x is not None and len(x) > 0 for x in lists], dtype=bool
+            lens = np.fromiter(
+                (0 if x is None else len(x) for x in lists),
+                dtype=np.int64,
+                count=len(lists),
             )
-            if not keep.all():
-                lists = lists[keep]
-            n = len(lists)
-            if not n:
-                continue
-            doc_ids = pdf["doc_id"].to_numpy()[keep] if not keep.all() else pdf[
-                "doc_id"
-            ].to_numpy()
-            lens = np.fromiter((len(x) for x in lists), dtype=np.int64, count=n)
-            flat = np.empty(int(lens.sum()), dtype=object)
-            pos = 0
-            for x in lists:
-                flat[pos : pos + len(x)] = x
-                pos += len(x)
-            # factorize: one hash per DISTINCT shingle per batch; None
-            # elements code to -1 and take the sentinel (ignored by min)
+            parts = [x for x in lists if x is not None]
+            flat = np.concatenate(parts) if parts else np.empty(0, dtype=object)
+            # factorize: one hash per DISTINCT shingle per batch; a NULL
+            # element codes to -1, which indexes the trailing sentinel row
             codes, uniq = pd.factorize(flat)
             a = np.empty(len(uniq), dtype=np.int64)
             b = np.empty(len(uniq), dtype=np.int64)
@@ -298,24 +287,18 @@ def _minhash_sigs_np(arrs: DataFrame) -> DataFrame:
                 hx = hashlib.md5(s.encode("utf-8")).hexdigest()
                 a[i] = int(hx[0:15], 16)
                 b[i] = int(hx[16:30], 16)
-            hs = (a[:, None] + ks[None, :] * b[:, None]) % MINHASH_P  # (u, 16)
-            full = np.where(
-                codes[:, None] >= 0,
-                hs[np.clip(codes, 0, None)],
-                sentinel,
-            )
-            offsets = np.zeros(n, dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            mins = np.minimum.reduceat(full, offsets, axis=0)  # (n, 16)
-            out = pd.DataFrame({"doc_id": doc_ids})
-            all_null = mins[:, 0] == sentinel  # NULL-only docs
+            hs = np.full((len(uniq) + 1, N_HASHES), sentinel)
+            hs[:-1] = (a[:, None] + ks[None, :] * b[:, None]) % MINHASH_P
+            mins = np.full((len(lists), N_HASHES), sentinel)
+            has = lens > 0
+            if has.any():
+                starts = (np.cumsum(lens) - lens)[has]
+                mins[has] = np.minimum.reduceat(hs[codes], starts, axis=0)
+            null = mins[:, 0] == sentinel
+            out = {"doc_id": pdf["doc_id"].to_numpy()}
             for k in range(N_HASHES):
-                col = pd.Series(mins[:, k], dtype="int64")
-                if all_null.any():
-                    col = col.astype("object")
-                    col[all_null] = None
-                out[f"h{k}"] = col
-            yield out
+                out[f"h{k}"] = pd.arrays.IntegerArray(mins[:, k].copy(), null)
+            yield pd.DataFrame(out)
 
     sch = "doc_id bigint, " + ", ".join(f"h{k} bigint" for k in range(N_HASHES))
     partial = arrs.select("doc_id", "shingles").mapInPandas(_sigs, sch)
@@ -329,11 +312,7 @@ LSH_BUCKET_CAP = 32
 
 def _band_structs():
     """array<struct(band_id, x0..x{BAND_ROWS-1})> over the h0..h15
-    signature columns — THE banding layout. Single owner: the LSH
-    self-join, the incremental gate, and the persisted index
-    (operators/dedup_index.py) all band through this expression, so
-    index rows written yesterday and delta rows computed today can never
-    disagree on the layout."""
+    signature columns; `_bands` is its one caller."""
     n_bands = N_HASHES // BAND_ROWS
     return F.array(
         *[
@@ -349,13 +328,25 @@ def _band_structs():
     )
 
 
+def _bands(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band_id, x0..x{BAND_ROWS-1}) — THE banding layout of a
+    signature table, one row per (doc, band), exploded in ONE pass over
+    the signatures (not a 4-way union re-reading them). The LSH
+    self-join, the incremental gate and the persisted index
+    (operators/dedup_index.py) all band through here, so index rows
+    written yesterday and delta rows computed today can never disagree
+    on the layout. A NULL signature gets no band: it matches nothing."""
+    return (
+        sigs.filter(F.col("h0").isNotNull())
+        .select("doc_id", F.explode(_band_structs()).alias("band"))
+        .select("doc_id", "band.*")
+    )
+
+
 def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
-    """LSH candidate pairs from a signature table (doc_id, h0..h15 — the
-    caller picks `_minhash_sigs_np` or `_minhash_sigs` per the dispatch
-    rule documented on the latter): bands exploded in ONE pass over the
-    signature table (not a 4-way union re-reading it), bucketed directly
-    on the (band_id, h..h) int 4-tuple — no band re-hash, no self-join;
-    pairs generated in-array.
+    """LSH candidate pairs from a signature table (doc_id, h0..h15),
+    bucketed directly on the (band_id, x0..x3) int tuple — no band
+    re-hash, no self-join; pairs generated in-array.
 
     Buckets larger than LSH_BUCKET_CAP are dropped before pair
     expansion: a bucket that big means a boilerplate/exact-dup cluster
@@ -363,13 +354,10 @@ def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     same quadratic cost curve the scale probe caught in the exact
     jaccard — the cap bounds pairs per bucket at CAP^2 at any corpus
     size."""
-    band_structs = _band_structs()
-    banded = sigs.select(
-        F.struct(F.col("doc_id")).alias("m"), F.explode(band_structs).alias("band")
-    )
     posts = (
-        banded.groupBy("band.band_id", *[f"band.x{r}" for r in range(BAND_ROWS)])
-        .agg(F.collect_list("m").alias("m"))
+        _bands(sigs)
+        .groupBy(*BAND_KEY)
+        .agg(F.collect_list(F.struct("doc_id")).alias("m"))
         .filter(F.size("m") <= LSH_BUCKET_CAP)
     )
     return (
@@ -445,7 +433,7 @@ def minhash_signature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First 4 signature components for a deterministic sample of docs —
     verifies the signature computation itself, not just the candidate set."""
     d = _docs(spark, sf_dir).filter(F.col("doc_id") % 50 == 0)
-    sigs = _minhash_sigs_np(_shingle_arrays(d))  # scan-direct -> kernel
+    sigs = _minhash_sigs_np(_shingle_arrays(d))
     return sigs.select("doc_id", "h0", "h1", "h2", "h3")
 
 
@@ -870,7 +858,7 @@ def ngram_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     full, so the reported jaccard_lb is a LOWER BOUND of true Jaccard —
     pairs it keeps are guaranteed-near-dup, the verify stage
     (ngram_jaccard_pairs on candidates) recovers exact scores."""
-    return _capped_candidate_pairs(_hashed_shingle_arrays(_docs(spark, sf_dir)))
+    return _capped_candidate_pairs(_shingle_ids(_shingle_arrays(_docs(spark, sf_dir))))
 
 
 def _capped_candidate_pairs(
@@ -913,10 +901,7 @@ def _capped_candidate_pairs(
     # a shared name would sum branch and union counts into nonsense.
     common = counters.observe_stage(common, qname, "capped_candidates")
     out = (
-        common.withColumn(
-            "jaccard_lb",
-            fround(F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common")), 4),
-        )
+        common.withColumn("jaccard_lb", _rounded_jaccard())
         .filter(F.col("jaccard_lb") >= JACCARD_THRESHOLD)
         .select("id1", "id2", "n_common", "jaccard_lb")
     )
@@ -963,16 +948,7 @@ def exact_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.split(F.col("text"), " ").alias("words"))
         .filter(F.size("words") >= SPAN_W)
     )
-    words = F.col("words")
-    n = F.size(words)
-    zipped = F.arrays_zip(
-        *[F.slice(words, i + 1, n - (SPAN_W - 1)) for i in range(SPAN_W)]
-    )
-    grams = F.array_distinct(
-        F.transform(
-            zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(SPAN_W)])
-        )
-    )
+    grams = F.array_distinct(word_ngrams("words", SPAN_W))
     sel = F.filter(
         grams,
         lambda g: F.pmod(
@@ -1045,11 +1021,11 @@ common AS (
   FROM capsh a JOIN capsh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2)
 SELECT id1, id2, n_common,
-       floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0 AS jaccard_lb
+       {_DUCK_JACCARD} AS jaccard_lb
 FROM common
 JOIN sizes sa ON sa.doc_id = id1
 JOIN sizes sb ON sb.doc_id = id2
-WHERE floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0 >= {JACCARD_THRESHOLD}
+WHERE {_DUCK_JACCARD} >= {JACCARD_THRESHOLD}
 """
 
 
@@ -1079,7 +1055,9 @@ def jaccard_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch, the DF-capped branch, and the verify joins all read the
     cached blocks instead of re-scanning and re-shingling the corpus
     (3x before). At 100 TB this persist is a materialized shingle table
-    on storage; locally MEMORY_AND_DISK is its analog."""
+    on storage; locally MEMORY_AND_DISK is its analog. The signature
+    kernel reads the cached string arrays; the other three read their
+    shingle ids."""
     from pyspark import StorageLevel
 
     from ..operators import counters
@@ -1088,38 +1066,18 @@ def jaccard_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = _shingle_arrays(_docs(spark, sf_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    hashed = arrs.select(
-        "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles")
-    )
-    # expression-chain sigs, not the kernel: arrs is persisted here and
-    # cached arrays feed codegen cheaper than an Arrow crossing
-    # (dispatch rule on _minhash_sigs)
-    sh = arrs.select("doc_id", F.explode("shingles").alias("shingle"))
+    ids = _shingle_ids(arrs)
     cand = (
         counters.observe_stage(
-            _lsh_candidate_pairs(_minhash_sigs(sh)), _QN, "lsh_candidates"
+            _lsh_candidate_pairs(_minhash_sigs_np(arrs)), _QN, "lsh_candidates"
         )
-        .union(
-            _capped_candidate_pairs(hashed, qname=_QN).select("id1", "id2")
-        )
+        .union(_capped_candidate_pairs(ids, qname=_QN).select("id1", "id2"))
         .distinct()
     )
     cand = counters.observe_stage(cand, _QN, "candidates")
-    a1 = hashed.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    a2 = hashed.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    n_common = F.size(F.array_intersect("sh1", "sh2"))
     out = (
-        cand.join(a1, "id1")
-        .join(a2, "id2")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            fround(
-                F.col("n_common")
-                / (F.size("sh1") + F.size("sh2") - F.col("n_common")),
-                4,
-            ),
-        )
+        _exact_overlap(cand, ("id1", "id2"), ids, ids)
+        .withColumn("jaccard", _rounded_jaccard())
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id1", "id2", "n_common", "jaccard")
     )
@@ -1144,7 +1102,7 @@ ORACLE_JACCARD_VERIFIED = (
   SELECT id1, id2 FROM ccommon
   JOIN sizes sa ON sa.doc_id = id1
   JOIN sizes sb ON sb.doc_id = id2
-  WHERE floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0 >= {JACCARD_THRESHOLD})
+  WHERE {_DUCK_JACCARD} >= {JACCARD_THRESHOLD})
 , cand AS (SELECT id1, id2 FROM lsh UNION SELECT id1, id2 FROM cpairs)
 , vcommon AS (
   SELECT c.id1, c.id2, count(*) AS n_common
@@ -1153,11 +1111,11 @@ ORACLE_JACCARD_VERIFIED = (
   JOIN sh b ON b.doc_id = c.id2 AND b.shingle = a.shingle
   GROUP BY 1, 2)
 SELECT id1, id2, n_common,
-       floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0 AS jaccard
+       {_DUCK_JACCARD} AS jaccard
 FROM vcommon
 JOIN sizes sa ON sa.doc_id = id1
 JOIN sizes sb ON sb.doc_id = id2
-WHERE floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0 >= {JACCARD_THRESHOLD}
+WHERE {_DUCK_JACCARD} >= {JACCARD_THRESHOLD}
 """
 )
 
@@ -1223,7 +1181,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import counters
 
-    arrs = _hashed_shingle_arrays(_docs(spark, sf_dir)).persist(
+    arrs = _shingle_ids(_shingle_arrays(_docs(spark, sf_dir))).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     sh = arrs.select("doc_id", F.explode("shingles").alias("shingle"))
@@ -1294,21 +1252,9 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = counters.observe_stage(
         cand, "prefix_filter_jaccard_pairs", "candidates"
     )
-    a1 = arrs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    a2 = arrs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    n_common = F.size(F.array_intersect("sh1", "sh2"))
     out = (
-        cand.join(a1, "id1")
-        .join(a2, "id2")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            fround(
-                F.col("n_common")
-                / (F.size("sh1") + F.size("sh2") - F.col("n_common")),
-                4,
-            ),
-        )
+        _exact_overlap(cand, ("id1", "id2"), arrs, arrs)
+        .withColumn("jaccard", _rounded_jaccard())
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id1", "id2", "n_common", "jaccard")
     )
@@ -1350,7 +1296,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejection can only discard pairs that fail both directions)."""
     from pyspark import StorageLevel
 
-    arrs = _hashed_shingle_arrays(_docs(spark, sf_dir)).persist(
+    arrs = _shingle_ids(_shingle_arrays(_docs(spark, sf_dir))).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     sh = arrs.select("doc_id", F.explode("shingles").alias("shingle"))
@@ -1400,19 +1346,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id1", "id2")
     )
-    a1 = arrs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    a2 = arrs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    verified = (
-        cand.join(a1, "id1")
-        .join(a2, "id2")
-        .select(
-            "id1",
-            "id2",
-            F.size(F.array_intersect("sh1", "sh2")).alias("n_common"),
-            F.size("sh1").alias("n1"),
-            F.size("sh2").alias("n2"),
-        )
-    )
+    verified = _exact_overlap(cand, ("id1", "id2"), arrs, arrs)
     fwd = verified.select(
         F.col("id1").alias("inner_id"),
         F.col("id2").alias("outer_id"),
@@ -1491,19 +1425,15 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard (boilerplate shingles dropped before pair expansion; min-sum
     is then a lower bound and the reported score conservative). Oracle
     applies the identical cap."""
-    d = _docs(spark, sf_dir)
     # shingles WITH multiplicity: same 3-gram construction as
-    # _shingle_arrays but without array_distinct
-    dd = d.select("doc_id", F.split(F.col("text"), " ").alias("words"))
-    words = F.col("words")
-    nw = F.size(words)
-    zipped = F.arrays_zip(
-        F.slice(words, 1, nw - 2), F.slice(words, 2, nw - 2), F.slice(words, 3, nw - 2)
+    # _shingle_arrays but without array_distinct (NULL text: no shingle)
+    dd = _docs(spark, sf_dir).select(
+        "doc_id", F.split(F.col("text"), " ").alias("words")
     )
-    sh = F.when(
-        nw >= 3,
-        F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"])),
-    ).otherwise(F.array(F.array_join(words, " ")))
+    words = F.col("words")
+    sh = F.when(F.size(words) >= 3, word_ngrams(words, 3)).when(
+        words.isNotNull(), F.array(F.array_join(words, " "))
+    )
     counts = (
         dd.select("doc_id", F.explode(sh).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -1530,12 +1460,7 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.least(F.col("a.cnt"), F.col("b.cnt"))).alias("minsum"))
     )
     return (
-        pair_min.withColumn(
-            "w_jaccard",
-            fround(
-                F.col("minsum") / (F.col("s1") + F.col("s2") - F.col("minsum")), 4
-            ),
-        )
+        pair_min.withColumn("w_jaccard", _rounded_jaccard("minsum", "s1", "s2"))
         .filter(F.col("w_jaccard") >= WJ_THRESHOLD)
         .select("id1", "id2", F.col("minsum").cast("long").alias("minsum"), "w_jaccard")
     )
@@ -1580,21 +1505,46 @@ INC_MOD = 10
 INC_REMAINDER = 3
 
 
+def _delta_matches(
+    old_bands: DataFrame, old_ids: DataFrame, new_bands: DataFrame, new_ids: DataFrame
+) -> DataFrame:
+    """(new_id, old_id, n_common, jaccard): every verified match of a
+    delta against a corpus at JACCARD_THRESHOLD, from the two sides'
+    `_bands` and `_shingle_ids` tables. The delta's band rows are
+    BROADCAST against the corpus postings, whose buckets above
+    LSH_BUCKET_CAP are dropped exactly as in the self-join path; the
+    corpus is scanned and aggregated, never re-paired with itself."""
+    posts_old = (
+        old_bands.groupBy(*BAND_KEY)
+        .agg(F.collect_list("doc_id").alias("olds"))
+        .filter(F.size("olds") <= LSH_BUCKET_CAP)
+    )
+    cand = (
+        posts_old.join(F.broadcast(new_bands.withColumnRenamed("doc_id", "new_id")), BAND_KEY)
+        .select("new_id", F.explode("olds").alias("old_id"))
+        .distinct()
+    )
+    return (
+        _exact_overlap(cand, ("new_id", "old_id"), new_ids, old_ids)
+        .withColumn("jaccard", _rounded_jaccard())
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("new_id", "old_id", "n_common", "jaccard")
+    )
+
+
 def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup the DELTA against the corpus — the production shape: a new
     batch arrives (here the deterministic doc_id%10==3 slice) and must be
     matched against everything already ingested WITHOUT re-pairing the
-    corpus with itself.
+    corpus with itself (`_delta_matches`; at 100 TB the corpus band
+    table is a persisted bucketed table partitioned by band key, the
+    nightly batch is MBs of signatures). Output per matched new doc: its
+    match count, the smallest matching corpus id (the canonical survivor
+    it would attach to), and that match's true Jaccard.
 
-    The batch's band keys are BROADCAST against the corpus band table
-    (at 100 TB that table is a persisted bucketed table partitioned by
-    band key; the nightly batch is MBs of signatures) — the corpus is
-    scanned, never reshuffled, and corpus-side buckets above
-    LSH_BUCKET_CAP are dropped exactly as in the self-join path. Each
-    candidate (new, old) pair is then exact-verified by shingle-array
-    intersection. Output per matched new doc: its match count, the
-    smallest matching corpus id (the canonical survivor it would attach
-    to), and that match's true Jaccard.
+    The band table feeds both the corpus postings and the broadcast
+    delta side, so it is persisted within the query and the signature
+    kernel runs once.
 
     Production callers use the PERSISTED split of this operator —
     operators/dedup_index.py build/dedup_delta/append (the band and
@@ -1604,50 +1554,11 @@ def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-memory shape the DuckDB oracle replays."""
     from pyspark import StorageLevel
 
-    d = _docs(spark, sf_dir)
-    arrs = _shingle_arrays(d).persist(StorageLevel.MEMORY_AND_DISK)
-    # expression-chain sigs: arrs is persisted (dispatch rule on
-    # _minhash_sigs), and this subtree runs twice (posting build +
-    # broadcast delta side) so the cached-array read matters doubly
-    sh = arrs.select("doc_id", F.explode("shingles").alias("shingle"))
-    sigs = _minhash_sigs(sh)
-    band_structs = _band_structs()
-    banded = sigs.select("doc_id", F.explode(band_structs).alias("band")).select(
-        "doc_id", "band.*"
-    )
+    arrs = _shingle_arrays(_docs(spark, sf_dir)).persist(StorageLevel.MEMORY_AND_DISK)
+    bands = _bands(_minhash_sigs_np(arrs)).persist(StorageLevel.MEMORY_AND_DISK)
+    ids = _shingle_ids(arrs)
     is_new = F.col("doc_id") % INC_MOD == INC_REMAINDER
-    key = ["band_id"] + [f"x{r}" for r in range(BAND_ROWS)]
-    posts_old = (
-        banded.filter(~is_new)
-        .groupBy(*key)
-        .agg(F.collect_list("doc_id").alias("olds"))
-        .filter(F.size("olds") <= LSH_BUCKET_CAP)
-    )
-    b_new = banded.filter(is_new).withColumnRenamed("doc_id", "new_id")
-    cand = (
-        posts_old.join(F.broadcast(b_new), key)
-        .select("new_id", F.explode("olds").alias("old_id"))
-        .distinct()
-    )
-    hashed = arrs.select(
-        "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles")
-    )
-    a_new = hashed.select(F.col("doc_id").alias("new_id"), F.col("shingles").alias("shn"))
-    a_old = hashed.select(F.col("doc_id").alias("old_id"), F.col("shingles").alias("sho"))
-    n_common = F.size(F.array_intersect("shn", "sho"))
-    verified = (
-        cand.join(a_new, "new_id")
-        .join(a_old, "old_id")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            fround(
-                F.col("n_common") / (F.size("shn") + F.size("sho") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    verified = _delta_matches(bands.filter(~is_new), ids, bands.filter(is_new), ids)
     best = F.min(
         F.struct(F.col("old_id").alias("old_id"), F.col("jaccard").alias("jaccard"))
     ).alias("b")
@@ -1688,7 +1599,7 @@ ORACLE_INCREMENTAL_LSH = (
   GROUP BY 1, 2)
 , v AS (
   SELECT new_id, old_id,
-         floor((n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common)) * 10000 + 0.5) / 10000.0 AS j
+         {_DUCK_JACCARD} AS j
   FROM common
   JOIN sizes sa ON sa.doc_id = old_id
   JOIN sizes sb ON sb.doc_id = new_id)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ._util import fround, read_table
+from ._util import fround, read_table, word_ngrams
 
 STOPWORDS = ("the", "a", "of", "and", "to")
 
@@ -244,18 +244,9 @@ def boilerplate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", F.split(F.col("text"), " ").alias("words")
     )
-    words = F.col("words")
-    n = F.size(words)
-    zipped = F.arrays_zip(
-        F.slice(words, 1, n - 2), F.slice(words, 2, n - 2), F.slice(words, 3, n - 2)
-    )
+    n = F.size("words")
     distinct_shingles = F.when(
-        n >= 3,
-        F.size(
-            F.array_distinct(
-                F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"]))
-            )
-        ),
+        n >= 3, F.size(F.array_distinct(word_ngrams("words", 3)))
     ).otherwise(F.lit(1))
     return d.select(
         "doc_id",
@@ -347,13 +338,9 @@ def rep_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.max("c").alias("top_word_cnt"))
     )
-    bigrams = F.transform(
-        F.arrays_zip(F.slice(words, 1, n - 1), F.slice(words, 2, n - 1)),
-        lambda s: F.concat_ws(" ", s["0"], s["1"]),
-    )
     bi_top = (
         d.filter(n >= 2)
-        .select("doc_id", F.explode(bigrams).alias("g"))
+        .select("doc_id", F.explode(word_ngrams(words, 2)).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id")
@@ -414,15 +401,11 @@ def dup_ngram_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribute zeros to the numerator) — kept here because the
     denominator needs every position, carried via the left join's nulls."""
     d = _docs(spark, sf_dir).select("doc_id", F.split(F.col("text"), " ").alias("words"))
-    words = F.col("words")
-    n = F.size(words)
-    tris = F.transform(
-        F.arrays_zip(
-            F.slice(words, 1, n - 2), F.slice(words, 2, n - 2), F.slice(words, 3, n - 2)
-        ),
-        lambda s: F.xxhash64(F.concat_ws(" ", s["0"], s["1"], s["2"])),
+    pos = (
+        d.filter(F.size("words") >= 3)
+        .select("doc_id", F.explode(word_ngrams("words", 3)).alias("g"))
+        .select("doc_id", F.xxhash64("g").alias("g"))
     )
-    pos = d.filter(n >= 3).select("doc_id", F.explode(tris).alias("g"))
     df_ = (
         pos.select("doc_id", "g").distinct()
         .groupBy("g")

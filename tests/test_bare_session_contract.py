@@ -60,3 +60,14 @@ def test_udf_queries_run_under_bare_foreign_cwd_session(tmp_path):
         assert proc.returncode == 0, proc.stderr[-3000:]
         for name in names:
             assert f"OK {name}" in proc.stdout
+
+
+def test_each_checkout_ships_its_own_zip(tmp_path):
+    """Two checkouts on one host cache two zips, so neither ships the
+    other's code to its Python workers."""
+    from op_etl_spark.session import _ship_zip_path
+
+    a = str(tmp_path / "a" / "op_etl_spark")
+    b = str(tmp_path / "b" / "op_etl_spark")
+    assert _ship_zip_path(a) != _ship_zip_path(b)
+    assert _ship_zip_path(a) == _ship_zip_path(a + "/")

@@ -1,70 +1,8 @@
-"""Round-12 pins, second batch.
-
-MinHash signatures:
-- the fused shingle-array kernel (`_minhash_sigs_np`) must reproduce the
-  retired explode + md5/conv expression + 16-way min aggregate
-  BIT-EXACTLY: on the real corpus, and on a synthetic fixture exercising
-  duplicate doc_id rows (min associativity across row splits), NULL text
-  (the [NULL] fallback array -> NULL h's, row kept), short texts (the
-  single-element fallback), unicode shingles, and heavy cross-doc shingle
-  overlap (the batch-local factorize path).
-"""
+"""Round-12 pins, second batch: the fused IVFPQ assign + residual kernel."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 SF = "/root/testdata/sf0.001"
-
-
-def _retired_minhash_sigs(arrs):
-    """The retired explode + md5 -> conv -> 16 modular columns + 16-way
-    min-aggregate chain, verbatim."""
-    from op_etl_spark.suite.dedup import MINHASH_P, N_HASHES
-
-    sh = arrs.select("doc_id", F.explode("shingles").alias("shingle"))
-    hx = F.md5(F.col("shingle").cast("binary"))
-    base = sh.select(
-        "doc_id",
-        F.conv(F.substring(hx, 1, 15), 16, 10).cast("long").alias("a"),
-        F.conv(F.substring(hx, 17, 14), 16, 10).cast("long").alias("b"),
-    )
-    aggs = [
-        F.min((F.col("a") + F.lit(k) * F.col("b")) % F.lit(MINHASH_P)).alias(f"h{k}")
-        for k in range(N_HASHES)
-    ]
-    return base.groupBy("doc_id").agg(*aggs)
-
-
-def _rows(df):
-    return {r["doc_id"]: tuple(r[f"h{k}"] for k in range(16)) for r in df.collect()}
-
-
-def test_kernel_minhash_sigs_matches_retired_formulation(spark):
-    from op_etl_spark.suite.dedup import _docs, _minhash_sigs_np, _shingle_arrays
-
-    arrs = _shingle_arrays(_docs(spark, SF))
-    got = _rows(_minhash_sigs_np(arrs))
-    want = _rows(_retired_minhash_sigs(arrs))
-    assert got == want and len(got) > 0
-
-    rows = [
-        (1, "a b c d e f"),           # normal shingles
-        (1, "b c d x y z"),           # duplicate doc_id: min over both rows
-        (2, "short"),                 # < 3 words -> single [text] shingle
-        (3, None),                    # NULL text -> [NULL] -> NULL h's
-        (4, "ü tøk ümlaut ü tøk"),    # unicode, repeated shingles
-        (5, "a b c d e f"),           # exact overlap with doc 1 (factorize)
-        (6, ""),                      # empty text -> [""] single shingle
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    arrs2 = _shingle_arrays(d)
-    got2 = _rows(_minhash_sigs_np(arrs2))
-    want2 = _rows(_retired_minhash_sigs(arrs2))
-    assert got2 == want2
-    # NULL-text doc keeps its row with NULL signature in both forms
-    assert got2[3] == tuple([None] * 16)
-    spark.catalog.clearCache()
 
 
 # --- fused IVFPQ assign + residual (ann_recall._assign_residual) ---
