@@ -29,9 +29,7 @@ def default_connectors(downloads_dir: str | None = None) -> dict:
     from op_etl_spark.sources.rest import read_rest_layer
     from op_etl_spark.sources.wfs import read_wfs
 
-    def file_conn(spark: SparkSession, src: dict):
-        # normalized specs carry file paths in raw.paths (or url for one)
-        paths = (src.get("raw") or {}).get("paths") or [src.get("url")]
+    def read_files(spark: SparkSession, src: dict, paths: list):
         return read_feature_files(
             spark,
             [
@@ -40,6 +38,10 @@ def default_connectors(downloads_dir: str | None = None) -> dict:
                 if p
             ],
         )
+
+    def file_conn(spark: SparkSession, src: dict):
+        # normalized specs carry file paths in raw.paths (or url for one)
+        return read_files(spark, src, (src.get("raw") or {}).get("paths") or [src.get("url")])
 
     from op_etl_spark.sources.fetchers import default_json_fetcher, default_text_fetcher
 
@@ -95,14 +97,7 @@ def default_connectors(downloads_dir: str | None = None) -> dict:
 
     def http_conn(spark: SparkSession, src: dict):
         # S1/S2: land the file(s) driver-side, then parse distributed
-        paths = process_http_source(src, downloads_dir or "downloads")
-        return read_feature_files(
-            spark,
-            [
-                {"path": p, "source_name": src["name"], "authority": src["authority"]}
-                for p in paths
-            ],
-        )
+        return read_files(spark, src, process_http_source(src, downloads_dir or "downloads"))
 
     def atom_conn(spark: SparkSession, src: dict):
         # S12: parse the feed driver-side, then dispatch each route to
@@ -124,13 +119,7 @@ def default_connectors(downloads_dir: str | None = None) -> dict:
                     if path.endswith(".zip")
                     else [path]
                 )
-                dfs.append(
-                    read_feature_files(
-                        spark,
-                        [{"path": p, "source_name": src["name"],
-                          "authority": src["authority"]} for p in paths],
-                    )
-                )
+                dfs.append(read_files(spark, src, paths))
             elif route.kind == "wfs":
                 dfs.append(wfs_conn(spark, routed))
             elif route.kind == "ogc":

@@ -85,26 +85,27 @@ def download_file(
     return path
 
 
-def extract_zip(path: str) -> list[str]:
-    """S3: expand an archive next to itself; returns extracted paths.
+def safe_zip_members(z: zipfile.ZipFile, path: str) -> list[zipfile.ZipInfo]:
+    """The file members of an untrusted archive, checked BEFORE anything
+    is extracted: the declared expansion size is capped (zip-bomb guard)
+    and no member may be absolute or escape the extraction root. Raises
+    ValueError otherwise. Both the driver's `extract_zip` and the
+    executor's ZIP parser extract only what this returns."""
+    infos = z.infolist()
+    if sum(i.file_size for i in infos) > MAX_DOWNLOAD_BYTES:
+        raise ValueError(f"archive declares expansion over size cap: {path}")
+    for i in infos:
+        name = i.filename
+        if name.startswith(("/", "\\")) or ".." in name.split("/"):
+            raise ValueError(f"archive member escapes extraction root: {name}")
+    return [i for i in infos if not i.filename.endswith("/")]
 
-    Same zip-bomb discipline as the executor-side parser: declared
-    expansion size capped BEFORE extraction, traversal members rejected —
-    this driver-side path touches the untrusted archive first."""
+
+def extract_zip(path: str) -> list[str]:
+    """S3: expand an archive next to itself; returns extracted paths."""
     out_root = os.path.splitext(path)[0]
-    extracted = []
     with zipfile.ZipFile(path) as z:
-        infos = [i for i in z.infolist() if not i.filename.endswith("/")]
-        if sum(i.file_size for i in infos) > MAX_DOWNLOAD_BYTES:
-            raise ValueError(f"archive declares expansion over size cap: {path}")
-        for i in infos:
-            name = i.filename
-            if name.startswith(("/", "\\")) or ".." in name.split("/"):
-                raise ValueError(f"archive member escapes extraction root: {name}")
-        for i in infos:
-            target = z.extract(i, out_root)
-            extracted.append(target)
-    return extracted
+        return [z.extract(i, out_root) for i in safe_zip_members(z, path)]
 
 
 def select_candidates(paths: list[str]) -> list[str]:

@@ -13,19 +13,14 @@ default when the service lacks EPSG:3006 support (:230).
 from __future__ import annotations
 
 import fnmatch
-import json
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from op_etl_spark.functions.crs import crs_to_epsg_py
-from op_etl_spark.geometry.wkb import envelope as _envelope
-from op_etl_spark.geometry.wkb import wkb_dumps
 
-from .geojson import _props_to_str_map
 from .pagination import MAX_OGC_PAGES, fetch_parallelism
-from .schema import FEATURE_DDL
+from .schema import fan_out, feature_row
 
 Fetcher = Callable[[str, dict], dict]
 
@@ -93,21 +88,11 @@ def _walk_collection(
         epsg = epsg or (crs_to_epsg_py(crs_param) if crs_param else None) or 4326
         for feat in doc.get("features") or []:
             geom = feat.get("geometry") or {}
-            gt, coords = geom.get("type"), geom.get("coordinates")
-            if gt is None or coords is None:
-                continue
-            env = _envelope(gt, coords)
-            yield {
-                "feature_id": fid,
-                "source_name": source_name,
-                "authority": authority,
-                "geom_type": gt,
-                "geometry": wkb_dumps(gt, coords),
-                "bbox": {"xmin": env[0], "ymin": env[1], "xmax": env[2], "ymax": env[3]},
-                "crs": int(epsg),
-                "props": _props_to_str_map(feat.get("properties")),
-            }
-            fid += 1
+            row = feature_row(fid, source_name, authority, geom.get("type"),
+                              geom.get("coordinates"), epsg, feat.get("properties"))
+            if row is not None:  # ids count the features that load
+                fid += 1
+                yield row
         nxt = next(
             (l.get("href") for l in doc.get("links") or [] if l.get("rel") == "next"),
             None,
@@ -133,49 +118,15 @@ def read_collections(
     delay_seconds: float = 0.1,  # reference ogc_api_delay default (etl/download_ogc.py:70)
 ) -> DataFrame:
     """Fan collections out across executors; walk each cursor in-task."""
-    from op_etl_spark.session import ensure_shipped, local_frame
-
-    ensure_shipped(spark)
     crs_param = (
         "http://www.opengis.net/def/crs/EPSG/0/3006" if supports_epsg_3006 else None
     )
-    if not collection_ids:
-        return local_frame(spark, [], FEATURE_DDL)
-    plan = local_frame(
-        spark, [(c,) for c in collection_ids], "collection_id string"
-    ).repartition(fetch_parallelism(len(collection_ids)))
 
-    cfg = json.dumps(
-        {
-            "base_url": base_url,
-            "source_name": source_name,
-            "authority": authority,
-            "bbox": list(bbox) if bbox else None,
-            "bbox_crs": bbox_crs,
-            "crs_param": crs_param,
-            "limit": limit,
-            "delay_seconds": delay_seconds,
-        }
-    )
+    def walk(collection_id: str):
+        return _walk_collection(
+            fetcher, base_url, collection_id, source_name, authority, bbox,
+            bbox_crs, crs_param, limit, delay_seconds,
+        )
 
-    def fetch(batches_it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = json.loads(cfg)
-        cols = [
-            "feature_id", "source_name", "authority", "geom_type",
-            "geometry", "bbox", "crs", "props",
-        ]
-        for pdf in batches_it:
-            rows = []
-            for cid in pdf["collection_id"]:
-                rows.extend(
-                    _walk_collection(
-                        fetcher, c["base_url"], cid, c["source_name"],
-                        c["authority"],
-                        tuple(c["bbox"]) if c["bbox"] else None,
-                        c["bbox_crs"], c["crs_param"], c["limit"],
-                        c["delay_seconds"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return plan.mapInPandas(fetch, FEATURE_DDL)
+    return fan_out(spark, [(c,) for c in collection_ids], "collection_id string",
+                   fetch_parallelism(len(collection_ids)), walk)

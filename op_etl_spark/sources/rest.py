@@ -13,29 +13,25 @@ envelope+intersects in the service's SR (P3, etl/download_rest.py:89-100).
 The HTTP layer is injectable (`fetcher(url, params) -> dict`): production
 uses urllib with the reference's retry/backoff policy; tests inject a
 local mock serving Esri JSON pages, including `exceededTransferLimit`
-fallback behavior (etl/download_rest.py:361-365: transfer-limit with a
-partial page aborts offset paging and re-plans as OID batches).
+truncation (etl/download_rest.py:361-365): a task whose page comes back
+truncated re-pages by resultOffset inside its own window.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from op_etl_spark.geometry.wkb import envelope as _envelope
-from op_etl_spark.geometry.wkb import wkb_dumps
-
-from .geojson import _esri_geometry, _props_to_str_map
+from .geojson import esri_rows
 from .pagination import (
     PAGE_SIZE,
     fetch_parallelism,
     plan_offset_pages,
     plan_oid_batches,
 )
-from .schema import FEATURE_DDL
+from .schema import fan_out
 
 Fetcher = Callable[[str, dict], dict]
 
@@ -93,25 +89,6 @@ def probe_oids(fetcher: Fetcher, layer_url: str, params: dict) -> tuple[str, lis
     return doc.get("objectIdFieldName", "OBJECTID"), list(doc.get("objectIds") or [])
 
 
-def _esri_rows(doc: dict, source_name: str, authority: str, start_id: int):
-    sr = (doc.get("spatialReference") or {}).get("wkid") or 3006
-    for i, feat in enumerate(doc.get("features") or []):
-        gt, coords = _esri_geometry(feat.get("geometry"))
-        if gt is None:
-            continue
-        env = _envelope(gt, coords)
-        yield {
-            "feature_id": start_id + i,
-            "source_name": source_name,
-            "authority": authority,
-            "geom_type": gt,
-            "geometry": wkb_dumps(gt, coords),
-            "bbox": {"xmin": env[0], "ymin": env[1], "xmax": env[2], "ymax": env[3]},
-            "crs": int(sr),
-            "props": _props_to_str_map(feat.get("attributes")),
-        }
-
-
 def read_rest_layer(
     spark: SparkSession,
     layer_url: str,
@@ -123,18 +100,14 @@ def read_rest_layer(
     bbox: tuple | None = None,
     out_sr: int = 3006,
     page_size: int = PAGE_SIZE,
-    use_oid_pagination: bool | None = None,
+    use_oid_pagination: bool = False,
 ) -> DataFrame:
     """One REST layer -> canonical feature DataFrame.
 
-    Planning (driver): count probe decides offset vs OID pagination —
-    OID batching when the layer advertises exceeded-transfer behavior or
-    `use_oid_pagination` is forced; otherwise offset pages. Execution:
+    Planning (driver): offset pages from a count probe, or, when
+    `use_oid_pagination` is set, OID batches from an ids probe. Execution:
     one fetch task per page/batch, coalesced to the politeness cap.
     """
-    from op_etl_spark.session import ensure_shipped, local_frame
-
-    ensure_shipped(spark)
     base = build_rest_params(where, out_fields, bbox, out_sr=out_sr)
 
     if use_oid_pagination:
@@ -166,51 +139,30 @@ def read_rest_layer(
             for p in pages
         ]
 
-    if not tasks:
-        return local_frame(spark, [], FEATURE_DDL)
+    def fetch(params_json: str, start_id: int):
+        params = json.loads(params_json)
+        # a server whose maxRecordCount is below our window size
+        # truncates the page and sets exceededTransferLimit — keep
+        # advancing resultOffset inside this task's window until
+        # the server stops truncating, or rows silently go missing
+        # (etl/download_rest.py:361-365 transfer-limit semantics)
+        want = int(params.get("resultRecordCount", PAGE_SIZE))
+        base_offset = int(params.get("resultOffset", 0))
+        got = 0
+        while True:
+            p = dict(params)
+            if "resultOffset" in params or got:
+                p["resultOffset"] = base_offset + got
+            p["resultRecordCount"] = want - got
+            doc = fetcher(f"{layer_url}/query", p)
+            yield from esri_rows(doc, source_name, authority, int(start_id) + got)
+            n_returned = len(doc.get("features") or [])
+            got += n_returned
+            if got >= want or n_returned == 0 or not doc.get("exceededTransferLimit"):
+                break
 
-    plan = local_frame(
-        spark, tasks, "params_json string, start_id long"
-    ).repartition(fetch_parallelism(len(tasks)))
-
-    def fetch(batches_it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "feature_id", "source_name", "authority", "geom_type",
-            "geometry", "bbox", "crs", "props",
-        ]
-        for pdf in batches_it:
-            rows = []
-            for params_json, start_id in zip(pdf["params_json"], pdf["start_id"]):
-                params = json.loads(params_json)
-                # a server whose maxRecordCount is below our window size
-                # truncates the page and sets exceededTransferLimit — keep
-                # advancing resultOffset inside this task's window until
-                # the server stops truncating, or rows silently go missing
-                # (etl/download_rest.py:361-365 transfer-limit semantics)
-                want = int(params.get("resultRecordCount", PAGE_SIZE))
-                base_offset = int(params.get("resultOffset", 0))
-                got = 0
-                while True:
-                    p = dict(params)
-                    if "resultOffset" in params or got:
-                        p["resultOffset"] = base_offset + got
-                    p["resultRecordCount"] = want - got
-                    doc = fetcher(f"{layer_url}/query", p)
-                    feats = list(
-                        _esri_rows(doc, source_name, authority, int(start_id) + got)
-                    )
-                    rows.extend(feats)
-                    n_returned = len(doc.get("features") or [])
-                    got += n_returned
-                    if (
-                        got >= want
-                        or n_returned == 0
-                        or not doc.get("exceededTransferLimit")
-                    ):
-                        break
-            yield pd.DataFrame(rows, columns=cols)
-
-    return plan.mapInPandas(fetch, FEATURE_DDL)
+    return fan_out(spark, tasks, "params_json string, start_id long",
+                   fetch_parallelism(len(tasks)), fetch)
 
 
 def count_sanity_check(

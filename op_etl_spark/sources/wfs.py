@@ -16,18 +16,14 @@ GML support is deliberately bounded, matching the reference's
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from op_etl_spark.functions.crs import crs_to_epsg_py
-from op_etl_spark.geometry.wkb import envelope as _envelope
-from op_etl_spark.geometry.wkb import wkb_dumps
 
-from .geojson import _props_to_str_map
 from .pagination import fetch_parallelism
-from .schema import FEATURE_DDL
+from .schema import fan_out, feature_row
 
 TextFetcher = Callable[[str, dict], str]
 
@@ -144,49 +140,11 @@ def read_wfs(
     srs_name: str = "EPSG:3006",
 ) -> DataFrame:
     """Typenames fan out across executors; each task runs one GetFeature."""
-    from op_etl_spark.session import ensure_shipped, local_frame
 
-    ensure_shipped(spark)
-    if not typenames:
-        return local_frame(spark, [], FEATURE_DDL)
-    plan = local_frame(
-        spark, [(t,) for t in typenames], "typename string"
-    ).repartition(fetch_parallelism(len(typenames)))
-    bbox_l = list(bbox) if bbox else None
+    def get_feature(typename: str):
+        body = text_fetcher(base_url, build_wfs_params(typename, bbox, srs_name))
+        for i, (gt, coords, props, epsg) in enumerate(_parse_wfs_body(body, srs_name)):
+            yield feature_row(i, source_name, authority, gt, coords, epsg, props)
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "feature_id", "source_name", "authority", "geom_type",
-            "geometry", "bbox", "crs", "props",
-        ]
-        for pdf in batches:
-            rows = []
-            for tn in pdf["typename"]:
-                body = text_fetcher(
-                    base_url,
-                    build_wfs_params(tn, tuple(bbox_l) if bbox_l else None, srs_name),
-                )
-                for i, (gt, coords, props, epsg) in enumerate(
-                    _parse_wfs_body(body, srs_name)
-                ):
-                    try:
-                        wkb = wkb_dumps(gt, coords)
-                        env = _envelope(gt, coords)  # empty coords raise here
-                    except (ValueError, KeyError, TypeError, IndexError):
-                        continue
-                    rows.append(
-                        {
-                            "feature_id": i,
-                            "source_name": source_name,
-                            "authority": authority,
-                            "geom_type": gt,
-                            "geometry": wkb,
-                            "bbox": {"xmin": env[0], "ymin": env[1],
-                                     "xmax": env[2], "ymax": env[3]},
-                            "crs": int(epsg),
-                            "props": _props_to_str_map(props),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return plan.mapInPandas(fetch, FEATURE_DDL)
+    return fan_out(spark, [(t,) for t in typenames], "typename string",
+                   fetch_parallelism(len(typenames)), get_feature)

@@ -18,14 +18,11 @@ backlog of a million files drains in controlled increments.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from op_etl_spark.sources.geojson import parse_json_content
-from op_etl_spark.sources.schema import FEATURE_DDL
+from op_etl_spark.sources.schema import map_features
 
 
 def stream_feature_files(
@@ -41,9 +38,6 @@ def stream_feature_files(
     `source_name` is derived from the file stem — matching the batch
     connector's naming (etl/stage_files.py:297-314).
     """
-    from op_etl_spark.session import ensure_shipped
-
-    ensure_shipped(spark)
     reader = (
         spark.readStream.format("text")
         .option("wholetext", "true")
@@ -55,35 +49,11 @@ def stream_feature_files(
         F.col("value"), F.col("_metadata.file_path").alias("path")
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "feature_id", "source_name", "authority", "geom_type",
-            "geometry", "bbox", "crs", "props",
-        ]
-        for pdf in batches:
-            rows = []
-            for content, path in zip(pdf["value"], pdf["path"]):
-                stem = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-                for row in parse_json_content(content, stem, authority):
-                    fid, sn, au, gt, wkb, env, crs, props = row
-                    rows.append(
-                        {
-                            "feature_id": fid,
-                            "source_name": sn,
-                            "authority": au,
-                            "geom_type": gt,
-                            "geometry": wkb,
-                            "bbox": {
-                                "xmin": env[0], "ymin": env[1],
-                                "xmax": env[2], "ymax": env[3],
-                            },
-                            "crs": crs,
-                            "props": props,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(content: str, path: str):
+        stem = path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
+        return parse_json_content(content, stem, authority)
 
-    return raw.mapInPandas(parse, FEATURE_DDL)
+    return map_features(raw, parse)
 
 
 def start_staging_stream(

@@ -66,3 +66,21 @@ def test_artifact_refuses_a_dirty_tree(repo, change):
     assert "tracked files differ from HEAD" in out.stderr
     assert "a.txt" in out.stderr
     assert not (repo / "out.json").exists()
+
+
+def test_duckdb_memory_limit_is_below_physical_memory():
+    import duckdb
+
+    sys.path.insert(0, TOOL.rsplit(os.sep, 1)[0])
+    try:
+        import check_correctness
+    finally:
+        sys.path.pop(0)
+    limit = check_correctness.duckdb_memory_limit()
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < limit < physical
+    # the setting as the sweep passes it, read back from DuckDB
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit='{limit // 2**20}MB'")
+    value, unit = con.execute("SELECT current_setting('memory_limit')").fetchone()[0].split()
+    assert float(value) * 2 ** (10 * ["KiB", "MiB", "GiB"].index(unit) + 10) < physical

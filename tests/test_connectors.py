@@ -1,8 +1,16 @@
-"""REST / OGC connectors against local mock services (FIXTURES.md F3/F4
-scenarios: offset pages, OID fallback, next-link chains, crs re-append,
-include-pattern discovery)."""
+"""Source connectors: REST / OGC / WFS against local mock services
+(FIXTURES.md F3/F4 scenarios: offset pages, OID fallback, next-link
+chains, crs re-append, include-pattern discovery), what every reader
+puts on its rows, the ZIP guard, and the one builder of the canonical
+feature row."""
 
 from __future__ import annotations
+
+import ast
+import io
+import json
+import os
+import zipfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +25,7 @@ from op_etl_spark.sources.rest import (
     discover_layers,
     read_rest_layer,
 )
+from op_etl_spark.sources.wfs import read_wfs
 
 N_FEATURES = 2500
 PAGE = 1000
@@ -187,7 +196,6 @@ def test_readers_stamp_the_given_authority(spark, tmp_path):
     from test_wfs_atom_pipeline import wfs_mock
 
     from op_etl_spark.run import default_connectors
-    from op_etl_spark.sources.wfs import read_wfs
 
     path = tmp_path / "f.geojson"
     path.write_text(
@@ -206,3 +214,262 @@ def test_readers_stamp_the_given_authority(spark, tmp_path):
     for want, df in frames.items():
         got = [tuple(r) for r in df.select("source_name", "authority").distinct().collect()]
         assert got == [want]
+
+
+# --- a feature whose geometry cannot be encoded ---
+
+EMPTY_AND_VALID_GEOJSON = {
+    "type": "FeatureCollection",
+    "features": [
+        {"type": "Feature", "geometry": {"type": "Point", "coordinates": []},
+         "properties": {"n": 0}},
+        {"type": "Feature", "geometry": {"type": "Point", "coordinates": [15.0, 60.0]},
+         "properties": {"n": 1}},
+    ],
+}
+EMPTY_AND_VALID_ESRI = {
+    "spatialReference": {"wkid": 3006},
+    "features": [
+        {"attributes": {"n": 0}, "geometry": {"rings": []}},
+        {"attributes": {"n": 1}, "geometry": {"x": 500000.0, "y": 6500000.0}},
+    ],
+}
+
+
+def empty_and_valid_rest(url: str, params: dict) -> dict:
+    return {"count": 2} if params.get("returnCountOnly") else EMPTY_AND_VALID_ESRI
+
+
+def empty_and_valid_ogc(url: str, params: dict) -> dict:
+    return EMPTY_AND_VALID_GEOJSON
+
+
+def empty_and_valid_wfs(url: str, params: dict) -> str:
+    return json.dumps(EMPTY_AND_VALID_GEOJSON)
+
+
+def _file(spark, tmp_path, doc, name):
+    from op_etl_spark.run import default_connectors
+
+    path = tmp_path / name
+    path.write_text(json.dumps(doc))
+    return default_connectors()["file"](
+        spark, {"name": "f", "authority": "F1", "raw": {"paths": [str(path)]}})
+
+
+def _stream(spark, tmp_path):
+    from op_etl_spark.streaming import ingest
+
+    downloads = tmp_path / "downloads"
+    downloads.mkdir()
+    (downloads / "s.geojson").write_text(json.dumps(EMPTY_AND_VALID_GEOJSON))
+    staging = str(tmp_path / "staging")
+    feats = ingest.stream_feature_files(spark, str(downloads))
+    ingest.start_staging_stream(
+        feats, staging, str(tmp_path / "ckpt"), available_now=True
+    ).awaitTermination(120)
+    return spark.read.parquet(staging)
+
+
+MALFORMED_READERS = {
+    "file_geojson": lambda spark, tmp: _file(spark, tmp, EMPTY_AND_VALID_GEOJSON, "f.geojson"),
+    "file_esri": lambda spark, tmp: _file(spark, tmp, EMPTY_AND_VALID_ESRI, "f.json"),
+    "rest": lambda spark, tmp: read_rest_layer(
+        spark, "http://mock/0", "r", "R1", fetcher=empty_and_valid_rest),
+    "ogc": lambda spark, tmp: read_collections(
+        spark, OGC_BASE, ["c"], "o", "O1", fetcher=empty_and_valid_ogc),
+    "wfs": lambda spark, tmp: read_wfs(
+        spark, "http://mock/wfs", ["ms:t"], "w", "W1", text_fetcher=empty_and_valid_wfs),
+    "stream": _stream,
+}
+
+
+@pytest.mark.parametrize("reader", sorted(MALFORMED_READERS))
+def test_readers_skip_a_feature_whose_geometry_cannot_be_encoded(spark, tmp_path, reader):
+    """One feature with empty coordinates must not fail its source: every
+    reader returns the valid feature next to it, and only that one."""
+    rows = MALFORMED_READERS[reader](spark, tmp_path).collect()
+    assert [r.props["n"] for r in rows] == ["1"]
+
+
+def test_empty_coordinates_skipped_not_crash():
+    from op_etl_spark.sources.geojson import parse_json_content
+    from op_etl_spark.sources.wfs import _parse_wfs_body
+
+    body = json.dumps(
+        {
+            "type": "FeatureCollection",
+            "features": [
+                {"type": "Feature",
+                 "geometry": {"type": "LineString", "coordinates": []},
+                 "properties": {}},
+                {"type": "Feature",
+                 "geometry": {"type": "Point", "coordinates": [1.0, 2.0]},
+                 "properties": {}},
+            ],
+        }
+    )
+    rows = list(_parse_wfs_body(body, "EPSG:3006"))
+    # the parser yields both; `feature_row` returns None for the empty one
+    out = [r for r in parse_json_content(body, "s", "a") if r is not None]
+    assert len(out) == 1 and out[0]["geom_type"] == "Point"
+    assert len(rows) == 2
+
+
+# --- ZIP archives: candidate fall-through and the one guard ---
+
+def _lying_infolist(declared: int):
+    """`ZipFile.infolist` whose members all declare `declared` bytes."""
+    orig = zipfile.ZipFile.infolist
+
+    def lying(self):
+        infos = orig(self)
+        for i in infos:
+            i.file_size = declared
+        return infos
+
+    return orig, lying
+
+
+def test_unreadable_first_candidate_falls_through(tmp_path):
+    from op_etl_spark.sources.geojson import _parse_one_file
+
+    buf = io.BytesIO()
+    good = {
+        "type": "FeatureCollection",
+        "features": [
+            {"type": "Feature",
+             "geometry": {"type": "Point", "coordinates": [1.0, 2.0]},
+             "properties": {}}
+        ],
+    }
+    with zipfile.ZipFile(buf, "w") as z:
+        z.writestr("_bad.shp", b"\x00\x01 not a shapefile")  # sorts first
+        z.writestr("data.geojson", json.dumps(good))
+    p = tmp_path / "pkg.zip"
+    p.write_bytes(buf.getvalue())
+    rows = list(_parse_one_file(str(p), "s", "a"))
+    assert len(rows) == 1 and rows[0]["geom_type"] == "Point"
+
+
+def test_zip_bomb_declared_size_rejected(tmp_path):
+    from op_etl_spark.sources.geojson import _parse_zip
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        z.writestr("huge.json", "{}")
+    p = tmp_path / "b.zip"
+    p.write_bytes(buf.getvalue())
+
+    orig, lying = _lying_infolist(6000 * 1024 * 1024)  # declared 6 GB
+    zipfile.ZipFile.infolist = lying
+    try:
+        assert list(_parse_zip(str(p), "s", "a")) == []
+    finally:
+        zipfile.ZipFile.infolist = orig
+
+
+def test_path_traversal_member_rejected(tmp_path):
+    from op_etl_spark.sources.geojson import _parse_zip
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        z.writestr("../escape.json", "{}")
+    p = tmp_path / "t.zip"
+    p.write_bytes(buf.getvalue())
+    assert list(_parse_zip(str(p), "s", "a")) == []
+    assert not os.path.exists(tmp_path.parent / "escape.json")
+
+
+def test_driver_extract_zip_rejects_bomb(tmp_path):
+    from op_etl_spark.sources.download import extract_zip
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        z.writestr("x.json", "{}")
+    p = tmp_path / "b.zip"
+    p.write_bytes(buf.getvalue())
+
+    orig, lying = _lying_infolist(6000 * 1024 * 1024)
+    zipfile.ZipFile.infolist = lying
+    try:
+        with pytest.raises(ValueError, match="size cap"):
+            extract_zip(str(p))
+    finally:
+        zipfile.ZipFile.infolist = orig
+
+
+# --- the typed-column REST data source ---
+
+def test_truncating_server_repages_within_batch(spark):
+    """A server with maxRecordCount below page_size truncates each OID
+    batch; the reader must resultOffset-loop until complete."""
+    spark.dataSource.register_called = True
+    from op_etl_spark.sources.rest_datasource import ArcGISRestDataSource
+
+    spark.dataSource.register(ArcGISRestDataSource)
+    df = (
+        spark.read.format("arcgis_rest")
+        .option("url", "http://mock/FeatureServer/0")
+        .option("fetcher", "mock_rest_server:fetch_truncating")
+        .option("page_size", "50")  # one partition for all 35 rows
+        .load()
+    )
+    import mock_rest_server as mock
+
+    got = sorted(r.OBJECTID for r in df.collect())
+    assert got == sorted(r["OBJECTID"] for r in mock.ROWS)
+
+
+# --- one builder of the canonical row ---
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "op_etl_spark")
+ROW_GUARDED = ("wkb_dumps", "envelope", "mapInPandas")
+
+
+def _row_calls(tree: ast.AST) -> dict:
+    """{guarded name: {top-level function names whose body calls it}}."""
+    out = {n: set() for n in ROW_GUARDED}
+    for top in tree.body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in out:
+                    out[name].add(getattr(top, "name", "<module>"))
+    return out
+
+
+def test_guard_sees_the_calls():
+    src = (
+        "def f(gt, c):\n    return wkb_dumps(gt, c), wkb.envelope(gt, c)\n"
+        "def g(df):\n    return df.mapInPandas(h, 'a int')\n"
+        "X = wkb_dumps('Point', [0, 0])\n"
+    )
+    assert _row_calls(ast.parse(src)) == {
+        "wkb_dumps": {"f", "<module>"},
+        "envelope": {"f"},
+        "mapInPandas": {"g"},
+    }
+
+
+def test_connectors_build_rows_only_through_schema():
+    """Under sources/ and streaming/, WKB encoding and the envelope happen
+    only in `schema.feature_row`, and the executor fan-out only in
+    `schema.map_features`. `rest_datasource.py` is outside: its
+    `arcgis_rest` format emits typed attribute columns, not feature rows."""
+    found = {}
+    for pkg in ("sources", "streaming"):
+        for name in sorted(os.listdir(os.path.join(PKG, pkg))):
+            if not name.endswith(".py") or name == "rest_datasource.py":
+                continue
+            with open(os.path.join(PKG, pkg, name)) as f:
+                calls = _row_calls(ast.parse(f.read(), name))
+            for guarded, funcs in calls.items():
+                for func in funcs:
+                    found.setdefault(guarded, set()).add(f"{pkg}/{name}:{func}")
+    assert found == {
+        "wkb_dumps": {"sources/schema.py:feature_row"},
+        "envelope": {"sources/schema.py:feature_row"},
+        "mapInPandas": {"sources/schema.py:map_features"},
+    }

@@ -54,6 +54,22 @@ def table_hash(rows, colnames):
     return h.hexdigest()[:16]
 
 
+def duckdb_memory_limit() -> int:
+    """Bytes the DuckDB oracle may hold before it spills: a quarter of the
+    memory this process can have (physical memory, or the cgroup limit
+    when that is lower). The rest stays for the Spark driver JVM and its
+    Python workers, which run in the same sweep."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in ("/sys/fs/cgroup/memory.max",  # cgroup v2; "max" when unset
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):  # v1
+        try:
+            with open(path) as f:
+                total = min(total, int(f.read()))
+        except (OSError, ValueError):
+            pass
+    return total // 4
+
+
 def clean_head(repo: str) -> str:
     """HEAD's sha; exits non-zero when tracked files differ from HEAD, so
     an artifact's sha always names the code that produced it."""
@@ -97,10 +113,10 @@ def main():
     spark = get_spark("correctness-check")
     con = duckdb.connect()
     # Bound the oracle engine's memory and let blocking operators spill:
-    # at the sf1 rehearsal scale an unbounded DuckDB hash join can climb
-    # past 100 GB and draw the OOM killer (observed on the corpus-wide
-    # containment oracle); with a limit + temp dir it spills instead.
-    con.execute("SET memory_limit='48GB'")
+    # an unbounded (or oversized) DuckDB hash join draws the OOM killer on
+    # the corpus-wide containment oracle; with a limit + temp dir it
+    # spills instead.
+    con.execute(f"SET memory_limit='{duckdb_memory_limit() // 2**20}MB'")
     os.makedirs("/tmp/duckdb_spill", exist_ok=True)
     con.execute("SET temp_directory='/tmp/duckdb_spill'")
     for t in TABLES:
