@@ -14,6 +14,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# the checkout root: the directory that holds the op_etl_spark package
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENGINE_DAEMON = "op_etl_spark.pyworker"
+
 
 def get_spark(
     app_name: str = "op_etl_spark",
@@ -48,6 +52,11 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # Python workers fork from the engine's daemon (op_etl_spark/pyworker.py),
+        # which must import from any cwd. Spark puts this path in front of
+        # the PYTHONPATH the driver was started with.
+        .config("spark.python.daemon.module", ENGINE_DAEMON)
+        .config("spark.executorEnv.PYTHONPATH", CHECKOUT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -73,12 +82,18 @@ def ensure_shipped(spark: SparkSession) -> None:
 
     Library code that runs inside pandas UDFs / mapInPandas is
     deserialized BY REFERENCE on workers, so the package must be on the
-    worker's sys.path. When the engine created the session, PYTHONPATH
-    already covers it; for externally-created sessions (e.g. a bare
-    driver session) we zip the package once and addPyFile it — Spark
+    worker's sys.path. When get_spark created the session, its workers
+    fork from the engine daemon, which has already imported the package
+    from this checkout: nothing is shipped. For any other session (e.g. a
+    bare driver session) we zip the package once and addPyFile it — Spark
     distributes the zip and prepends it to every worker's path.
     """
     if getattr(spark, "_op_etl_shipped", False):
+        return
+    conf = spark.sparkContext.getConf()
+    if (conf.get("spark.python.daemon.module") == ENGINE_DAEMON
+            and CHECKOUT in conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)):
+        spark._op_etl_shipped = True
         return
     import shutil
 

@@ -204,8 +204,11 @@ class ArcGISRestReader(DataSourceReader):
                 row = [attrs.get(name) for name in self.attr_fields]
                 if want_geom:
                     gt, coords = _esri_geometry(feat.get("geometry"))
-                    row.append(gt)
-                    row.append(wkb_dumps(gt, coords) if gt is not None else None)
+                    try:
+                        wkb = wkb_dumps(gt, coords) if gt is not None else None
+                    except (ValueError, KeyError, TypeError, IndexError):
+                        continue  # unencodable (e.g. an Esri empty point): skip it
+                    row += [gt, wkb]
                 yield tuple(row)
             if not doc.get("exceededTransferLimit") or not feats:
                 return

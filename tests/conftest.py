@@ -5,13 +5,15 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+TESTS = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(TESTS)
+sys.path.insert(0, ROOT)
+sys.path.insert(0, TESTS)
 
 # Python workers must be able to import the test modules (mock fetchers
 # shipped to executors by reference).
-os.environ["PYTHONPATH"] = (
-    "/root/repo:/root/repo/tests:" + os.environ.get("PYTHONPATH", "")
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, TESTS, os.environ.get("PYTHONPATH")) if p
 )
 
 from op_etl_spark.session import get_spark  # noqa: E402

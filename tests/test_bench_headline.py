@@ -26,9 +26,11 @@ def test_headline_names_resolve_and_are_unique():
 
 
 def test_probe_family_names_resolve():
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    sys.path.insert(0, tools)
     import scale_probe
 
     from op_etl_spark import suite

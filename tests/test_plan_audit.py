@@ -6,9 +6,10 @@ can't silently regress (the full 115-query sweep runs via
 `python tools/plan_audit.py` / the slow CI gate).
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from plan_audit import audit  # noqa: E402
 

@@ -129,3 +129,31 @@ class TestTranslationUnit:
         f = IsNotNull(("geometry",))
         assert list(r.pushFilters([f])) == [f]
         assert r.pushed == []
+
+
+def _empty_point_fetch(url, params):
+    """One OID batch: a valid point next to an Esri empty point."""
+    return {"features": [
+        {"attributes": {"OBJECTID": 1, "name": "a"}, "geometry": {"x": 1.0, "y": 2.0}},
+        {"attributes": {"OBJECTID": 2, "name": "b"}, "geometry": {"x": None, "y": None}},
+    ]}
+
+
+def test_empty_point_skipped_not_batch_failure():
+    """The unencodable feature is skipped, as schema.feature_row skips it;
+    the rest of its OID batch still loads."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from op_etl_spark.geometry.wkb import wkb_loads
+    from op_etl_spark.sources.rest_datasource import GEOM_COLS, _OidBatchPartition
+
+    schema = StructType(
+        [StructField("OBJECTID", LongType()), StructField("name", StringType())] + GEOM_COLS
+    )
+    reader = ArcGISRestReader(
+        {"url": "http://mock/0", "fetcher": "test_rest_datasource:_empty_point_fetch"},
+        schema,
+    )
+    rows = list(reader.read(_OidBatchPartition("OBJECTID IN (1, 2)", 0)))
+    assert [r[:3] for r in rows] == [(1, "a", "Point")]
+    assert wkb_loads(rows[0][3]) == ("Point", [1.0, 2.0])

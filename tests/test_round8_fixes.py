@@ -43,9 +43,11 @@ def test_tiled_points_noop_below_copy_shift(spark):
 
 
 def test_skew_chain_docs_form_edges_under_df_cap():
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    sys.path.insert(0, tools)
     from scale_probe import CHAIN_W
 
     from op_etl_spark.suite.clustering import MIN_COMMON_TRIGRAMS

@@ -14,9 +14,10 @@ Then:  SPARK_GRAFT_SF_DIR=<out_dir> python bench.py > BENCH_local_sf1.json
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.scale_probe import materialize_scaled  # noqa: E402
 

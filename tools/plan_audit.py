@@ -34,10 +34,11 @@ from __future__ import annotations
 import contextlib
 import io
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Queries where the flagged operator is the intended design, with why.
 ALLOW = {
